@@ -32,11 +32,11 @@ import org.apache.spark.storage.StorageLevel
   *     fixture at the same dir is served fresh by `evict` + re-run.
   *
   * Iterative operators ([[operators.Graph.kCoreNumbers]] and kin) have
-  * the same lifetime problem in RDD form: their result frame reads a
-  * localCheckpointed RDD that must stay pinned until the caller is done
-  * with the result — [[registerPinned]] tracks those so
+  * the same lifetime problem for lineage cuts: their result frame is an
+  * [[operators.Graph.cut]] whose blocks must stay pinned until the
+  * caller is done with the result — [[registerPinned]] tracks those so
   * [[releasePinned]] (or session end) can free them instead of leaking
-  * one pinned RDD per invocation forever.
+  * one pinned block set per invocation forever.
   */
 object Staging {
 
@@ -164,7 +164,7 @@ object Staging {
         // making staged-prefix regressions unattributable without a
         // bisect — the per-key timings surface in Bench's "staging"
         // map instead. A failed materialization must drop its own
-        // persist marking (the Graph.localCut discipline) — evict can
+        // persist marking (the Graph.cut discipline) — evict can
         // free nothing for a holder whose `built` never landed.
         try d.count()
         catch { case t: Throwable => d.unpersist(blocking = false); throw t }
@@ -219,20 +219,24 @@ object Staging {
     ThreadLocal.withInitial[java.util.ArrayDeque[java.util.ArrayList[RDD[_]]]](
       () => new java.util.ArrayDeque[java.util.ArrayList[RDD[_]]]())
 
-  /** Track a localCheckpointed RDD backing a returned result frame so
-    * its pinned storage can be freed once the caller is done
-    * ([[releasePinned]]) instead of living for the process. Inside an
-    * open [[pinScope]] on the calling thread, the pin is scope-local
-    * and released when the scope closes. */
-  def registerPinned(s: SparkSession, rdd: RDD[_]): Unit = {
+  /** Track a frame [[operators.Graph.cut]] returned — one that backs a
+    * result handed to the caller — so its pinned blocks can be freed
+    * once the caller is done ([[releasePinned]]) instead of living for
+    * the process. Inside an open [[pinScope]] on the calling thread,
+    * the pin is scope-local and released when the scope closes.
+    * Returns `cut`; throws if it is not a cut (see
+    * [[operators.Graph.release]]). */
+  def registerPinned(s: SparkSession, cut: DataFrame): DataFrame = {
+    val rdd = operators.Graph.cutRdd(cut)
     val scope = scopePins.get.peek()
-    if (scope != null) { scope.add(rdd); () }
+    if (scope != null) scope.add(rdd)
     else {
       installHook(s)
       pinned.computeIfAbsent(s,
         _ => java.util.Collections.synchronizedList(
           new java.util.ArrayList[RDD[_]]())).add(rdd)
     }
+    cut
   }
 
   /** Run `body` with a pin SCOPE on this thread: every

@@ -20,10 +20,13 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** DataFrame over an already-materialized RDD[InternalRow] — for
-    * lineage cuts that stay in the Tungsten representation
-    * (Graph.cut): `df.rdd` + `createDataFrame` would decode every
-    * InternalRow to Row and re-encode it on read, once per CC round. */
+  /** DataFrame over an already-materialized RDD[InternalRow]: the
+    * `LogicalRDD` leaf (default statistics) that
+    * [[graft.operators.Graph.cut]] returns and
+    * [[graft.operators.Graph.release]] reads the RDD back from. It
+    * keeps the cut in the Tungsten representation: `df.rdd` +
+    * `createDataFrame` would decode every InternalRow to Row and
+    * re-encode it on read, once per iterative round. */
   def internalCreateDataFrame(spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[
         org.apache.spark.sql.catalyst.InternalRow],

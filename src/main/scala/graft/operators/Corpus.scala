@@ -103,14 +103,10 @@ object Corpus {
     // cut the df-pruned index once: it feeds BOTH sides of the
     // self-join, and uncut each side re-ran the df aggregate + join
     // over the fingerprint index (guide §7.2 duplicated subtrees)
-    val rare = {
-      val (cut, rdd) = graft.operators.Graph.localCut(
-        fps.select(col(idCol), col("fp"))
-          .join(fps.groupBy(col("fp")).agg(count(lit(1)).as("_df"))
-            .where(col("_df") <= maxDocFreq).select(col("fp")), "fp"))
-      graft.Staging.registerPinned(fps.sparkSession, rdd)
-      cut
-    }
+    val rare = graft.Staging.registerPinned(fps.sparkSession, Graph.cut(
+      fps.select(col(idCol), col("fp"))
+        .join(fps.groupBy(col("fp")).agg(count(lit(1)).as("_df"))
+          .where(col("_df") <= maxDocFreq).select(col("fp")), "fp")))
     rare.toDF("fp", "d1").join(rare.toDF("fp", "d2"), Seq("fp"))
       .where(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_shared"))
@@ -874,23 +870,14 @@ object Corpus {
     * re-tokenizing the corpus ([[graft.streaming.StreamingBpe]]). */
   def bpeTrainFromVocab(wordCounts: DataFrame, nMerges: Int): DataFrame = {
     val session = wordCounts.sparkSession
-    var vocab = wordCounts.select(col("w"), col("wc"))
-      .withColumn("syms", split(col("w"), ""))
-    var pinned: Option[org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow]] = None
-    def cut(df: DataFrame): DataFrame = {
-      val (cutDf, rdd) = Graph.localCut(df)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      cutDf
-    }
+    var vocab = Graph.cut(wordCounts.select(col("w"), col("wc"))
+      .withColumn("syms", split(col("w"), "")))
     val merges = scala.collection.mutable.ArrayBuffer[
       (Int, String, String, String, Long)]()
-    // the finally releases the CURRENT pin whether training completes
-    // or a round's job throws — a failed cut must not leak its blocks
-    // for the session's life (Graph.localCut's own warning)
+    // the finally releases the CURRENT cut whether training completes
+    // or a round's job throws — a failed round must not leak its
+    // predecessor's blocks for the session's life
     try {
-      vocab = cut(vocab)
       var i = 1
       var exhausted = false
       // merging only ever SHRINKS the pair population: the first
@@ -907,12 +894,14 @@ object Corpus {
           val (l, r, c) =
             (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
           merges += ((i, l, r, l + r, c))
-          vocab = cut(vocab.withColumn("syms",
+          val next = Graph.cut(vocab.withColumn("syms",
             mergeFold(col("syms"), lit(l), lit(r))))
+          Graph.release(vocab)
+          vocab = next
         }
         i += 1
       }
-    } finally pinned.foreach(_.unpersist(blocking = false))
+    } finally Graph.release(vocab)
     import session.implicits._
     merges.toSeq.toDF("rank", "left", "right", "merged", "pair_count")
   }
@@ -1582,11 +1571,7 @@ object Corpus {
       if (stats.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode])
         stats
-      else {
-        val (cutDf, statsRdd) = graft.operators.Graph.localCut(stats)
-        graft.Staging.registerPinned(docs.sparkSession, statsRdd)
-        cutDf
-      }
+      else graft.Staging.registerPinned(docs.sparkSession, Graph.cut(stats))
     val totals = statsCut.agg(
       sum(col("_cr")).as("_nr"), sum(col("_ct")).as("_nt"))
     def lnNano(cnt: Column, n: Column): Column =

@@ -19,16 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Eval {
 
-  /** Eager lineage cut with pinned-block registration for the small
-    * model-statistic intermediates this module materializes (the
-    * [[graft.operators.TextDedup]] discipline): blocks release via
-    * [[graft.Staging.releasePinned]] / session end. */
-  private def cutRegistered(df: DataFrame): DataFrame = {
-    val (cut, rdd) = Graph.localCut(df)
-    graft.Staging.registerPinned(df.sparkSession, rdd)
-    cut
-  }
-
   /** Recall@k of an approximate retrieval against exact truth: the
     * fraction of the true top-k that the approximate top-k found,
     * per query. Both inputs are (qid, nid, rank) relations (the
@@ -227,8 +217,9 @@ object Eval {
     // (r22 plan audit: five corpus scans in one gate). The vocabulary
     // off wc is EXACTLY the token-stream vocabulary: every occurring
     // word lands in wc under its document's class.
-    val wc = cutRegistered(tokens.groupBy(col("_true").as("_cl"), col("_w"))
-      .agg(count(lit(1)).as("_cnt")))
+    val wc = graft.Staging.registerPinned(docs.sparkSession,
+      Graph.cut(tokens.groupBy(col("_true").as("_cl"), col("_w"))
+        .agg(count(lit(1)).as("_cnt"))))
     val tot = wc.groupBy(col("_cl")).agg(sum(col("_cnt")).as("_tot"))
     val vocab = wc.select(col("_w")).distinct()
     val vs = vocab.agg(count(lit(1)).as("_v"))
@@ -578,17 +569,17 @@ object Eval {
     // every greedy round references it twice, so without the cut the
     // final plan would re-expand the corpus-scanning retrieval ~2k
     // times (measured 40 s → ~1 s at sf0.1). The pinned blocks are
-    // (queries × m) rows — released when the session drops the RDD.
+    // (queries × m) rows, registered with the session.
+    val spark = corpus.sparkSession
     val c = corpus.toDF("cnid", "ce")
     val qv = queries.toDF("qqid", "qe")
-    val (short, shortRdd) = Graph.localCut(
+    val short = graft.Staging.registerPinned(spark, Graph.cut(
       Similarity.bruteForceTopK(corpus, queries, m)
         .join(c, col("nid") === col("cnid"))
         .join(broadcast(qv), col("qid") === col("qqid"))
         .select(col("qid"), col("nid"),
           Similarity.cosine(col("qe"), col("ce")).as("sim"),
-          col("ce").as("e")))
-    graft.Staging.registerPinned(corpus.sparkSession, shortRdd)
+          col("ce").as("e"))))
 
     val lam = lit(lambda)
     val byScore = Window.partitionBy(col("qid"))
@@ -597,17 +588,8 @@ object Eval {
     // each round references the selected set three times (anti-join,
     // penalty join, union) — cut per round or the final plan grows
     // ~3^k copies of round 1 (the labelPropagation round discipline,
-    // ≤ queries×k pinned rows, superseded pins released)
-    var pinned: Option[org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow]] = None
-    def cut(df: DataFrame): DataFrame = {
-      val (cutDf, rdd) = Graph.localCut(df)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      cutDf
-    }
-
-    var selected = cut(short
+    // ≤ queries×k pinned rows, superseded cuts released)
+    var selected = Graph.cut(short
       .withColumn("mmr", lam * col("sim"))
       .withColumn("rn", row_number().over(byScore))
       .filter(col("rn") === 1)
@@ -629,14 +611,16 @@ object Eval {
         .filter(col("rn") === 1)
         .select(col("qid"), col("nid"), col("e"), lit(t).as("pick"),
           col("mmr"))
-      selected = cut(selected.unionAll(next))
+      val prev = selected
+      selected = Graph.cut(selected.unionAll(next))
+      Graph.release(prev)
     }
     // the FINAL cut's blocks back the returned frame — register them
     // with the session registry so Staging.releasePinned/session-end
-    // frees them instead of leaking one pinned RDD per invocation
-    // (the kCoreNumbers discipline)
-    pinned.foreach(graft.Staging.registerPinned(corpus.sparkSession, _))
-    selected.select(col("qid"), col("nid"), col("pick"),
-      (round(col("mmr"), 6) + lit(0.0)).as("mmr"))
+    // frees them instead of leaking one pinned block set per
+    // invocation (the kCoreNumbers discipline)
+    graft.Staging.registerPinned(spark, selected)
+      .select(col("qid"), col("nid"), col("pick"),
+        (round(col("mmr"), 6) + lit(0.0)).as("mmr"))
   }
 }

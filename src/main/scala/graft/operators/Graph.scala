@@ -1,11 +1,14 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Small-graph algorithms the dedup pipelines need. */
+/** Small-graph algorithms the dedup pipelines need, and the one
+  * lineage-cut primitive ([[Graph.cut]] / [[Graph.release]]) that every
+  * iterative operator and shared-subtree materialization goes through. */
 object Graph {
 
   /** Connected components by iterative min-label propagation — the
@@ -22,87 +25,37 @@ object Graph {
     * early on a fixpoint (an aggregate-only check, no driver-side
     * data).
     *
-    * Every round materializes through a lineage cut — iterative
-    * DataFrame algorithms MUST truncate the plan each round or the
-    * nested join plan grows exponentially with iterations (a 10-hop
-    * path aborts analysis without it; GraphSpec pins that case). The
-    * cut is managed at the RDD level rather than via
-    * `Dataset.localCheckpoint`, because the Dataset API hides the
-    * checkpointed RDD and its cached blocks can then never be
-    * released: with explicit handles, every superseded round is
-    * unpersisted as soon as its successor materializes and the edge
-    * list is released on exit, so block usage stays O(1) in rounds
-    * instead of O(rounds) — on a long bench run (or a 100 TB job with
-    * many rounds) leaked MEMORY_AND_DISK blocks otherwise squeeze the
-    * executor storage pool for the rest of the application.
+    * Every round materializes through a [[cut]] — iterative DataFrame
+    * algorithms MUST truncate the plan each round or the nested join
+    * plan grows exponentially with iterations (a 10-hop path aborts
+    * analysis without it; GraphSpec pins that case). Each superseded
+    * round is [[release]]d as soon as its successor materializes and
+    * the edge list is released on exit, so block usage stays O(1) in
+    * rounds instead of O(rounds).
     *
-    * Cache residue: with `checkpointDir` set (the cluster form), the
-    * labels are durable files and ZERO cached blocks remain after the
-    * call — blocks are dropped the moment each round's checkpoint is
-    * written. Without it (the local form), exactly ONE cached RDD
-    * remains: the returned result itself, sized to the label table
-    * (two columns, one row per node that appears in an edge) — it must
-    * stay pinned because its lineage was truncated, and it lives until
-    * the session ends. GraphSpec pins both residue counts.
+    * Cache residue: exactly ONE cut remains after the call — the
+    * final round, which backs the returned label table (two columns,
+    * one row per node that appears in an edge). It is registered with
+    * [[graft.Staging.registerPinned]], so it lives until the session
+    * releases its pins. GraphSpec pins the residue count.
     *
     * @param edges undirected pair list (src, dst)
-    * @param checkpointDir when set, rounds go through reliable
-    *   `RDD.checkpoint()` into this directory (survives executor loss;
-    *   zero cache residue) instead of local checkpointing — pass a
-    *   durable (HDFS/object-store) path on a real cluster
     * @return (id, comp) — every node that appears in any edge, labeled
     *   with the minimum id reachable from it
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val reliable = checkpointDir.isDefined
-    // the checkpoint dir is SparkContext-global state: save and restore
-    // it so the call leaves no session-wide side effect (two concurrent
-    // callers still race on the shared setting while both run — that is
-    // inherent to the SparkContext API)
-    val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-
-    // Materialize `df` with its lineage cut, returning the rebuilt
-    // DataFrame plus the RDD handle that pins its blocks. Reliable
-    // path: persist → checkpoint → count (the persist makes the
-    // checkpoint job a cache read, not a recompute) → unpersist, so
-    // the durable files are the only copy. Local path: localCheckpoint
-    // + count; the handle lets the caller of cut() release the blocks
-    // once the round is superseded. The cut stays in the Tungsten
-    // representation (queryExecution.toRdd + internalCreateDataFrame):
-    // `df.rdd` would decode InternalRow → Row and re-encode on every
-    // read, once per round over the whole label table. The per-row
-    // copy() is required — codegen operators reuse row buffers, and
-    // caching uncopied rows would alias them.
-    def cut(df: DataFrame): (DataFrame,
-        RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-      val rdd = df.queryExecution.toRdd.map(_.copy())
-      if (reliable) {
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-        rdd.count()
-        rdd.unpersist(blocking = false)
-      } else {
-        rdd.localCheckpoint()
-        rdd.count()
-      }
-      (org.apache.spark.sql.GraftSqlBridge
-        .internalCreateDataFrame(spark, rdd, df.schema), rdd)
-    }
-
+      maxIter: Int = 20): DataFrame = {
     // materialize the edge list ONCE: every round references it twice,
     // and without the cut each round would recompute the whole upstream
     // pair-generation pipeline (for near-dup input that is the entire
     // LSH + verify chain — measured 5x the total query cost)
-    val (und, undRdd) = cut(
+    val und = cut(
       edges.select(col(src).as("a"), col(dst).as("b"))
         .union(edges.select(col(dst).as("a"), col(src).as("b")))
         .distinct())
+    // (id, comp); from round 1 on, the round's cut (id, comp, _chg)
     var labels = und.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
-    var pinned: Option[RDD[_]] = None // the round backing `labels`
     var iter = 0
     var converged = false
     try {
@@ -114,33 +67,20 @@ object Graph {
         // detection is a cheap scan of the materialized round result —
         // not another shuffle join of next⋈labels per round
         val newComp = least(col("comp"), coalesce(col("_nbMin"), col("comp")))
-        val (next, nextRdd) = cut(labels.join(nbrMin, Seq("id"), "left")
+        val next = cut(labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"), newComp.as("comp"),
             (newComp =!= col("comp")).as("_chg")))
         converged = next.filter(col("_chg")).head(1).isEmpty
         // `next` is materialized and lineage-cut — the previous round's
         // blocks can no longer be read by anything; release them now
-        pinned.foreach(_.unpersist(blocking = false))
-        pinned = Some(nextRdd)
-        labels = next.drop("_chg")
+        if (iter > 0) release(labels)
+        labels = next
         iter += 1
       }
     } finally {
-      undRdd.unpersist(blocking = false)
+      release(und)
       // on the non-convergence throw path the last round is garbage too
-      if (!converged) pinned.foreach(_.unpersist(blocking = false))
-      // restore the session-global checkpoint dir. Clearing an unset
-      // previous value means passing null, which only the LOCAL-mode
-      // path tolerates (on a cluster SparkContext's non-local warning
-      // check dereferences the string before Option-wrapping it) — on
-      // a cluster with no previous dir the setting stays, documented
-      // last-caller-wins residue.
-      if (reliable) prevCheckpointDir match {
-        case Some(d) => spark.sparkContext.setCheckpointDir(d)
-        case None if spark.sparkContext.isLocal =>
-          spark.sparkContext.setCheckpointDir(null)
-        case None => ()
-      }
+      if (!converged && iter > 0) release(labels)
     }
     // Unconverged labels are WRONG labels (a component split across
     // several canonical ids corrupts downstream deletion sets silently),
@@ -151,36 +91,60 @@ object Graph {
       s"connectedComponents did not converge in $maxIter rounds; " +
         "raise maxIter for graphs with diameter beyond the label-" +
         "propagation budget")
-    // the final round's cut backs the returned label table — REGISTER
-    // it (round-17: the streaming maintainer's failure spec caught this
-    // as the one pin neither the caller nor the session could release;
-    // every CC invocation previously left its label blocks pinned until
-    // session end with no handle)
-    pinned.foreach(graft.Staging.registerPinned(spark, _))
-    labels
+    // the final round's cut backs the returned label table — register
+    // it, or every invocation would leave its label blocks pinned until
+    // session end with no handle
+    graft.Staging.registerPinned(edges.sparkSession, labels).drop("_chg")
   }
 
-  /** Standalone local-mode lineage cut for OTHER iterative DataFrame
-    * loops (k-means sweeps, fixpoint enrichments): materialize `df`
-    * via localCheckpoint with its plan truncated to a leaf, returning
-    * the rebuilt DataFrame plus the RDD handle pinning its blocks —
-    * the caller releases the handle when the next round supersedes it,
-    * exactly the [[connectedComponents]] round discipline. Stays in
-    * the Tungsten representation (toRdd + internalCreateDataFrame, no
-    * Row decode/encode); the per-row copy() is required because
-    * codegen operators reuse row buffers. */
-  def localCut(df: DataFrame): (DataFrame,
-      RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
+  /** Eager local lineage cut: materialize `df` into locally
+    * checkpointed blocks and return a frame whose plan is a single
+    * leaf over them (a `LogicalRDD` with default statistics — the
+    * origin plan's estimates and constraints do not carry over, so a
+    * table re-cut every round plans in constant time). Iterative
+    * DataFrame loops cut once per round to keep plan depth constant;
+    * a shared subtree is cut once so its consumers stop re-expanding
+    * it. The blocks stay pinned until [[release]] (or, for a cut
+    * handed to [[graft.Staging.registerPinned]], until the session
+    * releases its pins). The cut stays in the Tungsten representation
+    * (toRdd + internalCreateDataFrame): `df.rdd` would decode every
+    * InternalRow to Row and re-encode it on read. The per-row copy()
+    * is required — codegen operators reuse row buffers, and caching
+    * uncopied rows would alias them. `Dataset.localCheckpoint` is not
+    * used because it hides the checkpointed RDD behind the frame's
+    * plan and keeps the origin plan's constraints. */
+  def cut(df: DataFrame): DataFrame =
+    materialize(df, df.queryExecution.toRdd.map(_.copy()))
+
+  /** Unpersist the blocks behind a frame [[cut]] returned. The frame
+    * (and anything derived from it) becomes unreadable — call once its
+    * consumers have materialized. Throws on a frame that is not a cut
+    * (a projection of a cut included): releasing nothing would leak
+    * silently. Releasing the same cut twice is harmless. */
+  def release(df: DataFrame): Unit = cutRdd(df).unpersist(blocking = false)
+
+  /** The checkpointed rows behind a frame [[cut]] returned. */
+  private[graft] def cutRdd(df: DataFrame): RDD[InternalRow] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a Graph.cut frame (plan root: ${p.nodeName})")
+    }
+
+  /** Checkpoint `rows` (the per-row copy of `df`'s Tungsten rows) and
+    * rebuild a frame of `df`'s schema over them. The count stays in
+    * this file: the benchmark's tracer attributes cut jobs by the
+    * stage name "count at Graph.scala". */
+  private def materialize(df: DataFrame, rows: RDD[InternalRow]): DataFrame = {
+    rows.localCheckpoint()
     // a failed materialization must drop its own checkpoint marking
     // (localCheckpoint registers the RDD persisted BEFORE the count),
     // or every failed cut leaks an entry in the context's persistent
     // registry for the life of the session
-    try rdd.count()
-    catch { case t: Throwable => rdd.unpersist(blocking = false); throw t }
-    (org.apache.spark.sql.GraftSqlBridge
-      .internalCreateDataFrame(df.sparkSession, rdd, df.schema), rdd)
+    try rows.count()
+    catch { case t: Throwable => rows.unpersist(blocking = false); throw t }
+    org.apache.spark.sql.GraftSqlBridge
+      .internalCreateDataFrame(df.sparkSession, rows, df.schema)
   }
 
   /** PageRank (Brin & Page '98, the simplified no-dangling-
@@ -201,16 +165,15 @@ object Graph {
     * the graph's node count, not data motion). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
-    val (e, eRdd) = localCut(
+    val e = cut(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val (nodes, nodesRdd) = localCut(
+    val nodes = cut(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var r = nodes.withColumn("r", lit(1.0 / n))
-    var pinned: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { i =>
       val contrib = e
         .join(r.toDF("src", "r"), "src")
         .join(deg, "src")
@@ -220,13 +183,12 @@ object Graph {
         .select(col("id"),
           round(lit((1.0 - damping) / n) +
             lit(damping) * coalesce(col("s"), lit(0.0)), 9).as("r"))
-      val (cut, rdd) = localCut(next)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      r = cut
+      val cutNext = cut(next)
+      if (i > 1) release(r)
+      r = cutNext
     }
-    eRdd.unpersist(blocking = false)
-    nodesRdd.unpersist(blocking = false)
+    release(e)
+    release(nodes)
     r
   }
 
@@ -371,9 +333,9 @@ object Graph {
       dstCol: String, seeds: Seq[Long], iters: Int,
       damping: Double = 0.85): DataFrame = {
     require(seeds.nonEmpty, "PPR needs at least one seed")
-    val (e, eRdd) = localCut(
+    val e = cut(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val (nodes, nodesRdd) = localCut(
+    val nodes = cut(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -381,8 +343,7 @@ object Graph {
     val seedMass = lit((1.0 - damping) / seeds.size)
     var r = nodes.withColumn("r",
       when(isSeed, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
-    var pinned: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { i =>
       val contrib = e
         .join(r.toDF("src", "r"), "src")
         .join(deg, "src")
@@ -392,13 +353,12 @@ object Graph {
         .select(col("id"),
           round(when(isSeed, seedMass).otherwise(lit(0.0)) +
             lit(damping) * coalesce(col("s"), lit(0.0)), 9).as("r"))
-      val (cut, rdd) = localCut(next)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      r = cut
+      val cutNext = cut(next)
+      if (i > 1) release(r)
+      r = cutNext
     }
-    eRdd.unpersist(blocking = false)
-    nodesRdd.unpersist(blocking = false)
+    release(e)
+    release(nodes)
     r
   }
 
@@ -421,18 +381,16 @@ object Graph {
     * recomputed on the final live set. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
-    val (und, undRdd) = localCut(undirect(edges, srcCol, dstCol))
+    val und = cut(undirect(edges, srcCol, dstCol))
     var alive = degrees(und).where(col("deg") >= k).select(col("id"))
-    var pinned: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    (2 to rounds).foreach { _ =>
+    (2 to rounds).foreach { i =>
       val live = und
         .join(alive.toDF("u"), Seq("u"), "left_semi")
         .join(alive.toDF("v"), Seq("v"), "left_semi")
       val next = degrees(live).where(col("deg") >= k).select(col("id"))
-      val (cut, rdd) = localCut(next)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      alive = cut
+      val cutNext = cut(next)
+      if (i > 2) release(alive)
+      alive = cutNext
     }
     val finalEdges = und
       .join(alive.toDF("u"), Seq("u"), "left_semi")
@@ -539,15 +497,15 @@ object Graph {
       localEdgeRows: Long): (DataFrame, Int, Boolean) = {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
-    val (e, eRdd) = localCut(undirect(edges, srcCol, dstCol))
-    val (bi, biRdd) = localCut(
+    val e = cut(undirect(edges, srcCol, dstCol))
+    val bi = cut(
       e.select(col("u").as("a"), col("v").as("b"))
         .union(e.select(col("v").as("a"), col("u").as("b"))))
     // small-graph fast path: the count is already materialized by the
     // cut, so the bound costs one cached-RDD count
     if (bi.schema("a").dataType ==
           org.apache.spark.sql.types.LongType &&
-        biRdd.count() <= localEdgeRows) {
+        cutRdd(bi).count() <= localEdgeRows) {
       val sq = spark
       import sq.implicits._
       val adj = scala.collection.mutable.HashMap
@@ -556,12 +514,12 @@ object Graph {
       // primitive longs per row) — a Row-decoding bi.collect() would
       // box every edge and cost ~10× the "~32 MB of long pairs" the
       // bound budgets
-      biRdd.collect().foreach { r =>
+      cutRdd(bi).collect().foreach { r =>
         adj.getOrElseUpdate(r.getLong(0),
           scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
       }
-      eRdd.unpersist(blocking = false)
-      biRdd.unpersist(blocking = false)
+      release(e)
+      release(bi)
       var c: Map[Long, Long] = adj.iterator
         .map { case (k, v) => k -> v.length.toLong }.toMap
       var sweeps = 0
@@ -587,23 +545,17 @@ object Graph {
       }
       return (c.toSeq.sortBy(_._1).toDF("id", "core"), sweeps, !changedAny)
     }
-    var pinned: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    // lineage cut with the sweep's changed-count tallied by accumulator
+    // a [[cut]] with the sweep's changed-count tallied by accumulator
     // DURING the materialization job — the convergence check costs zero
     // extra jobs (schema is (id, c, chg); chg at ordinal 2)
     def cutCounting(df: DataFrame): (DataFrame, Long) = {
       val acc = spark.sparkContext.longAccumulator
-      val rdd = df.queryExecution.toRdd.map { r =>
+      val counted = materialize(df, df.queryExecution.toRdd.map { r =>
         val c = r.copy()
         if (c.getBoolean(2)) acc.add(1L)
         c
-      }
-      rdd.localCheckpoint()
-      rdd.count()
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      (org.apache.spark.sql.GraftSqlBridge
-        .internalCreateDataFrame(spark, rdd, df.schema), acc.value)
+      })
+      (counted, acc.value)
     }
     // value table (id, c, chg): chg marks values changed by the LAST
     // completed sweep; everything starts "changed" (freshly initialized
@@ -652,13 +604,14 @@ object Graph {
         .select(col("id"),
           coalesce(col("_cn"), col("c")).as("c"),
           (col("_cn").isNotNull && col("_cn") =!= col("c")).as("chg")))
+      release(cur)
       cur = step._1
       nChanged = step._2
       converged = nChanged == 0L
     }
-    eRdd.unpersist(blocking = false)
-    biRdd.unpersist(blocking = false)
-    pinned.foreach(graft.Staging.registerPinned(spark, _))
+    release(e)
+    release(bi)
+    graft.Staging.registerPinned(spark, cur)
     (cur.select(col("id"), col("c").as("core")), sweeps, converged)
   }
 
@@ -684,13 +637,12 @@ object Graph {
     * of the data — and the oracle replays each sweep verbatim. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       sweeps: Int): DataFrame = {
-    val (e, eRdd) = localCut(undirect(edges, srcCol, dstCol))
+    val e = cut(undirect(edges, srcCol, dstCol))
     val bi = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
     var lab = bi.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
-    var pinned: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    (1 to sweeps).foreach { _ =>
+    (1 to sweeps).foreach { i =>
       val counts = bi
         .join(lab.toDF("b", "nl"), "b")
         .groupBy(col("a"), col("nl")).agg(count(lit(1)).as("c"))
@@ -698,12 +650,11 @@ object Graph {
         .agg(min_by(col("nl"),
           struct((lit(0L) - col("c")).as("n"), col("nl"))).as("label"))
         .select(col("a").as("id"), col("label"))
-      val (cut, rdd) = localCut(next)
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(rdd)
-      lab = cut
+      val cutNext = cut(next)
+      if (i > 1) release(lab)
+      lab = cutNext
     }
-    eRdd.unpersist(blocking = false)
+    release(e)
     lab
   }
 

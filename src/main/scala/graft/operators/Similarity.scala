@@ -522,7 +522,7 @@ object Similarity {
     * rows per map partition. Empty cells keep their previous centroid
     * (standard Lloyd practice; keeps k stable).
     *
-    * Every sweep materializes through a lineage cut (Graph.localCut —
+    * Every sweep materializes through a lineage cut (Graph.cut —
     * the connectedComponents round discipline): without it each sweep
     * nests join+groupBy+transform on top of the previous plan and the
     * tree grows without bound in the iteration count (exactly the
@@ -542,8 +542,7 @@ object Similarity {
   def kmeansFrom(corpus: DataFrame, init: DataFrame, iters: Int): DataFrame = {
     var cents = init.toDF("cid", "c")
       .select(col("cid"), col("c").cast("array<double>").as("c"))
-    var pinned: Option[org.apache.spark.rdd.RDD[_]] = None
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { i =>
       val assigned = ivfAssign(corpus, cents)  // (vid, v, cell)
       val means = assigned
         .select(col("cell"), posexplode(col("v")))
@@ -554,18 +553,17 @@ object Similarity {
         .select(col("cell").as("cid"),
           transform(col("pm"), x => x.getField("m")).as("c"))
       // empty cells: keep the previous centroid so k never shrinks
-      val (next, nextRdd) = graft.operators.Graph.localCut(
+      val next = Graph.cut(
         cents.toDF("cid", "prev")
           .join(means, Seq("cid"), "left")
           .select(col("cid"), coalesce(col("c"), col("prev")).as("c")))
-      pinned.foreach(_.unpersist(blocking = false))
-      pinned = Some(nextRdd)
+      if (i > 1) Graph.release(cents)
       cents = next
     }
     // the surviving sweep's cut backs the returned centroid table —
     // register it so the session can release it (TextDedup/Graph
     // discipline) instead of leaving it pinned for the process
-    pinned.foreach(graft.Staging.registerPinned(corpus.sparkSession, _))
+    if (iters > 0) graft.Staging.registerPinned(corpus.sparkSession, cents)
     cents
   }
 

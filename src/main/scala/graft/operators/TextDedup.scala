@@ -17,20 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextDedup {
 
-  /** Eager lineage cut with pinned-block REGISTRATION for the small
-    * intermediates this module materializes (candidate pair lists,
-    * coverage sets): [[Graph.localCut]] for the cut, with the pinned
-    * RDD registered via [[graft.Staging.registerPinned]] so a
-    * long-lived session can release the blocks on demand
-    * ([[graft.Staging.releasePinned]] / session end) instead of
-    * leaving them to driver GC — the same lifecycle hygiene the
-    * iterative Graph/Eval operators follow. */
-  private def cutRegistered(df: DataFrame): DataFrame = {
-    val (cut, rdd) = Graph.localCut(df)
-    graft.Staging.registerPinned(df.sparkSession, rdd)
-    cut
-  }
-
   /** 60-bit integer hash shared with the DuckDB oracle:
     * parse the first 15 hex chars of md5. Codegen'd built-ins only.
     * Used where the oracle must replay the exact hash (SimHash); the
@@ -220,8 +206,9 @@ object TextDedup {
 
   def jaccardSelfJoinFromShingles(sh: DataFrame, idCol: String,
       threshold: Double, ranked: Option[DataFrame] = None): DataFrame = {
-    val cands = cutRegistered(jaccardCandidatesFromRanked(
-      ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold))
+    val cands = graft.Staging.registerPinned(sh.sparkSession,
+      Graph.cut(jaccardCandidatesFromRanked(
+        ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold)))
     val candDocs = cands.select(col("d1").as(idCol))
       .union(cands.select(col("d2").as(idCol))).distinct()
     val shCand = sh.join(candDocs, Seq(idCol), "left_semi")
@@ -241,14 +228,15 @@ object TextDedup {
     // aggregate by shingle, the rank window by doc) so no layout lets
     // them share an Exchange — unpersisted, each re-derives the
     // widest intermediate of the whole pipeline from the scan. The
-    // eager localCheckpoint on the (small) candidate pair list both
+    // eager cut on the (small) candidate pair list both
     // materializes the only reader of the cache and cuts its lineage,
     // so the shingle blocks are released immediately — no O(corpus)
     // cache residue outlives this call (the Graph.scala discipline).
     val sh = shingleHashes(withWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands =
-      try cutRegistered(jaccardCandidates(sh, idCol, threshold))
+      try graft.Staging.registerPinned(sh.sparkSession,
+        Graph.cut(jaccardCandidates(sh, idCol, threshold)))
       finally sh.unpersist(false)
     // re-shingle only candidate docs for the exact verify (same
     // semi-join-first discipline as minhashNearDups)
@@ -312,8 +300,9 @@ object TextDedup {
     * distinct shingle table (see [[jaccardSelfJoinFromShingles]]). */
   def containmentSelfJoinFromShingles(sh: DataFrame, idCol: String,
       threshold: Double, ranked: Option[DataFrame] = None): DataFrame = {
-    val cands = cutRegistered(containmentCandidatesFromRanked(
-      ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold))
+    val cands = graft.Staging.registerPinned(sh.sparkSession,
+      Graph.cut(containmentCandidatesFromRanked(
+        ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold)))
     val candDocs = cands.select(col("d1").as(idCol))
       .union(cands.select(col("d2").as(idCol))).distinct()
     val shCand = sh.join(candDocs, Seq(idCol), "left_semi")
@@ -346,7 +335,8 @@ object TextDedup {
     val sh = shingleHashes(withWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands =
-      try cutRegistered(containmentCandidates(sh, idCol, threshold))
+      try graft.Staging.registerPinned(sh.sparkSession,
+        Graph.cut(containmentCandidates(sh, idCol, threshold)))
       finally sh.unpersist(false)
     val candDocs = cands.select(col("d1").as(idCol))
       .union(cands.select(col("d2").as(idCol))).distinct()
@@ -458,7 +448,7 @@ object TextDedup {
     // (the keeper-election aggregate keyed by hash, the covered join
     // keyed by hash then re-grouped by doc) would otherwise each
     // re-derive the widest intermediate of the pipeline from the scan.
-    // The eager localCheckpoint on the (small) per-doc coverage sets
+    // The eager cut on the (small) per-doc coverage sets
     // materializes both cache readers and cuts lineage, so the window
     // blocks are released before the final corpus pass — the same
     // single-derivation/zero-residue discipline as jaccardSelfJoin.
@@ -469,11 +459,12 @@ object TextDedup {
       val dups = wins.groupBy(col("_h"))
         .agg(countDistinct(col(idCol)).as("_nd"), min(col(idCol)).as("_keeper"))
         .where(col("_nd") >= 2)
-      cutRegistered(wins.join(dups, "_h")
-        .where(col(idCol) =!= col("_keeper"))
-        .select(col(idCol),
-          explode(sequence(col("_pos"), col("_pos") + (k - 1))).as("_ix"))
-        .groupBy(col(idCol)).agg(collect_set(col("_ix")).as("_cov")))
+      graft.Staging.registerPinned(wins.sparkSession, Graph.cut(
+        wins.join(dups, "_h")
+          .where(col(idCol) =!= col("_keeper"))
+          .select(col(idCol),
+            explode(sequence(col("_pos"), col("_pos") + (k - 1))).as("_ix"))
+          .groupBy(col(idCol)).agg(collect_set(col("_ix")).as("_cov"))))
     } finally wins.unpersist(false)
     withW.join(covered, Seq(idCol), "left")
       .select(others :+
@@ -556,11 +547,12 @@ object TextDedup {
 
   private def nearDupsFromSigs(withWords: DataFrame, sigs: DataFrame,
       idCol: String, shingleSize: Int, threshold: Double): DataFrame = {
-    // eager localCheckpoint on the (small) candidate pair list: its
+    // eager cut on the (small) candidate pair list: its
     // THREE consumers below (the two candDocs projections and the
     // verify semi-join) would each re-run the full band self-join —
     // the jaccardSelfJoin discipline (duplicate-sized residue only)
-    val cands = cutRegistered(lshCandidates(sigs, idCol))
+    val cands = graft.Staging.registerPinned(sigs.sparkSession,
+      Graph.cut(lshCandidates(sigs, idCol)))
     def shingleHashes(d: DataFrame): DataFrame = d
       .select(col(idCol),
         explode(graft.functions.NativeText.shingleHashes(
@@ -653,7 +645,8 @@ object TextDedup {
       .select(col("d1"), col("d2"))
     // same candidate-list cut as the batch path: three consumers,
     // band joins run once
-    val cands = cutRegistered(cross.union(dd).distinct())
+    val cands = graft.Staging.registerPinned(baseDocs.sparkSession,
+      Graph.cut(cross.union(dd).distinct()))
     val candDocs = cands.select(col("d1").as(idCol))
       .union(cands.select(col("d2").as(idCol))).distinct()
     val allWords = baseDocs
@@ -713,11 +706,11 @@ object TextDedup {
     // cut the banded relation once: it feeds BOTH sides of the bucket
     // self-join, and uncut each side re-ran the simhash kernel scan +
     // band explode (guide §7.2 duplicated subtrees)
-    val bands = cutRegistered(
+    val bands = graft.Staging.registerPinned(docs.sparkSession, Graph.cut(
       sh.select(col(idCol), col("simhash"), posexplode(
           array((0 until SimBands).map(b =>
             shiftright(col("simhash"), b * SimBandBits).bitwiseAND(lit(mask))): _*)))
-        .toDF(idCol, "simhash", "band", "bucket"))
+        .toDF(idCol, "simhash", "band", "bucket")))
     val b1 = bands.toDF("d1", "h1", "band", "bucket")
     val b2 = bands.toDF("d2", "h2", "band", "bucket")
     b1.join(b2, Seq("band", "bucket"))

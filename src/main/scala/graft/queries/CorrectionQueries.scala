@@ -1,8 +1,9 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.etl.Corrections
 import graft.etl.Corrections.Rule
+import graft.operators.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object CorrectionQueries {
 
-  /** Materialize-and-cut the corrected result, then sort the CUT (the
-    * r21 verdict's q_corrections fix): a source-side sort sits below
+  /** The corrected customers in id order: the result is cut, then the
+    * CUT is sorted (the r21 verdict's q_corrections fix, shared by
+    * q_corrections_geo). A source-side sort sits below
     * the broadcast joins, where Catalyst's EliminateSorts removes it —
     * sorts below joins are order-irrelevant TO THE OPTIMIZER, so the
     * id-ordered output contract was left riding on incidental file
@@ -27,14 +29,9 @@ object CorrectionQueries {
     * pipeline in the range exchange's sampling pass; cutting first
     * means the sampling hits materialized rows, so the pipeline runs
     * once and exactly one Sort enforces the contract. */
-  private def cutThenSort(df: DataFrame, key: String): DataFrame = {
-    val (cut, rdd) = graft.operators.Graph.localCut(df)
-    graft.Staging.registerPinned(df.sparkSession, rdd)
-    cut.orderBy(col(key))
-  }
-
   def qCorrections(s: SparkSession, dir: String): DataFrame =
-    cutThenSort(correctedCustomers(s, dir), "id")
+    Staging.registerPinned(s, Graph.cut(correctedCustomers(s, dir)))
+      .orderBy(col("id"))
 
   /** The corrections pipeline WITHOUT the ordered-output enforcement —
     * [[qDqStats]] aggregates it (order-free), so it must not pay the
@@ -91,7 +88,7 @@ object CorrectionQueries {
   // ---------------------------------------------------------------------
 
   def qCorrectionsGeo(s: SparkSession, dir: String): DataFrame = {
-    // cut-then-sort — see [[cutThenSort]]: the r21 sort-at-source form
+    // cut-then-sort — see [[qCorrections]]: the r21 sort-at-source form
     // was eliminated by Catalyst (sort below the rule-lookup joins),
     // leaving the id-ordered contract unenforced
     val o = Tables.orders(s, dir)
@@ -119,14 +116,14 @@ object CorrectionQueries {
       "dwc:stateProvince" -> "stateprovince", "dwc:country" -> "country",
       "dwc:continent" -> "continent",
       "idigbio:isoCountryCode" -> "countrycode", "dwc:kingdom" -> "kingdom")
-    cutThenSort(
+    Staging.registerPinned(s, Graph.cut(
       Corrections.foldFlags(
           Corrections.apply(records, graft.etl.Locality.rules, fieldCol),
           "flags")
         .select(col("id"), col("stateprovince"), col("country"),
           col("continent"), col("countrycode"),
-          array_join(col("flags"), ",").as("flags")),
-      "id")
+          array_join(col("flags"), ",").as("flags"))))
+      .orderBy(col("id"))
   }
 
   val qCorrectionsGeoSql: String =

@@ -1,8 +1,9 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.dsl.{Compile, Query}
 import graft.export.{Download, Exports}
+import graft.operators.Graph
 import graft.store.RecordStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -296,31 +297,24 @@ object DownloadQueries {
         Seq("uuid"), "left_semi")
     else recsRq
 
-  /** Materialize-and-cut a download-sized intermediate consumed by
-    * several manifest members (the TextDedup candidate-pair
-    * discipline): without the cut each member's aggregate re-derives
-    * the whole core/extension composition — q_download's plan carried
-    * four copies of the core semi-join and two of the inner-hits
-    * extension (r21 plan audit; guide §2.4, remove repeated work the
-    * optimizer cannot share). The pinned blocks are released by
-    * [[graft.Staging.releasePinned]] / session end. */
-  private def cutRegistered(df: DataFrame): DataFrame = {
-    val (cut, rdd) = graft.operators.Graph.localCut(df)
-    graft.Staging.registerPinned(df.sparkSession, rdd)
-    cut
-  }
-
   private def recordArtifacts(s: SparkSession, dir: String,
       mediaQuery: Option[Query] = Some(Query.parse(mediaQueryJson)))
       : (DataFrame, DataFrame, DataFrame) = {
     val (cq, recsRq, mediaMq) = composedSides(s, dir, mediaQuery)
     val edges = sibEdges(s, dir)
-    // cut only the COMPOSED core (rq ∧ has_child semi-join): the
+    // Download-sized intermediates consumed by several manifest members
+    // are cut and registered with the session: without the cut each
+    // member's aggregate re-derives the whole core/extension
+    // composition — q_download's plan carried four copies of the core
+    // semi-join and two of the inner-hits extension (r21 plan audit;
+    // guide §2.4, remove repeated work the optimizer cannot share).
+    // Cut only the COMPOSED core (rq ∧ has_child semi-join): the
     // rq-only variant's core is a plain filter over the staged records
     // view, where an eager materialization costs more than the
     // recomputation it saves (measured r21: +13% on q_download_rq_only)
     val core0 = composedCore(cq, recsRq, mediaMq, edges)
-    val core = if (cq.rqHasChild) cutRegistered(core0) else core0
+    val core =
+      if (cq.rqHasChild) Staging.registerPinned(s, Graph.cut(core0)) else core0
     // extension: media matching mq AND has_parent{records: rq}, with
     // the inner-hits carry (locality rides along into q_inner_hits's
     // row-level gate; here the membership itself is load-bearing),
@@ -332,11 +326,11 @@ object DownloadQueries {
         .select(col("uuid").as("r1")), "r1")
       .groupBy(col("r2").as("media_uuid"))
       .agg(min(col("r1")).as("coreid"))
-    val ext = cutRegistered(RecordStore.innerHits(
+    val ext = Staging.registerPinned(s, Graph.cut(RecordStore.innerHits(
         mediaMq, "media_uuid", recsRq, "uuid", edges, "r2", "r1",
         carry = Seq("locality" -> "_carry_locality"),
         hitKeyName = "parent_uuid")
-      .join(coreids, Seq("media_uuid")))
+      .join(coreids, Seq("media_uuid"))))
     // raw core member source: each core record's LATEST stored body
     val latestProps = Tables.events(s, dir)
       .groupBy(concat(lit("u"), col("user_id")).as("uuid"))
@@ -778,10 +772,10 @@ object DownloadQueries {
     val mediaMq = mediaView(s, dir).where(Compile.query(Query(cq.mq)))
     val recsRq = recordsViewWithImage(s, dir)
       .where(!col("deleted") && Compile.query(Query(cq.rq)))
-    val occExt = cutRegistered(recsRq.join(
+    val occExt = Staging.registerPinned(s, Graph.cut(recsRq.join(
       edges.join(mediaMq.select(col("media_uuid").as("r2")), "r2")
         .select(col("r1").as("uuid")),
-      Seq("uuid"), "left_semi"))
+      Seq("uuid"), "left_semi")))
     // the record's indexed media array's first element: min sibling
     val mediaIds = edges
       .groupBy(col("r1").as("uuid"))
@@ -879,13 +873,14 @@ object DownloadQueries {
   def qDownloadUnique(s: SparkSession, dir: String): DataFrame = {
     val (cq, recsRq, mediaMq) = composedSides(s, dir)
     val edges = sibEdges(s, dir)
-    val core = cutRegistered(composedCore(cq, recsRq, mediaMq, edges))
+    val core = Staging.registerPinned(s,
+      Graph.cut(composedCore(cq, recsRq, mediaMq, edges)))
     val uv = Exports.uniquevals(core, "records", "locality",
       Exports.identifyLocality)
-    val ext = cutRegistered(RecordStore.innerHits(
+    val ext = Staging.registerPinned(s, Graph.cut(RecordStore.innerHits(
       mediaMq, "media_uuid", recsRq, "uuid", edges, "r2", "r1",
       carry = Seq("locality" -> "parent_locality"),
-      hitKeyName = "parent_uuid"))
+      hitKeyName = "parent_uuid")))
     val members = Seq(
       member(s, "locality.csv", uv,
         hashCols(col("value"), col("itemCount"))),

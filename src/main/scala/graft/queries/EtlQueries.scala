@@ -187,10 +187,9 @@ object EtlQueries {
     // bench read 4.35 s ≈ 2× q_enrich — exactly double evaluation;
     // qEnrich's sort-at-the-source trick doesn't survive a join) —
     // cut the lineage once, sort the materialized cut
-    val (cut, rdd) = graft.operators.Graph.localCut(
-      indexRows.unionByName(deleteRows))
-    graft.Staging.registerPinned(s, rdd)
-    cut.orderBy(col("uuid"))
+    graft.Staging.registerPinned(s,
+      graft.operators.Graph.cut(indexRows.unionByName(deleteRows)))
+      .orderBy(col("uuid"))
   }
 
   val qIndexRunSql: String =

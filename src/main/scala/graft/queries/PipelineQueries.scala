@@ -148,11 +148,13 @@ object PipelineQueries {
     // the verified pair list is duplicate-sized and fans out to THREE
     // consumers (baseMatched, the delta-delta filter, and the CC's own
     // lineage cut) — without this cut each re-ran the whole
-    // probe+verify subtree, tripling the query (measured r15)
-    val pairs = TextDedup.incrementalNearDupsFromSigs(qbase, baseSigs,
+    // probe+verify subtree, tripling the query (measured r15). The cut
+    // is registered so the session can release it; every invocation
+    // otherwise pinned one pair list for the life of the session
+    val pairs = graft.Staging.registerPinned(s, Graph.cut(
+      TextDedup.incrementalNearDupsFromSigs(qbase, baseSigs,
         qdelta, deltaSigs, "doc_id", "text", shingleSize = 3,
-        threshold = 0.5)
-      .localCheckpoint()
+        threshold = 0.5)))
     val mixed = pairs.where((col("d1") % 5 === 0) =!= (col("d2") % 5 === 0))
     val baseMatched = mixed
       .select(when(col("d1") % 5 === 0, col("d1")).otherwise(col("d2"))

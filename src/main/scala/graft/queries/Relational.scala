@@ -1941,11 +1941,7 @@ object Relational {
     // form is value-identical (ntile output is also partitioning-
     // independent, ProfileSpec), with one users-sized materialization
     // and three users-sized join legs instead of the blowup.
-    val b = {
-      val (c, rdd) = graft.operators.Graph.localCut(base)
-      graft.Staging.registerPinned(s, rdd)
-      c
-    }
+    val b = graft.Staging.registerPinned(s, graft.operators.Graph.cut(base))
     def nt(valueCol: String, bucketOf: Column => Column, out: String) =
       graft.operators.Profile.globalNtile(b, valueCol, "user_id", 5,
         bucketOf, out).select(col("user_id"), col(out))

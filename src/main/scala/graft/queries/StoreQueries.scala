@@ -166,13 +166,9 @@ object StoreQueries {
     // env feeds all THREE variant legs — uncut, each leg re-expanded
     // the identifiers aggregation (over the map-only events projection)
     // and the two-level siblings aggregation (guide §7.2 duplicated
-    // subtrees; the DownloadQueries.cutRegistered discipline). The cut
+    // subtrees; the DownloadQueries discipline). The cut
     // table is slice-sized (the %10 uuid sample plus csv strings).
-    val env = {
-      val (cut, rdd) = graft.operators.Graph.localCut(env0)
-      graft.Staging.registerPinned(s, rdd)
-      cut
-    }
+    val env = graft.Staging.registerPinned(s, graft.operators.Graph.cut(env0))
     val vers = st.uuidsData.withColumnRenamed("uuids_id", "uuid")
       .join(st.data.withColumnRenamed("etag", "_e"),
         col("data_etag") === col("_e"), "left")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Graph
 import org.apache.spark.sql.DataFrame
 
 /** The shared commit-point protocol of the foreachBatch admission-log
@@ -17,10 +18,7 @@ import org.apache.spark.sql.DataFrame
   */
 private[streaming] abstract class AdmissionLogMaintainer {
 
-  import org.apache.spark.rdd.RDD
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  private var log: Vector[(Long, DataFrame, RDD[InternalRow])] = Vector.empty
+  private var log: Vector[(Long, DataFrame)] = Vector.empty
   private var lastBatchId: Long = Long.MinValue
 
   /** True iff `batchId` is an at-least-once replay of a batch already
@@ -40,14 +38,21 @@ private[streaming] abstract class AdmissionLogMaintainer {
   protected final def commit(batchId: Long)(build: => DataFrame)(
       swap: => Unit): Unit = synchronized {
     if (batchId <= lastBatchId) return
-    val (cutDf, rdd) = graft.operators.Graph.localCut(build)
+    val cutDf = Graph.cut(build)
     try swap
     catch {
-      case t: Throwable => rdd.unpersist(blocking = false); throw t
+      case t: Throwable => Graph.release(cutDf); throw t
     }
-    log :+= ((batchId, cutDf, rdd))
+    log :+= ((batchId, cutDf))
     lastBatchId = batchId
   }
+
+  /** Release a state frame superseded inside `swap`. Every commit swaps
+    * in a cut, so the state is a cut once any batch has committed;
+    * before that it is the maintainer's driver-local empty leaf, which
+    * pins nothing. */
+  protected final def releaseState(old: DataFrame): Unit =
+    if (lastBatchId != Long.MinValue) Graph.release(old)
 
   /** The committed, not-yet-released batch frames, oldest first. */
   protected final def logFrames: Vector[DataFrame] =
@@ -58,7 +63,7 @@ private[streaming] abstract class AdmissionLogMaintainer {
     * is untouched. */
   protected final def releaseLog(upToBatchId: Long): Unit = synchronized {
     val (drop, keep) = log.partition(_._1 <= upToBatchId)
-    drop.foreach(_._3.unpersist(blocking = false))
+    drop.foreach(e => Graph.release(e._2))
     log = keep
   }
 

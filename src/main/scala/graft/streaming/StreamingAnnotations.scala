@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Graph
 import graft.store.RecordStore
 
 /** The STREAMING twin of the annotations upsert (q_annotations):
@@ -61,9 +60,6 @@ class StreamingAnnotations(spark: SparkSession)
     * TIMESTAMP_NTZ and nanos-long across fixture generations, and a
     * union against a pre-declared empty frame would pin one of them). */
   private var store: Option[DataFrame] = None
-  /** The cut RDD backing the CURRENT store frame (none before the
-    * first commit). */
-  private var statePin: Option[RDD[InternalRow]] = None
 
   /** The foreachBatch sink: `stream.writeStream.foreachBatch(
     * maintainer.processBatch _)`. Batch rows carry the submission-log
@@ -75,7 +71,7 @@ class StreamingAnnotations(spark: SparkSession)
     if (committed(batchId)) return
     withPersisted(batch) { b =>
       val agg = RecordStore.annotationsUpsert(b)
-      val (newStore, nRdd) = graft.operators.Graph.localCut(
+      val newStore = Graph.cut(
         store.map(st => RecordStore.annotationsMerge(st, agg))
           .getOrElse(agg))
       try {
@@ -84,13 +80,12 @@ class StreamingAnnotations(spark: SparkSession)
         } {
           // plain assignments first (must not throw), then release
           // the superseded state blocks
-          val old = statePin
+          val old = store
           store = Some(newStore)
-          statePin = Some(nRdd)
-          old.foreach(_.unpersist(blocking = false))
+          old.foreach(Graph.release)
         }
       } catch {
-        case t: Throwable => nRdd.unpersist(blocking = false); throw t
+        case t: Throwable => Graph.release(newStore); throw t
       }
     }
   }

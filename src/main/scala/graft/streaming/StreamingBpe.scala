@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.Corpus
+import graft.operators.{Corpus, Graph}
 
 /** The STREAMING twin of the BPE trainer (q_bpe_train): a
   * `foreachBatch` tokenizer maintainer. The word-frequency vocab
@@ -56,9 +54,6 @@ class StreamingBpe(spark: SparkSession, textCol: String)
   private var vocab: DataFrame = emptyFrame(StructType(Seq(
     StructField("w", StringType),
     StructField("wc", LongType))))
-  /** The cut RDD backing the CURRENT vocab frame (none before the
-    * first commit — the empty is a driver-local leaf). */
-  private var statePin: Option[RDD[InternalRow]] = None
 
   /** The foreachBatch sink: `stream.writeStream.foreachBatch(
     * maintainer.processBatch _)`. */
@@ -68,21 +63,19 @@ class StreamingBpe(spark: SparkSession, textCol: String)
     if (committed(batchId)) return
     withPersisted(batch) { b =>
       val counts = Corpus.bpeWordCounts(b, textCol)
-      val (newVocab, nRdd) = graft.operators.Graph.localCut(
-        Corpus.bpeMergeVocab(vocab, counts))
+      val newVocab = Graph.cut(Corpus.bpeMergeVocab(vocab, counts))
       try {
         commit(batchId) {
           counts.withColumn("batch_id", lit(batchId))
         } {
           // plain assignments first (must not throw), then release
           // the superseded state blocks
-          val old = statePin
+          val old = vocab
           vocab = newVocab
-          statePin = Some(nRdd)
-          old.foreach(_.unpersist(blocking = false))
+          releaseState(old)
         }
       } catch {
-        case t: Throwable => nRdd.unpersist(blocking = false); throw t
+        case t: Throwable => Graph.release(newVocab); throw t
       }
     }
   }

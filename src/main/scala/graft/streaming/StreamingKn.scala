@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.Corpus
+import graft.operators.{Corpus, Graph}
 
 /** The STREAMING twin of the incremental Kneser-Ney gate (q_kn_incr):
   * a `foreachBatch` language-model maintainer with score-at-admission
@@ -58,9 +56,6 @@ class StreamingKn(spark: SparkSession, idCol: String, textCol: String,
     StructField("w1", org.apache.spark.sql.types.StringType),
     StructField("w2", org.apache.spark.sql.types.StringType),
     StructField("cb", LongType))))
-  /** The cut RDD backing the CURRENT count frame (none before the
-    * first commit — the empty is a driver-local leaf). */
-  private var statePin: Option[RDD[InternalRow]] = None
 
   private def tokenized(b: DataFrame): DataFrame =
     b.select(col(idCol), split(col(textCol), " ").as("_w"))
@@ -79,7 +74,7 @@ class StreamingKn(spark: SparkSession, idCol: String, textCol: String,
       val toks = tokenized(b)
       // the merged table feeds the scoring join's four derived
       // consumers AND becomes the next state — cut once
-      val (newCounts, nRdd) = graft.operators.Graph.localCut(
+      val newCounts = Graph.cut(
         Corpus.knMergeCounts(counts, Corpus.knCounts(toks, idCol, "_w")))
       try {
         commit(batchId) {
@@ -88,13 +83,12 @@ class StreamingKn(spark: SparkSession, idCol: String, textCol: String,
         } {
           // plain assignments first (must not throw), then release
           // the superseded state blocks
-          val old = statePin
+          val old = counts
           counts = newCounts
-          statePin = Some(nRdd)
-          old.foreach(_.unpersist(blocking = false))
+          releaseState(old)
         }
       } catch {
-        case t: Throwable => nRdd.unpersist(blocking = false); throw t
+        case t: Throwable => Graph.release(newCounts); throw t
       }
     }
   }

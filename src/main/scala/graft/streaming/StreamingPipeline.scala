@@ -49,7 +49,7 @@ import graft.operators.{Corpus, Graph, TextDedup}
   * touched only for verify candidates; the benchmark join is
   * contamination-sized. The in-memory store here stands in for the
   * persisted corpus/signature TABLES production appends to (Delta/
-  * Iceberg); [[Graph.localCut]] per batch keeps plan depth constant
+  * Iceberg); a [[Graph.cut]] per batch keeps plan depth constant
   * across batches exactly as a real table boundary would, with
   * superseded cuts unpersisted. Retention of the store is the
   * platform's policy (a signature table is append-only state, not
@@ -59,18 +59,14 @@ import graft.operators.{Corpus, Graph, TextDedup}
 class StreamingPipeline(bench: DataFrame,
     baseDocs: DataFrame, baseSigs: DataFrame) {
 
-  import org.apache.spark.rdd.RDD
-  import org.apache.spark.sql.catalyst.InternalRow
-
   private val docCols =
     Seq("doc_id", "text", "source", "n_chars", "n_tokens", "lang_pred")
 
   private var storeDocs: DataFrame = baseDocs.select(docCols.map(col): _*)
   private var storeSigs: DataFrame = baseSigs.select(col("doc_id"), col("sig"))
+  /** Defined from the first processed batch on — from then on the
+    * three store frames are all cuts this maintainer pins. */
   private var admittedAcc: Option[DataFrame] = None
-  private var pinnedDocs: Option[RDD[InternalRow]] = None
-  private var pinnedSigs: Option[RDD[InternalRow]] = None
-  private var pinnedAdm: Option[RDD[InternalRow]] = None
   private var lastBatchId: Long = Long.MinValue
 
   /** The foreachBatch sink: `stream.writeStream.foreachBatch(
@@ -83,49 +79,35 @@ class StreamingPipeline(bench: DataFrame,
     * store-match kill would fire). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
     if (batchId <= lastBatchId) return
-    // every lineage cut this batch materializes, in order — a cut that
-    // THROWS mid-batch must not orphan the blocks of the cuts before
-    // it (each failed/replayed batch would otherwise leak one or two
-    // pinned block sets for the life of the stream), so the whole
-    // pre-commit section unwinds through the catch below, which
-    // unpersists everything staged so far and rethrows: the maintainer
-    // state is untouched AND no transient block survives the failure
-    val staged = scala.collection.mutable.ListBuffer.empty[RDD[InternalRow]]
-    def cut(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-      val r = Graph.localCut(df); staged += r._2; r
-    }
-    // pin SCOPE around the whole batch: the iterative operators the
-    // batch drives (connectedComponents' label cut, the incremental
-    // near-dup candidate cut) register their transient result pins,
-    // which are consumed into this batch's own cuts by the commit
-    // point — without the scope each batch would park one or two dead
-    // block sets in the session registry for the life of the stream
-    try graft.Staging.pinScope { processBatchStaged(batch, batchId, cut) }
-    catch {
-      case t: Throwable =>
-        staged.foreach(_.unpersist(blocking = false))
-        throw t
-    }
+    // pin SCOPE around the whole batch: the batch's transient cuts
+    // (survivors + pair list) and the iterative operators' result pins
+    // (connectedComponents' label cut, the incremental near-dup
+    // candidate cut) are consumed into this batch's store cuts by the
+    // commit point, and the scope releases them when the batch ends,
+    // success or failure — without it each batch (failed or replayed
+    // ones included) would park dead block sets in the session
+    // registry for the life of the stream
+    graft.Staging.pinScope { processBatchScoped(batch, batchId) }
   }
 
-  private def processBatchStaged(batch: DataFrame, batchId: Long,
-      cut: DataFrame => (DataFrame, RDD[InternalRow])): Unit = {
+  private def processBatchScoped(batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
     // the batch's quality survivors fan out to every stage below
     // (signatures, probe, kill-set joins, decontaminate, store append)
     // — cut once so the quality kernels run once per batch, the same
     // single-derivation discipline as the pipeline gate's staged tables
-    val (q, qRdd) = cut(
+    val q = graft.Staging.registerPinned(spark, Graph.cut(
       graft.queries.LlmQueries.qualitySurvivors(
         batch.select(col("doc_id"), col("text"), col("source"),
-          col("n_chars"))))
+          col("n_chars")))))
     val deltaSigs = q.select(col("doc_id"),
         graft.functions.NativeText.minhashSig(
           split(col("text"), " "), 3).as("sig"))
       .where(size(col("sig")) > 0)
-    val (pairs, pairsRdd) = cut(
+    val pairs = graft.Staging.registerPinned(spark, Graph.cut(
       TextDedup.incrementalNearDupsFromSigs(
         storeDocs, storeSigs, q, deltaSigs, "doc_id", "text",
-        shingleSize = 3, threshold = 0.5))
+        shingleSize = 3, threshold = 0.5)))
     // classify endpoints: store ids and batch ids are disjoint, so a
     // pair is batch-internal iff BOTH endpoints are batch docs
     val batchIds = q.select(col("doc_id"))
@@ -161,26 +143,19 @@ class StreamingPipeline(bench: DataFrame,
     // leaves the maintainer exactly as it was (old refs still valid,
     // old blocks still pinned, lastBatchId unadvanced), so the
     // at-least-once replay of the same batchId re-runs it cleanly
-    // instead of being skipped against a half-updated store
-    val (d, pd) = cut(
-      storeDocs.unionByName(q.select(docCols.map(col): _*)))
-    val (g, pg) = cut(storeSigs.unionByName(deltaSigs))
-    val (a, pa) = cut(
-      admittedAcc.map(_.unionByName(admittedBatch)).getOrElse(admittedBatch))
-    // commit point — nothing below throws
-    pinnedDocs.foreach(_.unpersist(blocking = false))
-    storeDocs = d; pinnedDocs = Some(pd)
-    pinnedSigs.foreach(_.unpersist(blocking = false))
-    storeSigs = g; pinnedSigs = Some(pg)
-    pinnedAdm.foreach(_.unpersist(blocking = false))
-    admittedAcc = Some(a); pinnedAdm = Some(pa)
-    // every downstream cut above is already materialized, so the
-    // batch's transient blocks (survivors + pair list) are dead weight
-    // — release them NOW rather than accumulating one block set per
-    // micro-batch for the life of the stream (driver GC is not a
-    // retention policy)
-    qRdd.unpersist(blocking = false)
-    pairsRdd.unpersist(blocking = false)
+    // instead of being skipped against a half-updated store; a cut
+    // that throws releases the store cuts made before it
+    val next = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    try Seq(
+        storeDocs.unionByName(q.select(docCols.map(col): _*)),
+        storeSigs.unionByName(deltaSigs),
+        admittedAcc.map(_.unionByName(admittedBatch)).getOrElse(admittedBatch)
+      ).foreach(df => next += Graph.cut(df))
+    catch { case t: Throwable => next.foreach(Graph.release); throw t }
+    // commit point — nothing below throws; close() releases the
+    // superseded store cuts
+    close()
+    storeDocs = next(0); storeSigs = next(1); admittedAcc = Some(next(2))
     // recorded LAST, inside the commit section: a batch remembered as
     // processed before its effects land would be dropped on replay
     lastBatchId = batchId
@@ -194,8 +169,6 @@ class StreamingPipeline(bench: DataFrame,
   /** Release every lineage-cut block this maintainer pinned (call once
     * consumers of [[admitted]] have materialized). */
   def close(): Unit = synchronized {
-    Seq(pinnedDocs, pinnedSigs, pinnedAdm).foreach(
-      _.foreach(_.unpersist(blocking = false)))
-    pinnedDocs = None; pinnedSigs = None; pinnedAdm = None
+    admittedAcc.foreach(a => Seq(storeDocs, storeSigs, a).foreach(Graph.release))
   }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.Corpus
+import graft.operators.{Corpus, Graph}
 
 /** The STREAMING twin of the incremental fingerprint-match gate
   * (q_winnow_incr): a `foreachBatch` winnowing-index maintainer with
@@ -62,9 +60,6 @@ class StreamingWinnow(spark: SparkSession, idCol: String, textCol: String,
     StructField(idCol, idType), StructField("fp", LongType))))
   private var stats: DataFrame = emptyFrame(StructType(Seq(
     StructField("fp", LongType), StructField("_df", LongType))))
-  /** The cut RDDs backing the CURRENT index/stats frames (none before
-    * the first commit — the empties are driver-local leaves). */
-  private var statePins: Seq[RDD[InternalRow]] = Nil
 
   /** The foreachBatch sink: `stream.writeStream.foreachBatch(
     * maintainer.processBatch _)`. The commit-point protocol (replay
@@ -79,17 +74,16 @@ class StreamingWinnow(spark: SparkSession, idCol: String, textCol: String,
     withPersisted(batch) { b =>
       // the batch's fps feed three consumers (probe, index merge,
       // stats merge) — cut once
-      val (deltaFps, deltaRdd) = graft.operators.Graph.localCut(
+      val deltaFps = Graph.cut(
         Corpus.winnowFingerprints(b, idCol, textCol, shingleSize, window))
       try {
-        var newPins: List[RDD[InternalRow]] = Nil
+        val newState = scala.collection.mutable.ListBuffer.empty[DataFrame]
         try {
-          val (newIndex, iRdd) = graft.operators.Graph.localCut(
-            index.unionByName(deltaFps))
-          newPins ::= iRdd
-          val (newStats, sRdd) = graft.operators.Graph.localCut(
+          val newIndex = Graph.cut(index.unionByName(deltaFps))
+          newState += newIndex
+          val newStats = Graph.cut(
             Corpus.winnowMergeDfStats(stats, Corpus.winnowDfStats(deltaFps)))
-          newPins ::= sRdd
+          newState += newStats
           commit(batchId) {
             Corpus.incrementalWinnowMatchesFromFps(index, stats, deltaFps,
                 idCol, minShared, maxDocFreq)
@@ -97,17 +91,15 @@ class StreamingWinnow(spark: SparkSession, idCol: String, textCol: String,
           } {
             // plain assignments first (must not throw), then release
             // the superseded state blocks
-            val old = statePins
+            val old = Seq(index, stats)
             index = newIndex
             stats = newStats
-            statePins = Seq(iRdd, sRdd)
-            old.foreach(_.unpersist(blocking = false))
+            old.foreach(releaseState)
           }
         } catch {
-          case t: Throwable =>
-            newPins.foreach(_.unpersist(blocking = false)); throw t
+          case t: Throwable => newState.foreach(Graph.release); throw t
         }
-      } finally deltaRdd.unpersist(blocking = false)
+      } finally Graph.release(deltaFps)
     }
   }
 

@@ -137,48 +137,52 @@ class StagingSpec extends SparkSpec {
   test("pinScope: pins registered inside the scope release when it " +
       "closes (success AND failure); pins outside go to the session " +
       "registry as before") {
-    def pinnedRdd() = {
-      val r = sc.parallelize(1 to 10, 1)
-      r.localCheckpoint(); r.count(); r
-    }
+    def cut() = operators.Graph.cut(spark.range(10).toDF("x"))
+    def level(c: org.apache.spark.sql.DataFrame) =
+      operators.Graph.cutRdd(c).getStorageLevel
     Staging.releasePinned(spark) // drain pins earlier suites registered
     val inScope = Staging.pinScope {
-      val r = pinnedRdd()
-      Staging.registerPinned(spark, r)
-      assert(r.getStorageLevel != StorageLevel.NONE)
-      r
+      val c = Staging.registerPinned(spark, cut())
+      assert(level(c) != StorageLevel.NONE)
+      c
     }
-    assert(inScope.getStorageLevel == StorageLevel.NONE,
+    assert(level(inScope) == StorageLevel.NONE,
       "scope close must release the scope's pins")
     assert(Staging.releasePinned(spark) == 0,
       "scope pins must never land in the session registry")
 
-    val failed = pinnedRdd()
+    val failed = cut()
     intercept[RuntimeException] {
       Staging.pinScope {
         Staging.registerPinned(spark, failed)
         sys.error("body fails")
       }
     }
-    assert(failed.getStorageLevel == StorageLevel.NONE,
+    assert(level(failed) == StorageLevel.NONE,
       "a failing scope still releases its pins")
 
-    val outside = pinnedRdd()
+    val outside = cut()
     Staging.registerPinned(spark, outside)
     assert(Staging.releasePinned(spark) == 1,
       "outside a scope, registration reaches the session registry")
   }
 
   test("registerPinned/releasePinned free localCheckpointed storage") {
-    val rdd = sc.parallelize(1 to 100, 2)
-    rdd.localCheckpoint()
-    rdd.count()
+    val c = operators.Graph.cut(spark.range(100).repartition(2).toDF("x"))
+    val rdd = operators.Graph.cutRdd(c)
     assert(rdd.getStorageLevel != StorageLevel.NONE)
-    Staging.registerPinned(spark, rdd)
+    assert(Staging.registerPinned(spark, c) eq c,
+      "registration hands the cut back")
     assert(Staging.releasePinned(spark) == 1)
     // RDD.unpersist resets the declared level synchronously (block
     // removal is async but irrelevant to the contract)
     assert(rdd.getStorageLevel == StorageLevel.NONE)
     assert(Staging.releasePinned(spark) == 0, "registry must be empty")
+    // a frame that is not a cut names no blocks: refused, not registered
+    intercept[IllegalArgumentException] {
+      Staging.registerPinned(spark, spark.range(3).toDF("x"))
+    }
+    assert(Staging.releasePinned(spark) == 0,
+      "a refused frame must not reach the registry")
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.{col, countDistinct}
+import org.apache.spark.sql.functions.{col, countDistinct, lit, raise_error, when}
 
 class GraphSpec extends SparkSpec {
 
@@ -21,6 +21,13 @@ class GraphSpec extends SparkSpec {
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L))
+    // a second graph, read twice off the returned (cut-backed) labels
+    val small = Graph.connectedComponents(
+      Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("d1", "d2"),
+      "d1", "d2")
+    assert(small.count() === 6)
+    assert(small.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("connectedComponents: a long path converges within the diameter bound") {
@@ -51,23 +58,35 @@ class GraphSpec extends SparkSpec {
       s"expected only the result to stay cached, found ${leaked.size} RDDs")
   }
 
-  test("connectedComponents with checkpointDir leaves ZERO cached blocks " +
-      "and stays readable from the durable files") {
+  test("cut: a failing materialization rethrows and pins nothing") {
+    val s = spark
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    // a range, not a local relation: the optimizer would evaluate a
+    // projection over local rows itself, failing before any job runs
+    val bad = s.range(1L, 4L).toDF("x")
+      .select(when(col("x") === 2L, raise_error(lit("cut boom")))
+        .otherwise(col("x")).as("x"))
+    val err = intercept[Exception](Graph.cut(bad))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("cut boom")),
+      s"the job's own failure must surface, got: $err")
+    assert(s.sparkContext.getPersistentRDDs.keySet === before,
+      "a failed cut must drop its checkpoint marking")
+  }
+
+  test("release frees a cut's blocks and refuses any other frame") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "graft-ck-").toString
-    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("d1", "d2")
     val before = s.sparkContext.getPersistentRDDs.keySet
-    val comp = Graph.connectedComponents(edges, "d1", "d2",
-      checkpointDir = Some(dir))
-    // consumable repeatedly — each read streams from the checkpoint files
-    assert(comp.count() === 6)
-    assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"reliable-checkpoint path must leave no cached blocks, found $leaked")
+    val c = Graph.cut(Seq(1L, 2L, 3L).toDF("x"))
+    assert(c.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+    assert((s.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+    // neither an uncut frame nor a projection of a cut names the blocks
+    intercept[IllegalArgumentException](Graph.release(Seq(1L).toDF("x")))
+    intercept[IllegalArgumentException](Graph.release(c.select(col("x"))))
+    Graph.release(c)
+    Graph.release(c) // a second release is harmless
+    assert(s.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("keepBest keeps the top-scoring cluster member, ties to larger id, " +

@@ -165,4 +165,16 @@ class PipelineSpec extends SparkSpec {
     assert(got.nonEmpty, "increment must be non-empty at sf0.001")
     assert(got === expected)
   }
+
+  test("incremental pipeline: once the session is evicted, an " +
+      "invocation leaves no pinned blocks behind") {
+    graft.Staging.evictSession(spark)
+    val before = sc.getPersistentRDDs.keySet
+    PipelineQueries.qPipelineIncr(spark, sfDir).collect()
+    graft.Staging.evictSession(spark)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"blocks pinned with no handle: " +
+      leaked.map(id => sc.getPersistentRDDs(id).toDebugString.take(300)))
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
 }
