@@ -185,10 +185,47 @@ object Bench {
     "q_winnow_incr" -> 1.89, "q_winnow_match" -> 1.34, "q_zipf" -> 0.36,
     "q_zorder" -> 0.24)
 
+  /** Execute one SparkEntry query in full: a noop-format write
+    * materializes every row and column without collecting. */
+  def run(spark: SparkSession, sfDir: String, name: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+
+  /** Warm-up before any timed query: one agg-shaped and one join-shaped
+    * job (JIT, codegen cache, shuffle service, parquet footers for the
+    * big tables), plus one untimed parallel-canary job so its first
+    * timed reading isn't billed shuffle-infra setup. A failing warm-up
+    * query is ignored here; its timed run reports it. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    try { run(spark, sfDir, "q1_agg"); run(spark, sfDir, "q_join_equi") }
+    catch { case _: Throwable => }
+    parallelCanaryMs(spark)
+  }
+
+  /** Per-staging-key build seconds as a JSON object. */
+  def stagingJson(entries: Seq[(String, Double)]): String = entries
+    .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    .mkString("{", ",", "}")
+
+  /** The compact stdout line. It must stay inside a ~2 KB stdout
+    * tail capture or a final-line parse returns null (the round-10/17
+    * lesson), so the two lists that grow with the query
+    * count — retries and suspects — appear here as counts only, and the
+    * constant sfDir suffix is stripped from staging keys. The lists and
+    * full keys live in the long line and BENCH_FULL.json. `summary` is
+    * the comma-joined scalar fields both lines share. */
+  def compactLine(summary: String, retries: Seq[(String, (Double, Boolean))],
+      suspects: Seq[String], staging: Seq[(String, Double)],
+      sfDir: String): String = {
+    val stagingShort = stagingJson(staging.map { case (k, v) =>
+      k.stripSuffix(s":$sfDir") -> v })
+    s"""{$summary,"retry_count":${retries.size},"suspect_count":${suspects.size},"staging":$stagingShort,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val canaryStart = canaryMs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     // drop any previous run's artifacts FIRST: if this run's write fails
     // (swallowed below — stdout stays the primary channel), a consumer
     // cp'ing BENCH_FULL.json must fail loudly rather than silently
@@ -202,30 +239,9 @@ object Bench {
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"BENCH_FULL_c$cpus.json"))
     } catch { case _: Throwable => }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fall back from whole-stage fusion when the compiled method exceeds
-      // HotSpot's 8000-byte JIT ceiling (SPARK-21871): a fused method past
-      // that limit silently runs interpreted — measured 6x slower on the
-      // wide enrich projection than per-operator codegen that does JIT.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
-    // Warm-up: one agg-shaped and one join-shaped job (JIT, codegen cache,
-    // shuffle service, parquet footers for the big tables), plus one
-    // untimed parallel-canary job so its first timed reading isn't billed
-    // shuffle-infra setup.
-    try { run("q1_agg"); run("q_join_equi") } catch { case _: Throwable => }
-    parallelCanaryMs(spark) // warm-up, discarded
+    val spark = Session.local(cpus)
+    def run(name: String): Unit = Bench.run(spark, sfDir, name)
+    warmUp(spark, sfDir)
     val parCanaryStart = parallelCanaryMs(spark)
 
     // per-query (elapsed, succeeded): a failed run keeps its elapsed in
@@ -320,7 +336,7 @@ object Bench {
     // The cold single-shot number is reported alongside for transparency.
     val n = Tables.orders(spark, sfDir).count()
     val inputParts = Tables.orders(spark, sfDir).rdd.getNumPartitions
-    val effCores = math.min(cpus.toInt, inputParts).toDouble
+    val effCores = math.min(cpus, inputParts).toDouble
     // a FAILED warm run must report 0, not divide its (tiny) elapsed
     // time into a bogus headline throughput
     val tWarm = {
@@ -338,16 +354,6 @@ object Bench {
     // registry, not to the first consumer): a staged-prefix regression
     // is attributable to its key straight from this artifact
     val staging = Staging.buildSeconds(spark).toSeq.sortBy(_._1)
-    def stagingJsonOf(entries: Seq[(String, Double)]) = entries
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val stagingJson = stagingJsonOf(staging)
-    // the COMPACT line must stay inside the driver's ~2 KB tail-capture
-    // window or its final-line parse returns null (the round-10/17
-    // lesson) — strip the constant sfDir suffix from staging keys there;
-    // the full keys live in the long line and the file artifact
-    val stagingJsonShort = stagingJsonOf(staging.map { case (k, v) =>
-      k.stripSuffix(s":$sfDir") -> v })
     // Contention self-classification from the run's own canaries (the
     // r17 adjudication thresholds): an idle host reads the parallel
     // canary in the low hundreds of ms and the spin canary similarly —
@@ -356,8 +362,9 @@ object Bench {
     val contended = Seq(parCanaryStart, parCanaryMid, parCanaryRetry,
       parCanaryEnd, canaryStart, canaryEnd).exists(_ > 1000.0)
     val canaries = f""""canary_ms_start":$canaryStart%.0f,"canary_ms_end":$canaryEnd%.0f,"par_canary_ms_start":$parCanaryStart%.0f,"par_canary_ms_mid":$parCanaryMid%.0f,"par_canary_ms_retry":$parCanaryRetry%.0f,"par_canary_ms_end":$parCanaryEnd%.0f,"contended":$contended,"retry_skipped_contended":$skippedContended,"retry_skipped_budget":$skippedBudget"""
-    val compact = f"""{"metric":"total","value":$total%.3f,"value_adjudicated":$totalAdj%.3f,"unit":"sec","enrich_rec_s_core":$enrichWarm%.0f,"enrich_rec_s_core_cold":$enrichCold%.0f,"enrich_cores":$effCores%.0f,$canaries,"retries":$retryJson,"suspects":$suspectsJson,"staging":$stagingJsonShort,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
-    val full = f"""{"metric":"total","value":$total%.3f,"value_adjudicated":$totalAdj%.3f,"unit":"sec","queries":$qs,"enrich_rec_s_core":$enrichWarm%.0f,"enrich_rec_s_core_cold":$enrichCold%.0f,"enrich_cores":$effCores%.0f,$canaries,"retries":$retryJson,"suspects":$suspectsJson,"staging":$stagingJson,"sf":"$sfDir"}"""
+    val summary = f""""metric":"total","value":$total%.3f,"value_adjudicated":$totalAdj%.3f,"unit":"sec","enrich_rec_s_core":$enrichWarm%.0f,"enrich_rec_s_core_cold":$enrichCold%.0f,"enrich_cores":$effCores%.0f,$canaries"""
+    val compact = compactLine(summary, retries, suspects, staging, sfDir)
+    val full = s"""{$summary,"queries":$qs,"retries":$retryJson,"suspects":$suspectsJson,"staging":${stagingJson(staging)},"sf":"$sfDir"}"""
     // ONE COMPLETE JSON OBJECT per run as a FILE artifact: the driver's
     // stdout capture keeps only a ~2 KB tail, which truncated the r17
     // archive's per-query map to the alphabetical tail — the file keeps

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: time a comma-separated subset of SparkEntry.queries in
   * one warm session (same config as [[Bench]]), printing per-query
@@ -12,21 +11,9 @@ object BenchSubset {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    try { run("q1_agg"); run("q_join_equi") } catch { case _: Throwable => }
-    Bench.parallelCanaryMs(spark)
+    val spark = Session.local()
+    def run(name: String): Unit = Bench.run(spark, sfDir, name)
+    Bench.warmUp(spark, sfDir)
     println(f"par_canary_start_ms=${Bench.parallelCanaryMs(spark)}%.0f")
     (1 to reps).foreach { r =>
       names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: break a query's one-shot cost into Catalyst phase times
   * (parsing/analysis/optimization/planning from QueryPlanningTracker)
   * vs total wall time of the first noop execution — the measurement
@@ -13,20 +11,8 @@ object PhaseTimes {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    try { run("q1_agg"); run("q_join_equi") } catch { case _: Throwable => }
+    val spark = Session.local()
+    Bench.warmUp(spark, sfDir)
     names.foreach { name =>
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)

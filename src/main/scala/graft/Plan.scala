@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: print the formatted/codegen plan for one SparkEntry
   * query and time it — the `.explain`-driven iteration loop.
   * Usage: runMain graft.Plan <queryName> [sfDir] [codegen]
@@ -11,16 +9,7 @@ object Plan {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.maxFields", sys.env.getOrElse("MAXF", "100"))
-      .config("spark.sql.codegen.hugeMethodLimit", sys.env.getOrElse("HML", "8000"))
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("WSCG", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain(mode)
     val iters = sys.env.getOrElse("PLAN_ITERS", "1").toInt

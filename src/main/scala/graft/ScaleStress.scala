@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness (VERDICT r7 #5): materialize an N× copy of the
@@ -24,20 +23,11 @@ object ScaleStress {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "target/sf_scaled"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.local(conf = Map(
       // long Nx sweeps accumulate dead shuffle dirs until a GC lets the
       // ContextCleaner reap them; the default 30 min periodic GC is an
       // eternity at 100x (the sweep died on disk before the first tick)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "1min"))
 
     // per-copy shifts MUST clear the fixture's id space: colliding
     // copies would silently merge rows and understate scaling ratios.
@@ -606,8 +596,7 @@ object ScaleStress {
     def time(dir: String, name: String): Double = {
       val d = if (pipelineQs(name) && dir == out) s"$out-pipeline" else dir
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, d)
-        .write.mode("overwrite").format("noop").save()
+      Bench.run(spark, d, name)
       val sec = (System.nanoTime() - t0) / 1e9
       // progress line per measurement (the r19 100x lesson: results
       // printed only at sweep end are lost to a mid-sweep crash), and a

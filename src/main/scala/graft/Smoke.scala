@@ -6,16 +6,7 @@ import org.apache.spark.sql.SparkSession
   * does (rows > 0 on sf0.001) and prints the plan + row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // see Bench.scala: fused methods past the JIT limit run interpreted
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val df = SparkEntry.entry(spark)
     df.explain("formatted")
     val rows = df.collect()

@@ -67,9 +67,6 @@ object Staging {
       }
       d
     }
-    /** The frame iff the builder has completed (evict must not force
-      * a half-staged entry just to unpersist it). */
-    def builtOrNull: DataFrame = lock.synchronized(built)
     def markEvicted(): Unit = lock.synchronized {
       evicted = true
       if (built != null) built.unpersist(blocking = false)

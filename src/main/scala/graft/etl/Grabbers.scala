@@ -876,23 +876,20 @@ object Grabbers {
     (detail(t => Some(t._1)), detail(_._2), detail(_._3))
   }
 
-  /** get_accessuri (conversions.py:711-722): accessURI ∥ bestQuality ∥
-    * identifier-unless-any-ac-field-present. The "any ac: key" probe
+  /** Whether any raw key carries the ac: prefix (get_accessuri's
+    * suppression guard) — consumes only the map's key array. The probe
     * joins the map keys with a \\u0001 separator and string-matches —
     * ConcatWs stays in codegen where a higher-order `exists` would not. */
-  /** Whether any raw key carries the ac: prefix (get_accessuri's
-    * suppression guard) — consumes only the map's key array. */
   def hasAcKey(data: Column): Column = {
     val joined = concat_ws("\u0001", map_keys(data))
     joined.startsWith("ac:") || joined.contains("\u0001ac:")
   }
 
-  def accessUri(data: Column): Column =
-    accessUriFrom(getFieldRaw(data, _), hasAcKey(data))
-
   private def truthy(c: Column): Column = c.isNotNull && c =!= ""
 
-  /** get_accessuri over pre-extracted raw fields (`f` = raw accessor).
+  /** get_accessuri (conversions.py:711-722) over pre-extracted raw
+    * fields (`f` = raw accessor): accessURI ∥ bestQuality ∥
+    * identifier-unless-any-ac-field-present ([[hasAcKey]]).
     * The reference's `a or b` chains are Python TRUTHINESS: an empty
     * string is skipped like a missing key EXCEPT in the last operand,
     * which passes through verbatim — and the `url is None` guard then

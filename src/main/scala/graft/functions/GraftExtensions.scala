@@ -6,15 +6,20 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** SQL registration for the native expressions, two ways:
+/** The graft session extensions: the native SQL functions plus the
+  * planner strategies (TopKStrategy, CodegenBarrierStrategy) and
+  * optimizer rules (BarrierPushdown, GeohashPruning) that only this
+  * hook registers. Every session built by [[graft.Session]] — each main
+  * and the specs' shared session — carries it via
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (the standard
+  * SparkSessionExtensions hook — survives session forks and reaches
+  * every session of the application).
   *
-  *  - cluster-wide: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (the standard SparkSessionExtensions hook — survives session
-  *    forks and reaches every session of the application);
-  *  - per-session: `GraftFunctions.register(spark)` for an
-  *    already-running session (tests, notebooks).
+  * For an already-running session built elsewhere (a notebook),
+  * `GraftFunctions.register(spark)` registers the SQL functions only —
+  * not the strategies or rules.
   *
-  * After either, `spark.sql("SELECT minhash_sig(split(text, ' '), 3)
+  * Either way, `spark.sql("SELECT minhash_sig(split(text, ' '), 3)
   * ...")` plans the same Catalyst expression the DataFrame API uses —
   * the SQL surface and the Column surface share one implementation.
   */

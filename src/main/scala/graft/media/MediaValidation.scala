@@ -30,9 +30,6 @@ object MediaValidation {
     "model/mesh" -> "models")
   val mimeAliases: Map[String, String] = Map("audio/mpeg3" -> "audio/mpeg")
 
-  def defaultBucket(mime: String): Option[String] =
-    defaultBuckets.get(mimeAliases.getOrElse(mime, mime))
-
   sealed abstract class MediaValidationError(msg: String)
     extends RuntimeException(msg)
   final class EtagMismatchError(expected: String, calculated: String)

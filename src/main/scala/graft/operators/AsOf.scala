@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,12 +44,6 @@ object AsOf {
       .select(leftCols.map(c => col(s"_l.$c").as(c)) ++
         payloadCols.map(c => col(s"_m.$c").as(c)): _*)
   }
-
-  /** Column helper for callers composing further. */
-  def carryForward(payload: Column, key: Column, ts: Column, tag: Column): Column =
-    last(payload, ignoreNulls = true).over(
-      Window.partitionBy(key).orderBy(ts, tag)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
   /** Interval (range) join for NON-OVERLAPPING intervals per key: each
     * probe row matched to the interval with `start <= ts < end` on the

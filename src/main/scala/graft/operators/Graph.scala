@@ -162,7 +162,9 @@ object Graph {
     * sweeps, so an oracle replaying the same rounded sweeps is
     * bit-identical (the trained-quantizer pinning discipline). `n` is
     * a driver-side scalar (one count over the already-cut node set —
-    * the graph's node count, not data motion). */
+    * the graph's node count, not data motion). The last sweep's cut
+    * backs the result and is registered with
+    * [[graft.Staging.registerPinned]]; every other cut is released. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
     val e = cut(
@@ -189,7 +191,7 @@ object Graph {
     }
     release(e)
     release(nodes)
-    r
+    graft.Staging.registerPinned(edges.sparkSession, r)
   }
 
   /** Materialize the deduplicated corpus: drop every non-canonical
@@ -359,7 +361,7 @@ object Graph {
     }
     release(e)
     release(nodes)
-    r
+    graft.Staging.registerPinned(edges.sparkSession, r)
   }
 
   /** Fixed-round k-core peel: `rounds` synchronous rounds of "drop
@@ -378,7 +380,8 @@ object Graph {
     * hash joins, live set lineage-cut per round (constant plan
     * depth). Output: (id, deg) of survivors, deg = degree within the
     * surviving subgraph after the LAST completed round's filter,
-    * recomputed on the final live set. */
+    * recomputed on the final live set and cut; that cut is registered
+    * with [[graft.Staging.registerPinned]], every other one released. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     val und = cut(undirect(edges, srcCol, dstCol))
@@ -395,8 +398,11 @@ object Graph {
     val finalEdges = und
       .join(alive.toDF("u"), Seq("u"), "left_semi")
       .join(alive.toDF("v"), Seq("v"), "left_semi")
-    alive.join(degrees(finalEdges), Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
+    val out = cut(alive.join(degrees(finalEdges), Seq("id"), "left")
+      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
+    if (rounds >= 2) release(alive)
+    release(und)
+    graft.Staging.registerPinned(edges.sparkSession, out)
   }
 
   /** Exact core NUMBER per node (the degeneracy order — the r13
@@ -655,7 +661,7 @@ object Graph {
       lab = cutNext
     }
     release(e)
-    lab
+    graft.Staging.registerPinned(edges.sparkSession, lab)
   }
 
   /** Newman modularity of a community assignment, per community —

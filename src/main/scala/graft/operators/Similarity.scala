@@ -567,10 +567,6 @@ object Similarity {
     cents
   }
 
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      centroidMod: Int): DataFrame =
-    ivfTopKProbed(corpus, queries, k, centroidMod, nprobe = 1)
-
   /** Int8-quantized top-k — the ANN memory-bandwidth path at 100 TB:
     * the corpus is scanned as per-vector symmetric int8
     * ([[graft.functions.NativeMath.int8Quantize]] — 4×/8× smaller than

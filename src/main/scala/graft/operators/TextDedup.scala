@@ -488,25 +488,6 @@ object TextDedup {
         i => hash60(concat_ws(" ",
           (0 until k).map(j => element_at(w, i + j + 1)): _*))))
 
-  /** Per-row signature alternative: 64 transform/array_min passes over
-    * each document's own shingle-hash array — no shuffle, but
-    * higher-order functions evaluate interpreted (CodegenFallback) and
-    * measured 2× slower than [[minhashSignatures]], whose 64 `min`
-    * aggregates partial-combine map-side so the shuffle moves only one
-    * combined row per (doc, partition) anyway. Kept for corpora where
-    * per-doc shingle arrays are huge and exploding is memory-hostile. */
-  def minhashSignaturesRowWise(docs: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int): DataFrame = {
-    val hashes = transform(shingles(col(textCol), shingleSize),
-      s => hash60(s) % P)
-    val sig = array(perms.map { case (a, b) =>
-      array_min(transform(col("_h"), h => (lit(a) * h + lit(b)) % P))
-    }: _*)
-    docs.select(col(idCol), hashes.as("_h"))
-      .where(size(col("_h")) > 0)
-      .select(col(idCol), sig.as("sig"))
-  }
-
   /** End-to-end MinHash near-dup: shingle → sign → band → verify.
     * With 16×4 bands, a pair at Jaccard 0.8 is missed with probability
     * (1-0.8⁴)¹⁶ ≈ 2e-4 and at 0.95+ effectively never — candidates are

@@ -95,12 +95,6 @@ final case class RecordStore(
   def newBodies(incoming: DataFrame): DataFrame =
     incoming.join(data, Seq("etag"), "left_anti")
 
-  /** Tombstone propagation (db.py:348-351): deleted entities' latest
-    * version dereferences to the tombstone etag. */
-  def withTombstones(view: DataFrame): DataFrame =
-    view.withColumn("etag",
-      when(col("deleted"), lit(tombstoneEtag)).otherwise(col("etag")))
-
   /** has_child semi-join (download.py:407-412): parents having at least
     * one child matching `childFilter`, via the sibling-derived child
     * array — `array_contains` is expressed as explode + semi join so the

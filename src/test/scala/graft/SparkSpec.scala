@@ -11,17 +11,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // a fixed 4 cores so spec timings and partition counts do not follow
+  // the host; the warehouse dir keeps BucketedStoreSpec's managed tables
+  // out of the working tree
+  lazy val session: SparkSession = Session.local(cpus = 4,
+    conf = Map("spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse"))
 }

@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Replays the committed identify differential vectors (reference
   * identifyRecord outputs over structured-random flat records —
@@ -9,8 +10,16 @@ import org.apache.spark.sql.functions._
   * The vector set pins the reference's BOM-only bad_char_re and
   * Python-strip whitespace semantics: 679 of the 2,000-vector pool's
   * expected ids retain control characters a Java-\s munge would have
-  * dropped. */
+  * dropped. The full ordered (field, id) candidate list of every record
+  * must match. */
 class IdentifyDifferentialSpec extends SparkSpec {
+
+  private val vectorSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("type", StringType),
+    StructField("rsid", StringType),
+    StructField("data", MapType(StringType, StringType)),
+    StructField("exp", ArrayType(ArrayType(StringType)))))
 
   test("candidates agree with 500 recorded identifyRecord runs") {
     replay("/identify_vectors.jsonl")
@@ -34,7 +43,7 @@ class IdentifyDifferentialSpec extends SparkSpec {
       val w = new java.io.PrintWriter(tmp, "UTF-8")
       try src.getLines().foreach(w.println) finally w.close()
     } finally src.close()
-    val vecs = spark.read.schema(graft.IdentifyDifferential.vectorSchema)
+    val vecs = spark.read.schema(vectorSchema)
       .json(tmp.getAbsolutePath)
     assert(vecs.count() === 500)
     val types = vecs.select(col("type")).distinct().collect().map(_.getString(0))

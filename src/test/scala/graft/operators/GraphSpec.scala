@@ -58,6 +58,46 @@ class GraphSpec extends SparkSpec {
       s"expected only the result to stay cached, found ${leaked.size} RDDs")
   }
 
+  /** Persistent RDDs that `op` leaves behind once the session's pins are
+    * released: an operator must register every cut it does not release. */
+  private def leakedAfterEvict(op: => Unit): Set[Int] = {
+    graft.Staging.evictSession(spark)
+    val before = sc.getPersistentRDDs.keySet
+    op
+    graft.Staging.evictSession(spark)
+    (sc.getPersistentRDDs.keySet -- before).toSet
+  }
+
+  private def leakGraph = {
+    val s = spark
+    import s.implicits._
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("s", "d")
+  }
+
+  test("pageRank: once the session is evicted, a call leaves no pinned blocks") {
+    assert(leakedAfterEvict(
+      Graph.pageRank(leakGraph, "s", "d", iters = 3).collect()).isEmpty)
+  }
+
+  test("personalizedPageRank: once the session is evicted, a call leaves " +
+      "no pinned blocks") {
+    assert(leakedAfterEvict(Graph.personalizedPageRank(
+      leakGraph, "s", "d", Seq(1L), iters = 3).collect()).isEmpty)
+  }
+
+  test("labelPropagation: once the session is evicted, a call leaves no " +
+      "pinned blocks") {
+    assert(leakedAfterEvict(
+      Graph.labelPropagation(leakGraph, "s", "d", sweeps = 3).collect()).isEmpty)
+  }
+
+  test("kCorePeel: once the session is evicted, a call leaves no pinned " +
+      "blocks") {
+    assert(leakedAfterEvict(
+      Graph.kCorePeel(leakGraph, "s", "d", k = 2, rounds = 3).collect()).isEmpty)
+  }
+
   test("cut: a failing materialization rethrows and pins nothing") {
     val s = spark
     val before = s.sparkContext.getPersistentRDDs.keySet

@@ -4,8 +4,13 @@
 Runs the REFERENCE's RecordCorrector.correct_record
 (idb/corrections/record_corrector.py:186-255) with an injected
 in-memory correction store over structured-random records, and emits
-JSONL for graft.CorrectionsDifferential: first line {"rules": [...]},
-then {id, data, exp:{fields, flags}} lines.
+JSONL: first line {"rules": [...]}, then {id, data, exp:{fields, flags}}
+lines. graft.etl.CorrectionsDifferentialSpec replays it through
+graft.etl.Corrections.apply. A regenerated set replaces one of
+src/test/resources/corrections_vectors{,2,3}.jsonl; the spec expects
+400 records per file:
+    python3 tools/gen_corrections_differential.py SEED 400 \
+        src/test/resources/corrections_vectorsN.jsonl
 
 Same-length key tuples iterate in SET order in the reference (sorted
 by len only), which is process-dependent — the synthetic rule set

@@ -5,8 +5,13 @@ Generates structured-random date strings across every family the engine
 claims (r9-r11 shapes), parses each with dateutil exactly as the
 reference does (uppercase input, default=datetime(1,1,1), naive pinned
 to UTC - conversions.py:585-598), and writes TSV `input \t micros|NULL`.
-The Scala side (graft.DateDifferential) replays the file through
-permissiveTimestamp and reports mismatches. Known engine divergences
+graft.etl.DateDifferentialSpec replays the file through
+permissiveTimestamp and fails on any mismatch. A regenerated set
+replaces one of src/test/resources/dateutil_vectors{,2,3}.tsv; the spec
+expects 3000 lines per file:
+    python3 tools/gen_date_differential.py SEED 3000 \
+        src/test/resources/dateutil_vectorsN.tsv
+Known engine divergences
 (documented in COVERAGE.md) are EXCLUDED at generation time so every
 mismatch is a real finding.
 """

@@ -3,8 +3,16 @@
 
 Runs the REFERENCE's own grabAll (idb/helpers/conversions.py:932-964,
 same sandbox stubs as calibrate_enrich.py) over structured-random
-records and emits JSONL {id, data, exp} for graft.EnrichDifferential
-to replay through graft.etl.Enrich.records.
+records and emits JSONL {id, data, exp}. graft.etl.EnrichDifferentialSpec
+replays the `records` kind through graft.etl.Enrich.records and the
+`mediarecords` kind through graft.etl.Enrich.mediarecords. A regenerated
+set replaces one of src/test/resources/enrich_vectors{,2,3}.jsonl
+(records) or enrich_media_vectors{,2,3}.jsonl (mediarecords); the spec
+expects 500 records per file:
+    python3 tools/gen_enrich_differential.py SEED 500 \
+        src/test/resources/enrich_vectorsN.jsonl records
+The `recordsets` and `publishers` kinds have no committed set and no
+replaying spec (EnrichDimSpec covers those two types by example).
 
 Excluded by construction (stub asymmetries, not engine divergences):
 - geodeticDatum (reference's pyproj is stubbed to a no-op here; the

@@ -2,8 +2,14 @@
 """Differential vectors for the identifier-extraction cascade: runs the
 REFERENCE's identifyRecord (idigbio_ingestion/db_check.py:152-165, with
 mungeid :60-61 and idFromRR :98-109) over structured-random flat records
-and emits JSONL {id, type, rsid, data, exp} for graft.IdentifyDifferential
-to replay through graft.ingest.Identify.candidates.
+and emits JSONL {id, type, rsid, data, exp}.
+graft.ingest.IdentifyDifferentialSpec replays it through
+graft.ingest.Identify.candidates, comparing each record's full ordered
+(field, id) candidate list. A regenerated set replaces one of
+src/test/resources/identify_vectors{,2,3}.jsonl; the spec expects 500
+records per file:
+    python3 tools/gen_identify_differential.py SEED 500 \
+        src/test/resources/identify_vectorsN.jsonl
 
 Sandbox stubs replace only service plumbing (postgres, S3, libmagic,
 loggers); the identification logic under test is the reference's own

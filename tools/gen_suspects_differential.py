@@ -1,8 +1,13 @@
 #!/usr/bin/env python3
 """Differential vectors for the ingest-suspects gate: runs the
 reference's is_row_suspect (idigbio_ingestion/ds_sum_counts.py:52-97)
-over boundary-focused random counter rows and emits TSV for
-graft.SuspectsDifferential to replay through SummaryChecks.suspectTag.
+over boundary-focused random counter rows and emits TSV.
+graft.ingest.SuspectsDifferentialSpec replays it through
+SummaryChecks.suspectTag. A regenerated set replaces one of
+src/test/resources/suspects_vectors{,2,3}.tsv; the spec expects 1500
+rows per file:
+    python3 tools/gen_suspects_differential.py SEED 1500 \
+        src/test/resources/suspects_vectorsN.tsv
 """
 import sys, types, json, random
 
