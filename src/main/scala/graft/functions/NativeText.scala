@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
@@ -66,6 +66,17 @@ object NativeText {
     * shingle string or running an interpreted HOF. */
   def shingleHashes(words: Column, n: Int): Column =
     GraftSqlBridge.column(ShingleHashesExpr(GraftSqlBridge.expression(words), n))
+
+  /** Distinct n-word shingle STRINGS of `words`: each window's words
+    * joined by " " with null elements skipped (`concat_ws`
+    * semantics), duplicates dropped in first-occurrence order; empty
+    * when the document has fewer than `n` words, null for a null
+    * array. Value-identical to `array_distinct(transform(sequence(0,
+    * size(w) - n), i => concat_ws(" ", w[i+1], …, w[i+n])))` — one
+    * native pass per row where that formulation runs an interpreted
+    * lambda (NativeTextSpec pins the parity on both eval paths). */
+  def shingles(words: Column, n: Int): Column =
+    GraftSqlBridge.column(ShinglesExpr(GraftSqlBridge.expression(words), n))
 
   /** POSITIONAL k-word window hashes (one per window start, order
     * preserved, NOT distinct — posexplode recovers positions). The
@@ -407,6 +418,25 @@ case class ShingleHashesExpr(child: Expression, shingleN: Int)
     copy(child = newChild)
 }
 
+case class ShinglesExpr(child: Expression, shingleN: Int)
+    extends UnaryExpression {
+  require(shingleN >= 1, "shingleN must be >= 1")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"shingles needs array<string>, got ${other.catalogString}")
+  }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "shingles"
+  protected override def nullSafeEval(words: Any): Any =
+    MinhashKernel.shingles(words.asInstanceOf[ArrayData], shingleN)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.MinhashKernel.shingles($c, $shingleN);")
+  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
+    copy(child = newChild)
+}
+
 case class SpanHashesExpr(child: Expression, spanN: Int)
     extends UnaryExpression {
   require(spanN >= 1, "spanN must be >= 1")
@@ -541,6 +571,33 @@ object MinhashKernel {
     i = 0
     while (it.hasNext) { out(i) = it.next(); i += 1 }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** Distinct space-joined n-word windows, first-occurrence order.
+    * `UTF8String.concatWs` is the `concat_ws` kernel itself (null
+    * inputs skipped, a fresh byte array per window), so every shingle
+    * is byte-equal to the Column formulation's and owns its bytes. */
+  def shingles(words: ArrayData, n: Int): ArrayData = {
+    val m = words.numElements()
+    if (m < n) return new GenericArrayData(Array.empty[Any])
+    val w = new Array[UTF8String](m)
+    var i = 0
+    while (i < m) {
+      w(i) = if (words.isNullAt(i)) null else words.getUTF8String(i)
+      i += 1
+    }
+    val window = new Array[UTF8String](n)
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    i = 0
+    val last = m - n
+    while (i <= last) {
+      System.arraycopy(w, i, window, 0, n)
+      seen.add(UTF8String.concatWs(Space, window: _*))
+      i += 1
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 
   // --- scientific-name parse -------------------------------------------

@@ -48,10 +48,13 @@ object Graph {
     // materialize the edge list ONCE: every round references it twice,
     // and without the cut each round would recompute the whole upstream
     // pair-generation pipeline (for near-dup input that is the entire
-    // LSH + verify chain — measured 5x the total query cost)
+    // LSH + verify chain — measured 5x the total query cost). Both
+    // directions come from ONE reference to `edges`, so the cut scans
+    // that upstream once; a union of two projections would plan it twice
     val und = cut(
-      edges.select(col(src).as("a"), col(dst).as("b"))
-        .union(edges.select(col(dst).as("a"), col(src).as("b")))
+      edges.select(inline(array(
+          struct(col(src).as("a"), col(dst).as("b")),
+          struct(col(dst).as("a"), col(src).as("b")))))
         .distinct())
     // (id, comp); from round 1 on, the round's cut (id, comp, _chg)
     var labels = und.select(col("a").as("id")).distinct()

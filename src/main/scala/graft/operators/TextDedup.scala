@@ -27,22 +27,13 @@ object TextDedup {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Distinct n-word shingles of a whitespace-tokenized text column —
-    * per-row array ops, no shuffle. */
+  /** Distinct n-word shingles of a single-space-tokenized text column:
+    * the space-joined n-word windows in first-occurrence order, per
+    * row, no shuffle. The native [[graft.functions.NativeText.shingles]]
+    * kernel computes them in one codegen'd call per row, and the inline
+    * `split` is evaluated once per row. */
   def shingles(text: Column, n: Int): Column =
-    shinglesFromWords(split(text, " "), n)
-
-  /** Shingles from an already-materialized words-array column. Callers
-    * on a hot path should bind `split(text)` to its own projected
-    * column first: the shingle lambda references the array n times per
-    * element, and a bound attribute is a slot read while an inline
-    * `split` tree is re-evaluated per reference when the
-    * higher-order-function Project falls back to interpreted eval. */
-  def shinglesFromWords(w: Column, n: Int): Column =
-    array_distinct(
-      when(size(w) < n, array())
-        .otherwise(transform(sequence(lit(0), size(w) - n),
-          i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))))
+    graft.functions.NativeText.shingles(split(text, " "), n)
 
   // MinHash universal-hash family over Z_P: h_k(x) = (a_k x + b_k) mod P.
   // Constants live in the native kernel (graft.functions.MinhashKernel)
@@ -384,7 +375,7 @@ object TextDedup {
     * headers, licenses, quotations) that whole-document near-dup
     * misses when the surrounding documents are dissimilar — the
     * complement of [[minhashNearDups]]/[[jaccardSelfJoin]], which rank
-    * whole docs. Per-doc windows are DISTINCT (shinglesFromWords), so
+    * whole docs. Per-doc windows are DISTINCT ([[shingles]]), so
     * the count IS the doc count without a countDistinct.
     *
     * 100 TB shape: one explode + one hash groupBy with map-side
@@ -397,13 +388,7 @@ object TextDedup {
     * semantics below document granularity. */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 10): DataFrame =
-    // bind the words array to its own column FIRST (see
-    // [[shinglesFromWords]]): an inline split would re-evaluate per
-    // lambda reference — k re-splits per window — when the HOF
-    // Project runs interpreted
-    docs.select(col(idCol), split(col(textCol), " ").as("_w"))
-      .select(col(idCol),
-        explode(shinglesFromWords(col("_w"), k)).as("span"))
+    docs.select(col(idCol), explode(shingles(col(textCol), k)).as("span"))
       .groupBy(col("span")).agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= 2)
 
@@ -539,7 +524,7 @@ object TextDedup {
         explode(graft.functions.NativeText.shingleHashes(
           col("_w"), shingleSize)).as("h"))
     // verification re-shingles only the candidate docs: the semi-join
-    // runs BEFORE the (interpreted, per-doc) shingle lambda, so the
+    // runs BEFORE the per-doc shingle-hash kernel, so the
     // full corpus is shingled exactly once (the signature pass) instead
     // of once per verify subtree
     val candDocs = cands.select(col("d1").as(idCol))

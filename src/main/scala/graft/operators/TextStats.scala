@@ -4,10 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: token counting,
-  * quality heuristics, stopword-profile language ID, and rolling-hash
-  * fingerprinting. All per-row column expressions (codegen, no shuffle,
-  * no UDF) — at 100 TB these run as a single scan stage fused with
-  * whatever filter/write follows.
+  * quality heuristics and stopword-profile language ID (the shingle
+  * fingerprint is a field of the native `text_stats` kernel). All
+  * per-row column expressions (codegen, no shuffle, no UDF) — at 100 TB
+  * these run as a single scan stage fused with whatever filter/write
+  * follows.
   */
 object TextStats {
 
@@ -42,16 +43,6 @@ object TextStats {
       aggregate(transform(w,
           x => when(lower(x).isin(stopwords: _*), 1L).otherwise(0L)),
         lit(0L), _ + _).cast("double") / size(w).cast("double"))
-
-  /** Distinct n-word shingles from a pre-split words column. */
-  def shinglesFromWords(w: Column, n: Int): Column =
-    array_distinct(
-      when(size(w) < n, array())
-        .otherwise(transform(sequence(lit(0), size(w) - n),
-          i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))))
-
-  def fingerprintFromWords(w: Column, shingleSize: Int = 3): Column =
-    array_min(transform(shinglesFromWords(w, shingleSize), TextDedup.hash60 _))
 
   /** BPE-ish subword count: word-characters chunk to runs of ≤4 chars
     * (a crude stand-in for byte-pair merges), punctuation counts singly.
@@ -153,10 +144,4 @@ object TextStats {
       when(avgTokenLen(text) > maxAvgLen, lit("long_tokens")))
     array_compact(flags)
   }
-
-  /** Document fingerprint: min of 60-bit rolling shingle hashes — the
-    * "winnowing" selection at window = whole doc. Equal fingerprints ⇒
-    * near-certain shared shingle; useful as a cheap pre-cluster key. */
-  def fingerprint(text: Column, shingleSize: Int = 3): Column =
-    array_min(transform(TextDedup.shingles(text, shingleSize), TextDedup.hash60 _))
 }

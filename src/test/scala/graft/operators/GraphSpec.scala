@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.{col, countDistinct, lit, raise_error, when}
+import org.apache.spark.sql.functions.{col, countDistinct, lit, raise_error, udf, when}
 
 class GraphSpec extends SparkSpec {
 
@@ -56,6 +56,20 @@ class GraphSpec extends SparkSpec {
     // truncated, so it must stay pinned until the session ends
     assert(leaked.size === 1,
       s"expected only the result to stay cached, found ${leaked.size} RDDs")
+  }
+
+  test("connectedComponents evaluates its edge list once") {
+    val s = spark
+    // every edge row the upstream produces passes through the counting
+    // UDF; a range, not local rows, so no projection is folded at plan time
+    val rowsOut = sc.longAccumulator("cc edge rows")
+    val counted = udf { (x: Long) => rowsOut.add(1); x }
+    val edges = s.range(0L, 9L)
+      .select(counted(col("id")).as("d1"), (col("id") + 1).as("d2"))
+    val comp = Graph.connectedComponents(edges, "d1", "d2")
+    assert(comp.collect().map(_.getLong(1)).toSet === Set(0L))
+    assert(rowsOut.value === 9L,
+      "the edge-list cut must scan its upstream once, not once per direction")
   }
 
   /** Persistent RDDs that `op` leaves behind once the session's pins are

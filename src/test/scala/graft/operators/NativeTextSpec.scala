@@ -130,7 +130,7 @@ class NativeTextSpec extends SparkSpec {
         TextStats.distinctTokenCountFromWords(col("_w")).as("nd"),
         TextStats.avgTokenLenFromWords(col("_w")).as("avg"),
         TextStats.stopwordRatioFromWords(col("_w"), stops).as("stop"),
-        TextStats.fingerprintFromWords(col("_w")).as("fp"))
+        HofText.fingerprintFromWords(col("_w")).as("fp"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2),
         r.getDouble(3), r.getDouble(4),
         if (r.isNullAt(5)) null else r.getLong(5))).toMap
@@ -551,6 +551,87 @@ class NativeTextSpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString(s))
       assert(kern === regexShape(s), s"input '$s'")
     }
+  }
+
+  /** Native shingles against [[HofText.shinglesFromWords]] over
+    * `docs` (null entries are null arrays) for each n, on the
+    * whole-stage codegen path or on the interpreted path (no
+    * whole-stage fusion, projections built by the interpreted factory,
+    * so the kernel runs through `nullSafeEval`). An RDD-backed frame:
+    * the optimizer would fold a projection over local rows itself. */
+  private def assertShinglesParity(docs: Seq[Seq[String]], ns: Seq[Int],
+      codegen: Boolean): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    val schema = new StructType().add("id", LongType)
+      .add("w", ArrayType(StringType, containsNull = true))
+    val df = spark.createDataFrame(sc.parallelize(
+      docs.zipWithIndex.map { case (w, i) => Row(i.toLong, w) }, 2), schema)
+    withConf("spark.sql.codegen.wholeStage", codegen.toString) {
+      withConf("spark.sql.codegen.factoryMode",
+          if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN") {
+        ns.foreach { n =>
+          val q = df.select(col("id"),
+            HofText.shinglesFromWords(col("w"), n).as("hof"),
+            NativeText.shingles(col("w"), n).as("kern"))
+          val rows = q.collect()
+          assert(q.queryExecution.executedPlan
+            .exists(_.isInstanceOf[WholeStageCodegenExec]) === codegen)
+          assert(rows.length === docs.length)
+          rows.foreach { r =>
+            def get(i: Int) = Option(r.getSeq[String](i))
+            assert(get(2) === get(1), s"n=$n doc=${docs(r.getLong(0).toInt)}")
+          }
+        }
+      }
+    }
+  }
+
+  private lazy val shingleCases: Seq[Seq[String]] = {
+    val rnd = new scala.util.Random(11)
+    // a small vocabulary, so random windows repeat within a document
+    val vocab = Seq("a", "b", "c", "dd", "eee", "café", "東京", "ünï", "")
+    val random = (1 to 60).map(_ =>
+      Seq.fill(rnd.nextInt(25))(vocab(rnd.nextInt(vocab.length))))
+    Seq(
+      Seq.empty,                                   // empty array
+      Seq("solo"),                                 // size < n for n > 1
+      Seq("x", "y", "z"),                          // size == n at n = 3
+      (1 to 10).map(i => s"w$i"),                  // size == n at n = 10
+      Seq("a", "b", "a", "b", "a", "b", "c"),      // repeated windows
+      Seq("q", "q", "q", "q", "q"),                // one repeated word
+      Seq("a", null, "b", "c"),                    // a null word
+      Seq(null, null, null),                       // only null words
+      Seq("a", null, "a", null, "a"),              // nulls in repeats
+      null,                                        // a null array
+      Seq("wörds", "welt", "café", "東京", "wörds", "welt"), // multibyte
+      Seq("", "", "x", "")) ++ random              // empty words
+  }
+
+  test("shingles kernel matches the HOF formulation on the codegen path") {
+    assertShinglesParity(shingleCases, Seq(1, 2, 3, 10), codegen = true)
+  }
+
+  test("shingles kernel matches the HOF formulation on the interpreted path") {
+    assertShinglesParity(shingleCases, Seq(1, 2, 3, 10), codegen = false)
+  }
+
+  test("shingles kernel keeps first-occurrence order and owns its strings") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def arr(ws: String*) = new GenericArrayData(
+      ws.map(w => (if (w == null) null else UTF8String.fromString(w)): Any).toArray)
+    def run(n: Int, ws: String*): Seq[String] = {
+      val out = MinhashKernel.shingles(arr(ws: _*), n)
+      (0 until out.numElements()).map(out.getUTF8String(_).toString)
+    }
+    assert(run(2, "a", "b", "a", "b", "c", "a", "b") === Seq("a b", "b a", "b c", "c a"))
+    assert(run(1, null, "x", null) === Seq("", "x"))
+    // every shingle has its own bytes, not a view into the input buffer
+    val words = arr("ab", "cd")
+    val one = MinhashKernel.shingles(words, 1).getUTF8String(0)
+    assert(one.getBaseObject ne words.getUTF8String(0).getBaseObject)
   }
 
   test("expression survives interpreted (non-codegen) evaluation too") {
