@@ -569,7 +569,7 @@ object Corpus {
     .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
 
   /** Bigram occurrence counts — the EXACT MERGEABLE sufficient
-    * statistics of the interpolated Kneser-Ney model ([[knModel]]):
+    * statistics of the interpolated Kneser-Ney model ([[knModelFromJoined]]):
     * every derived quantity (context totals, continuation counts,
     * count-of-counts, the discount itself) is a pure function of this
     * one (w1, w2, cb) table, and the cb of a union of corpora is the
@@ -612,38 +612,28 @@ object Corpus {
     * an exact integer, so the doubles agree bit-for-bit before the
     * round on both engines.
     *
-    * Plan shape: two vocabulary-sized aggregates (contexts, rights)
-    * and one 3-integer scalar off the counts table, joined back on
-    * their own aggregation keys; the corpus text is never touched. */
-  def knModel(counts: DataFrame): DataFrame =
-    knModelFromJoined(knJoinedRelation(counts))
-
-  /** [[knModel]] over an already-built [[knJoinedRelation]] — the
-    * compute-once seam: the joined per-bigram-type relation is
-    * threshold- and consumer-independent, so query layers stage IT
-    * once and every KN gate applies only its own projection. */
+    * The model is read off an already-built [[knJoinedRelation]] (two
+    * vocabulary-sized aggregates (contexts, rights) and one 3-integer
+    * scalar off the counts table, joined back on their own aggregation
+    * keys; the corpus text is never touched) — the compute-once seam:
+    * the joined per-bigram-type relation is threshold- and
+    * consumer-independent, so query layers stage IT once and every KN
+    * gate applies only its own projection. */
   def knModelFromJoined(joined: DataFrame): DataFrame =
     joined
       .select(col("w1"), col("w2"), col("cb"), col("c1"), col("nf"), col("nb"),
         round(knLogTermInput, 6).as("p_kn"))
 
-  /** The per-bigram-type joined model relation — [[knJoined]]'s
-    * self-join form, exposed for staging: one row per observed bigram
-    * type carrying every exact-integer input of the KN formula
-    * (cb, c1, nf, nb, bt, n1, n2). At 100 TB this IS the stored LM
-    * model table; deriving it is three aggregates + three joins of
-    * the counts table that the model/score/prune consumers previously
-    * each re-ran. */
-  def knJoinedRelation(counts: DataFrame): DataFrame =
-    knJoined(counts, counts)
-
-  /** The derived-relation join shared by [[knModel]] and
-    * [[knScoreFromCounts]]: `stream` (any relation carrying w1/w2)
-    * joined with the counts table, the w1-keyed context aggregate, the
-    * w2-keyed continuation aggregate, and the broadcast 3-integer
-    * scalar. `stream eq counts` (the model form) skips the redundant
-    * self-join. */
-  private def knJoined(stream: DataFrame, counts: DataFrame): DataFrame = {
+  /** The per-bigram-type joined model relation shared by
+    * [[knModelFromJoined]] and [[knScoreFromJoined]], exposed for
+    * staging: the counts table joined with the w1-keyed context
+    * aggregate, the w2-keyed continuation aggregate, and the broadcast
+    * 3-integer scalar — one row per observed bigram type carrying
+    * every exact-integer input of the KN formula (cb, c1, nf, nb, bt,
+    * n1, n2). At 100 TB this IS the stored LM model table; deriving it
+    * is three aggregates + three joins of the counts table that the
+    * model/score/prune consumers previously each re-ran. */
+  def knJoinedRelation(counts: DataFrame): DataFrame = {
     val contexts = counts.groupBy(col("w1")).agg(
       sum(col("cb")).as("c1"), count(lit(1)).as("nf"))
     val rights = counts.groupBy(col("w2")).agg(count(lit(1)).as("nb"))
@@ -651,14 +641,15 @@ object Corpus {
       count(lit(1)).as("bt"),
       sum(when(col("cb") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("cb") === 2, 1L).otherwise(0L)).as("n2"))
-    (if (stream eq counts) counts else stream.join(counts, Seq("w1", "w2")))
+    counts
       .join(contexts, Seq("w1"))
       .join(rights, Seq("w2"))
       .crossJoin(broadcast(scalars)) // 1-row corpus scalar
   }
 
-  /** The KN probability of a joined row ([[knJoined]] output), BEFORE
-    * any round/log — kept as one shared expression so the model gate,
+  /** The KN probability of a joined row ([[knJoinedRelation]]
+    * output), BEFORE any round/log — kept as one shared expression so
+    * the model gate,
     * the scoring gate, and the DuckDB oracle all evaluate the same
     * operation order (the 6-decimal float-determinism contract).
     * A corpus whose every bigram type repeats ≥ 3 times has
@@ -1141,7 +1132,7 @@ object Corpus {
   }
 
   /** Trigram occurrence counts — the single maintained table of the
-    * order-3 Kneser-Ney model ([[kn3Model]]): like [[knCounts]], EXACT
+    * order-3 Kneser-Ney model ([[kn3ModelFromJoined]]): like [[knCounts]], EXACT
     * MERGEABLE sufficient statistics (per-trigram addition,
     * [[kn3MergeCounts]]), and — the point of the KN design — every
     * LOWER-ORDER quantity the interpolation needs (bigram-type
@@ -1188,63 +1179,29 @@ object Corpus {
     * Every input is an exact integer derived from the one [[kn3Counts]]
     * table; p_kn3 rounds to 6 decimals under the shared-operation-order
     * contract. Output: one row per observed trigram type —
-    * (w1, w2, w3, c3, p_kn3). */
-  def kn3Model(counts: DataFrame): DataFrame =
-    kn3ModelFromJoined(kn3JoinedRelation(counts))
-
-  /** [[kn3Model]] over an already-built [[kn3JoinedRelation]] — the
-    * compute-once seam (see [[knModelFromJoined]], order 3). */
+    * (w1, w2, w3, c3, p_kn3). Read off an already-built
+    * [[kn3JoinedRelation]] — the compute-once seam (see
+    * [[knModelFromJoined]], order 3). */
   def kn3ModelFromJoined(joined: DataFrame): DataFrame =
     joined
       .select(col("w1"), col("w2"), col("w3"), col("c3"),
         round(kn3TermInput, 6).as("p_kn3"))
 
-  /** The per-trigram-type joined model relation — [[kn3Joined]]'s
-    * self-join form, exposed for staging: one row per observed trigram
-    * type carrying every exact-integer input of both interpolation
-    * levels (c3, c12, nf12, b23, s2, nf2, nb3 and the 6 corpus
-    * scalars). At 100 TB this IS the stored order-3 LM table; deriving
-    * it is four aggregates + four joins of the counts table that the
-    * lm/score/prune gates each re-ran — and within ONE gate the b23
-    * bigram-type aggregate was re-expanded for each of its three
-    * downstream consumers (ctx2, nb, scalars), so the staged relation
-    * also collapses the intra-plan duplication. */
-  def kn3JoinedRelation(counts: DataFrame): DataFrame =
-    kn3Joined(counts, counts)
-
-  /** Score a tokenized corpus under the order-3 model derived from
-    * `counts` — per document, average trigram log-probability and
-    * perplexity (the [[knScoreFromCounts]] contract, order 3;
-    * self-scoring keeps every trigram observed). Docs with fewer than
-    * three tokens drop. */
-  def kn3ScoreFromCounts(docs: DataFrame, idCol: String, wordsCol: String,
-      counts: DataFrame): DataFrame =
-    kn3ScoreFromJoined(docs, idCol, wordsCol, kn3JoinedRelation(counts))
-
-  /** [[kn3ScoreFromCounts]] over an already-built [[kn3JoinedRelation]]
-    * (the staged-model seam). */
-  def kn3ScoreFromJoined(docs: DataFrame, idCol: String, wordsCol: String,
-      joined: DataFrame): DataFrame =
-    trigramStream(docs, idCol, wordsCol)
-      // per-TYPE fold first, ONE stream join after — the
-      // [[knScoreFromCounts]] plan rationale, order 3
-      .join(joined
-        .select(col("w1"), col("w2"), col("w3"),
-          log(kn3TermInput).as("lp")),
-        Seq("w1", "w2", "w3"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_trigrams"),
-        round(sum(col("lp")) / count(lit(1)), 6).as("avg_logprob"),
-        round(exp(-(sum(col("lp")) / count(lit(1)))), 6).as("ppl"))
-
-  /** The derived-relation join shared by [[kn3Model]] and
-    * [[kn3ScoreFromCounts]]: `stream` (any relation carrying
-    * w1/w2/w3) joined with the trigram counts, the (w1,w2) context
-    * aggregate, the (w2,w3) bigram-type count, the w2 context
-    * aggregate of THOSE types, the w3 continuation count, and the
-    * broadcast 6-integer scalar. `stream eq counts` skips the
-    * redundant self-join. */
-  private def kn3Joined(stream: DataFrame, counts: DataFrame): DataFrame = {
+  /** The per-trigram-type joined model relation shared by
+    * [[kn3ModelFromJoined]], [[kn3ScoreFromJoined]] and
+    * [[kn3PruneGainsFromJoined]], exposed for staging: the trigram
+    * counts joined with the (w1,w2) context aggregate, the (w2,w3)
+    * bigram-type count, the w2 context aggregate of THOSE types, the
+    * w3 continuation count, and the broadcast 6-integer scalar — one
+    * row per observed trigram type carrying every exact-integer input
+    * of both interpolation levels (c3, c12, nf12, b23, s2, nf2, nb3
+    * and the 6 corpus scalars). At 100 TB this IS the stored order-3
+    * LM table; deriving it is four aggregates + four joins of the
+    * counts table that the lm/score/prune gates each re-ran — and
+    * within ONE gate the b23 bigram-type aggregate was re-expanded for
+    * each of its three downstream consumers (ctx2, nb, scalars), so
+    * the staged relation also collapses the intra-plan duplication. */
+  def kn3JoinedRelation(counts: DataFrame): DataFrame = {
     val ctx12 = counts.groupBy(col("w1"), col("w2")).agg(
       sum(col("c3")).as("c12"), count(lit(1)).as("nf12"))
     val b23 = counts.groupBy(col("w2"), col("w3"))
@@ -1259,14 +1216,32 @@ object Corpus {
         count(lit(1)).as("bt2"),
         sum(when(col("b23") === 1, 1L).otherwise(0L)).as("n1_2"),
         sum(when(col("b23") === 2, 1L).otherwise(0L)).as("n2_2")))
-    (if (stream eq counts) counts
-     else stream.join(counts, Seq("w1", "w2", "w3")))
+    counts
       .join(ctx12, Seq("w1", "w2"))
       .join(b23, Seq("w2", "w3"))
       .join(ctx2, Seq("w2"))
       .join(nb, Seq("w3"))
       .crossJoin(broadcast(scalars)) // 1-row corpus scalar
   }
+
+  /** Score a tokenized corpus under the order-3 model of an
+    * already-built [[kn3JoinedRelation]] (the staged-model seam) — per
+    * document, average trigram log-probability and perplexity (the
+    * [[knScoreFromCounts]] contract, order 3; self-scoring keeps every
+    * trigram observed). Docs with fewer than three tokens drop. */
+  def kn3ScoreFromJoined(docs: DataFrame, idCol: String, wordsCol: String,
+      joined: DataFrame): DataFrame =
+    trigramStream(docs, idCol, wordsCol)
+      // per-TYPE fold first, ONE stream join after — the
+      // [[knScoreFromCounts]] plan rationale, order 3
+      .join(joined
+        .select(col("w1"), col("w2"), col("w3"),
+          log(kn3TermInput).as("lp")),
+        Seq("w1", "w2", "w3"))
+      .groupBy(idCol)
+      .agg(count(lit(1)).as("n_trigrams"),
+        round(sum(col("lp")) / count(lit(1)), 6).as("avg_logprob"),
+        round(exp(-(sum(col("lp")) / count(lit(1)))), 6).as("ppl"))
 
   private def kn3Discount(n1: Column, n2: Column): Column =
     when(n1 + lit(2L) * n2 > 0L,
@@ -1275,7 +1250,7 @@ object Corpus {
 
   /** The level-2 (backoff) probability of a joined row — the
     * interpolation's inner term, also the comparison base of
-    * [[kn3PruneGains]]. */
+    * [[kn3PruneGainsFromJoined]]. */
   private def kn3P2Input: Column = {
     val d2 = kn3Discount(col("n1_2"), col("n2_2"))
     (col("b23").cast("double") - d2 + d2 * col("nf2").cast("double") *
@@ -1283,7 +1258,7 @@ object Corpus {
       col("s2").cast("double")
   }
 
-  /** The order-3 KN probability of a joined row ([[kn3Joined]]
+  /** The order-3 KN probability of a joined row ([[kn3JoinedRelation]]
     * output), before round/log — one shared expression so both gates
     * and the DuckDB oracle evaluate the same operation order. */
   private def kn3TermInput: Column = {
@@ -1307,12 +1282,8 @@ object Corpus {
     * Negative gains are real (the interpolation can UNDERSHOOT the
     * backoff for rare trigrams in diverse contexts), which is exactly
     * why pruning thresholds on this quantity. Output: one row per
-    * trigram type — (w1, w2, w3, c3, gain round 6). */
-  def kn3PruneGains(counts: DataFrame): DataFrame =
-    kn3PruneGainsFromJoined(kn3JoinedRelation(counts))
-
-  /** [[kn3PruneGains]] over an already-built [[kn3JoinedRelation]]
-    * (the staged-model seam). */
+    * trigram type — (w1, w2, w3, c3, gain round 6), read off an
+    * already-built [[kn3JoinedRelation]] (the staged-model seam). */
   def kn3PruneGainsFromJoined(joined: DataFrame): DataFrame =
     joined
       .select(col("w1"), col("w2"), col("w3"), col("c3"),

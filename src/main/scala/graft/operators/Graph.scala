@@ -434,6 +434,25 @@ object Graph {
       iters: Int): DataFrame =
     kCoreNumbersConverged(edges, srcCol, dstCol, iters)._1
 
+  /** Frontier size (ids) under which a worklist sweep switches to the
+    * broadcast form — 1M longs ≈ 8 MB, the standard broadcast budget.
+    * Above it a FULL synchronous sweep is the right plan anyway: a
+    * frontier that big touches most of the graph, and the plain keyed
+    * join beats three semi-join stages of bookkeeping. */
+  private val KCoreBroadcastFrontier = 1000000L
+
+  /** Bidirected-edge row count under which the whole H-iteration runs
+    * IN-PROCESS off the already-materialized edge cut (≈ 32 MB of long
+    * pairs at the default): per-sweep Spark latency (a lineage-cut job
+    * plus broadcast builds, ~0.3 s each however small the data) is the
+    * entire cost of a dimension-sized graph, and 16 sweeps of driver
+    * arithmetic on 65k edges take microseconds. The bound is MEASURED
+    * (the cut's own count), never assumed — graphs above it take the
+    * distributed worklist sweeps unchanged, and the local loop runs
+    * the identical integer H-update, so results are bit-equal
+    * (GraphSpec pins local ≡ distributed on the same graphs). */
+  private val KCoreLocalEdgeRows = 2000000L
+
   /** [[kCoreNumbers]] with convergence telemetry: (result, sweeps
     * actually run, converged). The round-15 DELTA-WORKLIST form —
     * sweep 1 recomputes every node (it must: all values are newly
@@ -478,25 +497,6 @@ object Graph {
     * [[graft.Staging.registerPinned]] so the session can release it
     * once consumers are done instead of pinning it for the process
     * (the r14 ADVICE leak). */
-  /** Frontier size (ids) under which a worklist sweep switches to the
-    * broadcast form — 1M longs ≈ 8 MB, the standard broadcast budget.
-    * Above it a FULL synchronous sweep is the right plan anyway: a
-    * frontier that big touches most of the graph, and the plain keyed
-    * join beats three semi-join stages of bookkeeping. */
-  private val KCoreBroadcastFrontier = 1000000L
-
-  /** Bidirected-edge row count under which the whole H-iteration runs
-    * IN-PROCESS off the already-materialized edge cut (≈ 32 MB of long
-    * pairs at the default): per-sweep Spark latency (a lineage-cut job
-    * plus broadcast builds, ~0.3 s each however small the data) is the
-    * entire cost of a dimension-sized graph, and 16 sweeps of driver
-    * arithmetic on 65k edges take microseconds. The bound is MEASURED
-    * (the cut's own count), never assumed — graphs above it take the
-    * distributed worklist sweeps unchanged, and the local loop runs
-    * the identical integer H-update, so results are bit-equal
-    * (GraphSpec pins local ≡ distributed on the same graphs). */
-  private val KCoreLocalEdgeRows = 2000000L
-
   private[graft] def kCoreNumbersConverged(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int): (DataFrame, Int, Boolean) =
     kCoreNumbersConverged(edges, srcCol, dstCol, iters, KCoreLocalEdgeRows)
@@ -733,20 +733,14 @@ object Graph {
     * — how close each node's neighborhood is to a clique, THE local
     * density score community detection and spam/bot analysis read
     * first (a crawler ring has cc ≈ 1; a hub of unrelated links cc ≈
-    * 0). Composes [[triangleCounts]] with the degree relation: one
-    * extra groups-sized join, one exact integer product in the
-    * denominator, one IEEE division rounded to 6 decimals (degree-<2
-    * nodes emit 0 by convention — no division). Output: (id, deg,
-    * n_tri, cc6). */
-  def clusteringCoefficients(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    clusteringCoefficientsFromTriangles(
-      triangleCounts(edges, srcCol, dstCol), edges, srcCol, dstCol)
-
-  /** [[clusteringCoefficients]] over a PRECOMPUTED/staged
-    * [[triangleCounts]] relation — callers gating both the counts and
-    * the coefficients over one graph share the wedge join (the
-    * expensive half; the degree aggregation here is one groupBy). */
+    * 0). Composes a PRECOMPUTED/staged [[triangleCounts]] relation
+    * over the same edges with the degree relation — callers gating
+    * both the counts and the coefficients over one graph share the
+    * wedge join (the expensive half; the degree aggregation here is
+    * one groupBy). One extra groups-sized join, one exact integer
+    * product in the denominator, one IEEE division rounded to 6
+    * decimals (degree-<2 nodes emit 0 by convention — no division).
+    * Output: (id, deg, n_tri, cc6). */
   def clusteringCoefficientsFromTriangles(tri: DataFrame, edges: DataFrame,
       srcCol: String, dstCol: String): DataFrame =
     tri.join(degrees(undirect(edges, srcCol, dstCol)), "id")

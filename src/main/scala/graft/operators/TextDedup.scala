@@ -71,12 +71,6 @@ object TextDedup {
     * must not fire at sf0.01, and doesn't). */
   val MaxBucketSize = 1000
 
-  /** Candidate pairs from banded LSH: each signature splits into
-    * `Bands` bands of `RowsPerBand` rows; docs colliding on any whole
-    * band become a pair. The band bucket join is the only shuffle;
-    * buckets above `maxBucketSize` are dropped before the self-join
-    * (the count and the join shuffle on the same (band, bucket) key,
-    * so the guard adds no extra exchange of the big table). */
   /** (id, band, bucket) rows from a signature table: each signature
     * splits into `Bands` bands of `RowsPerBand` rows, hashed to a
     * bucket id. Shared by the batch self-join candidates below and the
@@ -88,6 +82,12 @@ object TextDedup {
         b => hash(slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand))))): _*)
       .toDF(idCol +: passthroughCols :+ "band" :+ "bucket": _*)
 
+  /** Candidate pairs from banded LSH: each signature splits into
+    * `Bands` bands of `RowsPerBand` rows; docs colliding on any whole
+    * band become a pair. The band bucket join is the only shuffle;
+    * buckets above `maxBucketSize` are dropped before the self-join
+    * (the count and the join shuffle on the same (band, bucket) key,
+    * so the guard adds no extra exchange of the big table). */
   def lshCandidates(sigs: DataFrame, idCol: String,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -111,34 +111,72 @@ object TextDedup {
       .distinct()
   }
 
-  /** Exact Jaccard for the given candidate pairs only. `shingleHashes`
-    * is the (id, h) exploded table; the corpus is first semi-joined down
-    * to docs that appear in any candidate pair. */
-  def verifyJaccard(shingleHashes: DataFrame, idCol: String,
-      candidates: DataFrame): DataFrame = {
-    val candDocs = candidates.select(col("d1").as(idCol))
-      .union(candidates.select(col("d2").as(idCol))).distinct()
-    verifyJaccardOnCandidates(
-      shingleHashes.join(candDocs, idCol, "left_semi"), idCol, candidates)
+  /** (id, h) rows of a words frame: the distinct n-word shingle
+    * hashes of its `_w` column, one native kernel call per doc. */
+  private def shingleHashes(words: DataFrame, idCol: String,
+      n: Int): DataFrame =
+    words.select(col(idCol),
+      explode(graft.functions.NativeText.shingleHashes(col("_w"), n)).as("h"))
+
+  /** The rows of `d` (keyed by `idCol`) whose doc is an endpoint of a
+    * (d1, d2) candidate pair — the semi-join every verify runs BEFORE
+    * it counts overlaps, so only candidate docs are shingled or
+    * self-joined. */
+  private def candidateDocs(d: DataFrame, idCol: String,
+      cands: DataFrame): DataFrame = {
+    val ids = cands.select(col("d1").as(idCol))
+      .union(cands.select(col("d2").as(idCol))).distinct()
+    d.join(ids, Seq(idCol), "left_semi")
   }
 
-  /** [[verifyJaccard]] body for an already-candidate-only shingle table
-    * (callers that can filter the corpus BEFORE shingling avoid
-    * re-deriving the full corpus's shingles in each verify subtree). */
+  /** Exact Jaccard for the given candidate pairs over an (id, h)
+    * distinct shingle table that callers have already cut down to the
+    * candidate docs (filtering the corpus BEFORE shingling spares each
+    * verify subtree from re-deriving the full corpus's shingles).
+    * Output: (d1, d2, jaccard). */
   def verifyJaccardOnCandidates(sh: DataFrame, idCol: String,
+      candidates: DataFrame): DataFrame =
+    candidateOverlaps(sh, idCol, candidates)
+      .select(col("d1"), col("d2"),
+        (col("c").cast("double") / (col("n1") + col("n2") - col("c")).cast("double"))
+          .as("jaccard"))
+
+  /** The exact overlap body shared by the Jaccard and containment
+    * verifies: (d1, d2, c, n1, n2) per candidate pair, with c the
+    * number of common shingles and n1, n2 the two docs' shingle counts.
+    * The shingle self-join on `h` counts every co-occurring doc pair of
+    * `sh`, then a semi-join keeps the candidates. */
+  private def candidateOverlaps(sh: DataFrame, idCol: String,
       candidates: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     val s1 = sh.toDF("d1", "h")
     val s2 = sh.toDF("d2", "h")
-    val inter = s1.join(s2, Seq("h")).where(col("d1") < col("d2"))
+    s1.join(s2, Seq("h")).where(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
       .join(candidates, Seq("d1", "d2"), "left_semi")
-    inter
       .join(sizes.toDF("d1", "n1"), "d1")
       .join(sizes.toDF("d2", "n2"), "d2")
-      .select(col("d1"), col("d2"),
-        (col("c").cast("double") / (col("n1") + col("n2") - col("c")).cast("double"))
-          .as("jaccard"))
+  }
+
+  /** The rarest-first ranked shingle relation (id, h, pos, n) both
+    * AllPairs candidate generators read: per-shingle document
+    * frequency joined back and ranked per doc by (df, h), plus the
+    * doc's shingle count. THRESHOLD-INDEPENDENT — the Jaccard and
+    * containment gates differ only in the prefix cut they apply on
+    * top, so callers running several set-similarity operators over one
+    * corpus stage THIS relation once (at 100 TB it is the stored
+    * rarest-first posting index) instead of re-paying the df
+    * aggregation and the per-doc rank window per operator. The rank
+    * and the whole-doc size use one doc-id partitioning — one
+    * exchange, two Window operators. */
+  def rankedShingles(sh: DataFrame, idCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+    val byDoc = Window.partitionBy(col(idCol))
+    sh.join(dfreq, "h")
+      .select(col(idCol), col("h"),
+        row_number().over(byDoc.orderBy(col("df"), col("h"))).as("pos"),
+        count(lit(1)).over(byDoc).as("n"))
   }
 
   /** EXACT n-gram Jaccard self-join via prefix filtering — the
@@ -160,6 +198,15 @@ object TextDedup {
     *     filter τ·n₂ ≤ n₁ ≤ n₂/τ, then exact verification
     *     ([[verifyJaccardOnCandidates]]) touches candidates only.
     *
+    * Inputs: `sh` is the (id, h) distinct shingle table and `ranked`
+    * its [[rankedShingles]] relation — both typically staged
+    * ([[graft.Staging]]; at 100 TB the shingle table is a stored
+    * index), so several exact operators share one corpus shingling.
+    * Verification semi-joins the SAME table instead of re-shingling
+    * candidate docs, so the corpus is tokenized exactly once across
+    * the whole family. The candidate pair list is the one eager cut,
+    * registered with the session ([[graft.Staging.registerPinned]]).
+    *
     * 100 TB shape: rarest-first ordering puts low-df shingles in the
     * prefixes, so inverted-index buckets are inherently tiny — hot
     * boilerplate shingles (the skew hazard of a naive shingle
@@ -169,89 +216,20 @@ object TextDedup {
     * shuffles once. Reference behavior context: the reference dedups
     * via content etags only (data_identifiers.py); this generalizes
     * its exact-dup semantics to exact set-similarity. */
-  /** [[jaccardSelfJoin]] over a PRECOMPUTED/staged (id, h) distinct
-    * shingle table — the form the gate family uses when several exact
-    * operators share one corpus shingling ([[graft.Staging]]; at
-    * 100 TB the shingle table is a stored index). Candidate
-    * verification semi-joins the SAME table instead of re-shingling
-    * candidate docs, so the corpus is tokenized exactly once across
-    * the whole family. */
-  /** The rarest-first ranked shingle relation (id, h, pos, n) both
-    * AllPairs candidate generators read: per-shingle document
-    * frequency joined back and ranked per doc by (df, h), plus the
-    * doc's shingle count. THRESHOLD-INDEPENDENT — the Jaccard and
-    * containment gates differ only in the prefix cut they apply on
-    * top, so callers running several set-similarity operators over one
-    * corpus stage THIS relation once (at 100 TB it is the stored
-    * rarest-first posting index) instead of re-paying the df
-    * aggregation and the per-doc rank window per operator. */
-  def rankedShingles(sh: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col(idCol))
-    sh.join(dfreq, "h")
-      .select(col(idCol), col("h"),
-        row_number().over(byDoc.orderBy(col("df"), col("h"))).as("pos"),
-        count(lit(1)).over(byDoc).as("n"))
-  }
-
   def jaccardSelfJoinFromShingles(sh: DataFrame, idCol: String,
-      threshold: Double, ranked: Option[DataFrame] = None): DataFrame = {
+      threshold: Double, ranked: DataFrame): DataFrame = {
     val cands = graft.Staging.registerPinned(sh.sparkSession,
-      Graph.cut(jaccardCandidatesFromRanked(
-        ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold)))
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
-    val shCand = sh.join(candDocs, Seq(idCol), "left_semi")
-    verifyJaccardOnCandidates(shCand, idCol, cands)
+      Graph.cut(jaccardCandidatesFromRanked(ranked, idCol, threshold)))
+    verifyJaccardOnCandidates(candidateDocs(sh, idCol, cands), idCol, cands)
       .where(col("jaccard") >= threshold)
   }
 
-  def jaccardSelfJoin(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withWords = docs.select(col(idCol), split(col(textCol), " ").as("_w"))
-    def shingleHashes(d: DataFrame): DataFrame = d
-      .select(col(idCol),
-        explode(graft.functions.NativeText.shingleHashes(
-          col("_w"), shingleSize)).as("h"))
-    // materialize the corpus × shingles explode ONCE for candidate
-    // generation: its two consumers are keyed differently (the df
-    // aggregate by shingle, the rank window by doc) so no layout lets
-    // them share an Exchange — unpersisted, each re-derives the
-    // widest intermediate of the whole pipeline from the scan. The
-    // eager cut on the (small) candidate pair list both
-    // materializes the only reader of the cache and cuts its lineage,
-    // so the shingle blocks are released immediately — no O(corpus)
-    // cache residue outlives this call (the Graph.scala discipline).
-    val sh = shingleHashes(withWords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands =
-      try graft.Staging.registerPinned(sh.sparkSession,
-        Graph.cut(jaccardCandidates(sh, idCol, threshold)))
-      finally sh.unpersist(false)
-    // re-shingle only candidate docs for the exact verify (same
-    // semi-join-first discipline as minhashNearDups)
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
-    val shCand = shingleHashes(withWords.join(candDocs, Seq(idCol), "left_semi"))
-    verifyJaccardOnCandidates(shCand, idCol, cands)
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** Prefix-filtered candidate pairs from an exploded (id, h) distinct
-    * shingle table — exact-recall superset of all pairs with Jaccard ≥
-    * `threshold` (see [[jaccardSelfJoin]] for the pigeonhole argument).
-    * Exposed separately so the pruning claim is testable: a spec
-    * asserts candidates ⊇ true pairs AND ≪ the all-pairs count. */
-  def jaccardCandidates(sh: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    jaccardCandidatesFromRanked(rankedShingles(sh, idCol), idCol, threshold)
-
-  /** [[jaccardCandidates]] over a PRECOMPUTED/staged
-    * [[rankedShingles]] relation (the rank and the whole-doc size use
-    * one doc-id partitioning — one exchange, two Window operators —
-    * and are threshold-independent, so several set-similarity gates
-    * share one build). */
+  /** Prefix-filtered candidate pairs over a [[rankedShingles]]
+    * relation — an exact-recall superset of all pairs with Jaccard ≥
+    * `threshold` (see [[jaccardSelfJoinFromShingles]] for the
+    * pigeonhole argument). Exposed separately so the pruning claim is
+    * testable: a spec asserts candidates ⊇ true pairs AND ≪ the
+    * all-pairs count. */
   def jaccardCandidatesFromRanked(ranked: DataFrame, idCol: String,
       threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
@@ -272,14 +250,15 @@ object TextDedup {
     * embedded in a longer one (quote farms, wrapper boilerplate,
     * truncated re-crawls) that Jaccard structurally misses — J of a
     * doc contained in one 3× its size is ≤ 1/3 no matter how complete
-    * the containment. Same AllPairs discipline as [[jaccardSelfJoin]],
-    * adapted: containment has NO size-ratio filter (any size pair can
-    * match), so the prefix-pigeonhole applies to the SMALLER side only
-    * — o ≥ ⌈τ·n_min⌉ forces a common shingle into the smaller doc's
+    * the containment. Same AllPairs discipline and the same staged
+    * inputs as [[jaccardSelfJoinFromShingles]], adapted: containment
+    * has NO size-ratio filter (any size pair can match), so the
+    * prefix-pigeonhole applies to the SMALLER side only — o ≥
+    * ⌈τ·n_min⌉ forces a common shingle into the smaller doc's
     * rarest-first prefix, while the larger doc contributes its FULL
     * shingle list to the join. Candidates = prefix(smaller) ⋈ full
     * (larger); exact verification re-counts overlap on candidate docs
-    * only.
+    * only. Output: (d1, d2, containment).
     *
     * 100 TB shape: the prefix side is rarest-first (tiny buckets); the
     * full side carries hot shingles, but a join bucket is
@@ -287,71 +266,24 @@ object TextDedup {
     * boilerplate hazard sits on the side that is almost never probed.
     * One shingle-keyed shuffle for df, one doc-keyed exchange shared
     * by the rank window and size count, same as Jaccard. */
-  /** [[containmentSelfJoin]] over a PRECOMPUTED/staged (id, h)
-    * distinct shingle table (see [[jaccardSelfJoinFromShingles]]). */
   def containmentSelfJoinFromShingles(sh: DataFrame, idCol: String,
-      threshold: Double, ranked: Option[DataFrame] = None): DataFrame = {
+      threshold: Double, ranked: DataFrame): DataFrame = {
     val cands = graft.Staging.registerPinned(sh.sparkSession,
-      Graph.cut(containmentCandidatesFromRanked(
-        ranked.getOrElse(rankedShingles(sh, idCol)), idCol, threshold)))
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
-    val shCand = sh.join(candDocs, Seq(idCol), "left_semi")
-    containmentVerify(shCand, idCol, cands, threshold)
-  }
-
-  private def containmentVerify(shCand: DataFrame, idCol: String,
-      cands: DataFrame, threshold: Double): DataFrame = {
-    val sizes = shCand.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val s1 = shCand.toDF("d1", "h")
-    val s2 = shCand.toDF("d2", "h")
-    s1.join(s2, Seq("h")).where(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("c"))
-      .join(cands, Seq("d1", "d2"), "left_semi")
-      .join(sizes.toDF("d1", "n1"), "d1")
-      .join(sizes.toDF("d2", "n2"), "d2")
+      Graph.cut(containmentCandidatesFromRanked(ranked, idCol, threshold)))
+    candidateOverlaps(candidateDocs(sh, idCol, cands), idCol, cands)
       .select(col("d1"), col("d2"),
         (col("c").cast("double") / least(col("n1"), col("n2")).cast("double"))
           .as("containment"))
       .where(col("containment") >= threshold)
   }
 
-  def containmentSelfJoin(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withWords = docs.select(col(idCol), split(col(textCol), " ").as("_w"))
-    def shingleHashes(d: DataFrame): DataFrame = d
-      .select(col(idCol),
-        explode(graft.functions.NativeText.shingleHashes(
-          col("_w"), shingleSize)).as("h"))
-    val sh = shingleHashes(withWords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands =
-      try graft.Staging.registerPinned(sh.sparkSession,
-        Graph.cut(containmentCandidates(sh, idCol, threshold)))
-      finally sh.unpersist(false)
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
-    // self-contained form: re-shingle the candidate docs (semi-join
-    // BEFORE the explode — the corpus is shingled once in the
-    // signature pass above, candidates only here)
-    val shCand = shingleHashes(withWords.join(candDocs, Seq(idCol), "left_semi"))
-    containmentVerify(shCand, idCol, cands, threshold)
-  }
-
   /** Prefix(smaller) ⋈ full(larger) candidate pairs for containment ≥
-    * `threshold` — exact-recall superset (pigeonhole on the smaller
-    * doc: o ≥ ⌈τ·n_min⌉ common shingles cannot all avoid a prefix of
-    * length n_min − ⌈τ·n_min⌉ + 1). Size-equal pairs are caught from
-    * whichever side's prefix shares a shingle with the other's full
-    * list; output is normalized to d1 < d2. */
-  def containmentCandidates(sh: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    containmentCandidatesFromRanked(rankedShingles(sh, idCol), idCol,
-      threshold)
-
-  /** [[containmentCandidates]] over a PRECOMPUTED/staged
-    * [[rankedShingles]] relation — see
-    * [[jaccardCandidatesFromRanked]]. */
+    * `threshold` over a [[rankedShingles]] relation — exact-recall
+    * superset (pigeonhole on the smaller doc: o ≥ ⌈τ·n_min⌉ common
+    * shingles cannot all avoid a prefix of length n_min − ⌈τ·n_min⌉ +
+    * 1). Size-equal pairs are caught from whichever side's prefix
+    * shares a shingle with the other's full list; output is normalized
+    * to d1 < d2. */
   def containmentCandidatesFromRanked(ranked: DataFrame, idCol: String,
       threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
@@ -374,9 +306,10 @@ object TextDedup {
     * document count. Catches passage-level duplication (boilerplate
     * headers, licenses, quotations) that whole-document near-dup
     * misses when the surrounding documents are dissimilar — the
-    * complement of [[minhashNearDups]]/[[jaccardSelfJoin]], which rank
-    * whole docs. Per-doc windows are DISTINCT ([[shingles]]), so
-    * the count IS the doc count without a countDistinct.
+    * complement of [[minhashNearDups]]/[[jaccardSelfJoinFromShingles]],
+    * which rank whole docs. Per-doc windows are DISTINCT
+    * ([[shingles]]), so the count IS the doc count without a
+    * countDistinct.
     *
     * 100 TB shape: one explode + one hash groupBy with map-side
     * partial aggregation — no joins, no windows; the same plan family
@@ -401,9 +334,8 @@ object TextDedup {
     * scale). */
   def duplicatedSpanHashes(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 10): DataFrame =
-    docs.select(col(idCol), split(col(textCol), " ").as("_w"))
-      .select(col(idCol),
-        explode(graft.functions.NativeText.shingleHashes(col("_w"), k)).as("h"))
+    shingleHashes(docs.select(col(idCol), split(col(textCol), " ").as("_w")),
+        idCol, k)
       .groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= 2)
 
@@ -418,8 +350,8 @@ object TextDedup {
     *
     * Shape: positional window hashes in ONE native digest pass per
     * window (the md5-based [[hash60]] so the oracle can replay the
-    * key; [[spanHashesSpec]] is the parity-pinned Column twin — the
-    * HOF form re-reads k array slots and re-hashes a built string per
+    * key; a parity spec pins the kernel against its HOF Column form,
+    * which re-reads k array slots and re-hashes a built string per
     * window, measured ~2× the whole query) → hash-grouped keeper
     * election → covered-index explode (k× the duplicated-window count
     * only, not the corpus) → per-doc index set → one index-filter
@@ -435,8 +367,8 @@ object TextDedup {
     // re-derive the widest intermediate of the pipeline from the scan.
     // The eager cut on the (small) per-doc coverage sets
     // materializes both cache readers and cuts lineage, so the window
-    // blocks are released before the final corpus pass — the same
-    // single-derivation/zero-residue discipline as jaccardSelfJoin.
+    // blocks are released before the final corpus pass: one
+    // derivation, no cache residue.
     val wins = withW.select(col(idCol), posexplode(
         graft.functions.NativeText.spanHashes(col("_w"), k)).as(Seq("_pos", "_h")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -458,20 +390,6 @@ object TextDedup {
             filter(col("_w"), (wd, i) => !array_contains(col("_cov"), i)),
             " ")).as(textCol): _*)
   }
-
-  /** The Column formulation of the native positional window hash —
-    * retained as [[graft.functions.NativeText.spanHashes]]'s
-    * executable specification (the kernel-parity pattern): hash60 of
-    * each space-joined k-window, empty for docs shorter than k
-    * (sequence(0, n) DESCENDS for negative n — the guard matters). */
-  def spanHashesSpec(w: Column, k: Int): Column =
-    when(size(w) < k,
-        array().cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)))
-      .otherwise(transform(
-        sequence(lit(0), size(w) - k),
-        i => hash60(concat_ws(" ",
-          (0 until k).map(j => element_at(w, i + j + 1)): _*))))
 
   /** End-to-end MinHash near-dup: shingle → sign → band → verify.
     * With 16×4 bands, a pair at Jaccard 0.8 is missed with probability
@@ -514,23 +432,17 @@ object TextDedup {
   private def nearDupsFromSigs(withWords: DataFrame, sigs: DataFrame,
       idCol: String, shingleSize: Int, threshold: Double): DataFrame = {
     // eager cut on the (small) candidate pair list: its
-    // THREE consumers below (the two candDocs projections and the
-    // verify semi-join) would each re-run the full band self-join —
-    // the jaccardSelfJoin discipline (duplicate-sized residue only)
+    // THREE consumers below (the two candidate-doc projections and the
+    // verify semi-join) would each re-run the full band self-join
+    // (duplicate-sized residue only)
     val cands = graft.Staging.registerPinned(sigs.sparkSession,
       Graph.cut(lshCandidates(sigs, idCol)))
-    def shingleHashes(d: DataFrame): DataFrame = d
-      .select(col(idCol),
-        explode(graft.functions.NativeText.shingleHashes(
-          col("_w"), shingleSize)).as("h"))
     // verification re-shingles only the candidate docs: the semi-join
     // runs BEFORE the per-doc shingle-hash kernel, so the
     // full corpus is shingled exactly once (the signature pass) instead
     // of once per verify subtree
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
-    val shCand = shingleHashes(
-      withWords.join(candDocs, Seq(idCol), "left_semi"))
+    val shCand = shingleHashes(candidateDocs(withWords, idCol, cands),
+      idCol, shingleSize)
     verifyJaccardOnCandidates(shCand, idCol, cands)
       .where(col("jaccard") >= threshold)
   }
@@ -560,8 +472,8 @@ object TextDedup {
     val deltaSigs = deltaWords.select(col(idCol),
         graft.functions.NativeText.minhashSig(col("_w"), shingleSize).as("sig"))
       .where(size(col("sig")) > 0)
-    incrementalFromSigs(baseDocs, baseSigs, deltaDocs, deltaSigs, idCol,
-      textCol, shingleSize, threshold, maxBucketSize)
+    incrementalNearDupsFromSigs(baseDocs, baseSigs, deltaDocs, deltaSigs,
+      idCol, textCol, shingleSize, threshold, maxBucketSize)
   }
 
   /** [[incrementalNearDups]] with the DELTA's signatures also
@@ -572,14 +484,7 @@ object TextDedup {
   def incrementalNearDupsFromSigs(baseDocs: DataFrame, baseSigs: DataFrame,
       deltaDocs: DataFrame, deltaSigs: DataFrame, idCol: String,
       textCol: String, shingleSize: Int = 3, threshold: Double = 0.5,
-      maxBucketSize: Int = MaxBucketSize): DataFrame =
-    incrementalFromSigs(baseDocs, baseSigs, deltaDocs, deltaSigs, idCol,
-      textCol, shingleSize, threshold, maxBucketSize)
-
-  private def incrementalFromSigs(baseDocs: DataFrame, baseSigs: DataFrame,
-      deltaDocs: DataFrame, deltaSigs: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int, threshold: Double,
-      maxBucketSize: Int): DataFrame = {
+      maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val deltaWords = deltaDocs
       .select(col(idCol), split(col(textCol), " ").as("_w"))
     val deltaBands0 = bandBuckets(deltaSigs, idCol)
@@ -613,15 +518,11 @@ object TextDedup {
     // band joins run once
     val cands = graft.Staging.registerPinned(baseDocs.sparkSession,
       Graph.cut(cross.union(dd).distinct()))
-    val candDocs = cands.select(col("d1").as(idCol))
-      .union(cands.select(col("d2").as(idCol))).distinct()
     val allWords = baseDocs
       .select(col(idCol), split(col(textCol), " ").as("_w"))
       .union(deltaWords)
-    val shCand = allWords.join(candDocs, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        explode(graft.functions.NativeText.shingleHashes(
-          col("_w"), shingleSize)).as("h"))
+    val shCand = shingleHashes(candidateDocs(allWords, idCol, cands),
+      idCol, shingleSize)
     verifyJaccardOnCandidates(shCand, idCol, cands)
       .where(col("jaccard") >= threshold)
   }
@@ -632,30 +533,6 @@ object TextDedup {
   val SimBands = 4       // 4 bands of 15 bits ⇒ hamming ≤ 3 recall = 1
   val SimBandBits: Int = SimBits / SimBands
   val SimMaxHamming = 3
-
-  /** 60-bit SimHash per doc from its distinct words — aggregate
-    * formulation: one exploded aggregation with 60 conditional sums
-    * (single shuffle; each sum is partial-aggregable). Bit j of the
-    * result is 1 iff the sum of (±1 per word, + when word-hash bit j
-    * set) is positive. Retained as the executable specification the
-    * native kernel is parity-tested against (SimhashParity spec); the
-    * production path is [[simhashNearDups]] via
-    * [[graft.functions.NativeText.simhash60]], which computes the same
-    * value per-row with no explode and no shuffle. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val words = docs.select(col(idCol),
-        explode(array_distinct(split(col(textCol), " "))).as("w"))
-      .select(col(idCol), hash60(col("w")).as("h"))
-    val sums = (0 until SimBits).map { j =>
-      sum(when(shiftright(col("h"), j) % 2 === 1, 1).otherwise(-1)).as(s"s$j")
-    }
-    words.groupBy(col(idCol))
-      .agg(sums.head, sums.tail: _*)
-      .select(col(idCol),
-        (0 until SimBits).map(j =>
-          when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
 
   /** Near-dup pairs with hamming(simhash) ≤ maxHamming, found by band
     * blocking: with `SimBands` bands, any pair within hamming

@@ -170,14 +170,6 @@ object LlmQueries {
        |SELECT np.tau, n_pairs, n_docs FROM np JOIN inv USING (tau)
        |ORDER BY tau""".stripMargin
 
-  /** EXACT n-gram Jaccard near-dup (prefix-filtered AllPairs join,
-    * TextDedup.jaccardSelfJoin) at τ = 0.4 — deliberately BELOW the LSH
-    * operating point: at low thresholds the 16×4 band curve's recall
-    * decays (miss prob (1-0.4⁴)¹⁶ ≈ 0.66), which is exactly where an
-    * exact algorithm is the right tool. The oracle is the same
-    * brute-force ground truth as the minhash gate, so the hash match
-    * proves EXACTNESS (recall = precision = 1), not just recall at a
-    * forgiving threshold. */
   /** The (doc_id, h) per-doc-distinct 3-shingle table over
     * `documents`, staged once per (session, dir) — the shared prefix
     * of the two EXACT set-similarity gates (Jaccard τ=0.4 and
@@ -203,26 +195,36 @@ object LlmQueries {
     }
   }
 
+  /** EXACT n-gram Jaccard near-dup (prefix-filtered AllPairs join,
+    * [[TextDedup.jaccardSelfJoinFromShingles]]) at τ = 0.4 —
+    * deliberately BELOW the LSH operating point: at low thresholds the
+    * 16×4 band curve's recall decays (miss prob (1-0.4⁴)¹⁶ ≈ 0.66),
+    * which is exactly where an
+    * exact algorithm is the right tool. The oracle is the same
+    * brute-force ground truth as the minhash gate, so the hash match
+    * proves EXACTNESS (recall = precision = 1), not just recall at a
+    * forgiving threshold. */
   def qDedupJaccard(s: SparkSession, dir: String): DataFrame =
     TextDedup.jaccardSelfJoinFromShingles(
         dedupShingles3(s, dir), "doc_id", threshold = 0.4,
-        ranked = Some(dedupRanked3(s, dir)))
+        ranked = dedupRanked3(s, dir))
       .orderBy(col("d1"), col("d2"))
 
   val qDedupJaccardSql: String =
     s"""WITH ${jaccardPairsCte("0.4")}
        |SELECT d1, d2, jaccard FROM pairs ORDER BY d1, d2""".stripMargin
 
-  /** EXACT n-gram CONTAINMENT near-dup (TextDedup.containmentSelfJoin)
-    * at τ = 0.6: flags subset-duplicates — a short doc embedded in a
-    * 3×-longer one has J ≤ 1/3 (invisible to every Jaccard-family
-    * gate) but containment ≈ 1. The oracle is brute-force ground
+  /** EXACT n-gram CONTAINMENT near-dup
+    * ([[TextDedup.containmentSelfJoinFromShingles]]) at τ = 0.6: flags
+    * subset-duplicates — a short doc embedded in a 3×-longer one has
+    * J ≤ 1/3 (invisible to every Jaccard-family gate) but
+    * containment ≈ 1. The oracle is brute-force ground
     * truth, so the hash match proves exactness of the
     * prefix(smaller) ⋈ full(larger) pruning. */
   def qDedupContain(s: SparkSession, dir: String): DataFrame =
     TextDedup.containmentSelfJoinFromShingles(
         dedupShingles3(s, dir), "doc_id", threshold = 0.6,
-        ranked = Some(dedupRanked3(s, dir)))
+        ranked = dedupRanked3(s, dir))
       .orderBy(col("d1"), col("d2"))
 
   val qDedupContainSql: String =
@@ -1952,7 +1954,7 @@ object LlmQueries {
        |FROM lp GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** Likelihood-gain pruning under the gate ([[Corpus.kn3PruneGains]]
+  /** Likelihood-gain pruning under the gate ([[Corpus.kn3PruneGainsFromJoined]]
     * — the Stolcke-pruning KL term, count-weighted): the trigrams
     * worth SHIPPING, gain ≥ 1 nat of training-corpus likelihood over
     * their bigram backoff. The oracle replays both interpolation
@@ -2640,7 +2642,7 @@ object LlmQueries {
   /** The shared CTE front of the Kneser-Ney oracles: bigram stream,
     * counts, context/continuation aggregates, and the 3-integer scalar
     * — the SQL transliteration of [[Corpus.knCounts]] + the derived
-    * relations of [[Corpus.knModel]]. */
+    * relations of [[Corpus.knJoinedRelation]]. */
   private def knCtes: String =
     """d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |b AS MATERIALIZED (
@@ -2670,10 +2672,10 @@ object LlmQueries {
       " / CAST(c1 AS DOUBLE)"
 
   /** Interpolated Kneser-Ney bigram model over the corpus
-    * ([[Corpus.knModel]] — the KenLM-family estimator behind CCNet's
-    * perplexity filter), restricted to bigram types seen ≥ 3 times
-    * (the emit bound; the full model at scale is the counts table
-    * itself plus two vocabulary-sized aggregates). Every formula
+    * ([[Corpus.knModelFromJoined]] — the KenLM-family estimator
+    * behind CCNet's perplexity filter), restricted to bigram types
+    * seen ≥ 3 times (the emit bound; the full model at scale is the
+    * counts table itself plus two vocabulary-sized aggregates). Every formula
     * input (cb, c1, nf, nb, n1, n2, bt) is an exact integer in both
     * engines, so p_kn agrees bit-for-bit before the 6-decimal
     * round. */
@@ -2841,9 +2843,10 @@ object LlmQueries {
     }
   }
 
-  /** Order-3 interpolated Kneser-Ney model ([[Corpus.kn3Model]] — the
-    * Chen & Goodman recursion KenLM runs at order 5), restricted to
-    * trigram types seen ≥ 3 times. The oracle replays BOTH
+  /** Order-3 interpolated Kneser-Ney model
+    * ([[Corpus.kn3ModelFromJoined]] — the Chen & Goodman recursion
+    * KenLM runs at order 5), restricted to trigram types seen ≥ 3
+    * times. The oracle replays BOTH
     * interpolation levels, both discounts, and the continuation
     * distribution from the same single counts table. */
   def qKn3Lm(s: SparkSession, dir: String): DataFrame =
@@ -2859,7 +2862,7 @@ object LlmQueries {
        |WHERE c3 >= 3 ORDER BY w1, w2, w3""".stripMargin
 
   /** Per-document order-3 KN perplexity
-    * ([[Corpus.kn3ScoreFromCounts]]) — the [[qKnScore]] contract one
+    * ([[Corpus.kn3ScoreFromJoined]]) — the [[qKnScore]] contract one
     * order up: docs under three tokens drop, ppl loosens to round 3. */
   def qKn3Score(s: SparkSession, dir: String): DataFrame =
     knScoreOrdered(
@@ -3789,7 +3792,7 @@ object LlmQueries {
     * because q_dedup_minhash's own gate proves set equality at
     * τ = 0.5 on this corpus (the 16×4 band-curve argument); a corpus
     * whose true pairs sat near the threshold would need the exact
-    * jaccardSelfJoin here instead. */
+    * [[TextDedup.jaccardSelfJoinFromShingles]] here instead. */
   def qDatasheet(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val base = docs.agg(count(lit(1)).as("nd"),

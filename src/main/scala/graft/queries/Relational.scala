@@ -1312,10 +1312,11 @@ object Relational {
       |ORDER BY event_id""".stripMargin
 
   /** Local clustering coefficients over the synthesized event graph
-    * ([[graft.operators.Graph.clusteringCoefficients]]): per node,
-    * degree, triangle count, and cc = 2·tri/(deg·(deg−1)) rounded to
-    * 6 — the neighborhood-density score next to q_triangles' counts.
-    * One extra groups-sized join on the triangle plan. */
+    * ([[graft.operators.Graph.clusteringCoefficientsFromTriangles]]):
+    * per node, degree, triangle count, and cc = 2·tri/(deg·(deg−1))
+    * rounded to 6 — the neighborhood-density score next to
+    * q_triangles' counts. One extra groups-sized join on the triangle
+    * plan. */
   def qClustering(s: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.clusteringCoefficientsFromTriangles(
         tri97Staged(s, dir), edges97(s, dir), "src", "dst")

@@ -96,7 +96,8 @@ class StreamingKn(spark: SparkSession, idCol: String, textCol: String,
   /** The maintained (w1, w2, cb) bigram-count store — the model's
     * whole sufficient statistic; re-score any corpus against the
     * CURRENT model with [[Corpus.knScoreFromCounts]] over it, or
-    * materialize the model itself with [[Corpus.knModel]]. */
+    * materialize the model itself with [[Corpus.knModelFromJoined]]
+    * over its [[Corpus.knJoinedRelation]]. */
   def countsTable: DataFrame = synchronized(counts)
 
   /** The (idCol, n_bigrams, avg_logprob, ppl, batch_id) admission log

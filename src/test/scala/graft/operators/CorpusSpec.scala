@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorpusSpec extends SparkSpec {
@@ -646,6 +647,12 @@ class CorpusSpec extends SparkSpec {
     assert(w(2L) === w(3L))
   }
 
+  /** The KN models of a counts table, read off its joined relation. */
+  private def knModel(counts: DataFrame): DataFrame =
+    Corpus.knModelFromJoined(Corpus.knJoinedRelation(counts))
+  private def kn3Model(counts: DataFrame): DataFrame =
+    Corpus.kn3ModelFromJoined(Corpus.kn3JoinedRelation(counts))
+
   test("knModel: hand-computed interpolated Kneser-Ney probabilities " +
       "on the textbook corpus; observed-mass sums stay below one") {
     val s = spark
@@ -654,9 +661,9 @@ class CorpusSpec extends SparkSpec {
     // D = 2/4 = 0.5; B = 3 types; every w2 has one left-context so
     // Pcont = 1/3 each; contexts: a→(c1=2, nf=1), b→(c1=2, nf=2)
     val docs = Seq((1L, Seq("a", "b", "a", "b", "c"))).toDF("doc_id", "w")
-    val m = Corpus.knModel(Corpus.knCounts(docs, "doc_id", "w"))
+    val m = knModel(Corpus.knCounts(docs, "doc_id", "w"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(6))
-      .toMap // keyed (w1, w2) — knModel's select pins the column order
+      .toMap // keyed (w1, w2) — knModelFromJoined's select pins the order
     assert(m.size === 3)
     assert(m(("a", "b")) === 0.833333) // (2 − .5 + .5·1·(1/3)) / 2
     assert(m(("b", "a")) === 0.416667) // (1 − .5 + .5·2·(1/3)) / 2
@@ -673,7 +680,7 @@ class CorpusSpec extends SparkSpec {
     // "x y x y x y x y": xy×4, yx×3 → n1 = n2 = 0 → D = 0.5
     val docs = Seq((1L, Seq("x", "y", "x", "y", "x", "y", "x", "y")))
       .toDF("doc_id", "w")
-    val m = Corpus.knModel(Corpus.knCounts(docs, "doc_id", "w"))
+    val m = knModel(Corpus.knCounts(docs, "doc_id", "w"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(6))
       .toMap
     assert(m(("x", "y")) === 0.9375)   // (4 − .5 + .5·1·(1/2)) / 4
@@ -700,7 +707,7 @@ class CorpusSpec extends SparkSpec {
     assert(cmap(merged) === cmap(recomputed))
     def mmap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(6)).toMap
-    assert(mmap(Corpus.knModel(merged)) === mmap(Corpus.knModel(recomputed)))
+    assert(mmap(knModel(merged)) === mmap(knModel(recomputed)))
   }
 
   test("cdcChunks: chunks partition the word range exactly; boundaries " +
@@ -769,7 +776,8 @@ class CorpusSpec extends SparkSpec {
       val mid = if (i % 2 == 0) "x y z" else s"a$i b$i c$i"
       (i, s"s$i $mid e$i".split(" ").toSeq)
     }.toDF("doc_id", "w")
-    val gains = Corpus.kn3PruneGains(Corpus.kn3Counts(docs, "doc_id", "w"))
+    val gains = Corpus.kn3PruneGainsFromJoined(
+        Corpus.kn3JoinedRelation(Corpus.kn3Counts(docs, "doc_id", "w")))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
         r.getDouble(4)).toMap
@@ -791,7 +799,7 @@ class CorpusSpec extends SparkSpec {
     // P3(a|ab) = (2 − 1/3 + (1/3)·1·0.5)/2 = 0.916667
     // P3(b|ba) = (1 − 1/3 + (1/3)·1·0.5)/1 = 0.833333
     val docs = Seq((1L, Seq("a", "b", "a", "b", "a"))).toDF("doc_id", "w")
-    val m = Corpus.kn3Model(Corpus.kn3Counts(docs, "doc_id", "w"))
+    val m = kn3Model(Corpus.kn3Counts(docs, "doc_id", "w"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
         r.getDouble(4)).toMap
@@ -823,9 +831,10 @@ class CorpusSpec extends SparkSpec {
     def mmap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
         r.getDouble(4)).toMap
-    assert(mmap(Corpus.kn3Model(merged)) === mmap(Corpus.kn3Model(recomputed)))
+    assert(mmap(kn3Model(merged)) === mmap(kn3Model(recomputed)))
     // the 2-token and 1-token docs never reach the stream
-    val scored = Corpus.kn3ScoreFromCounts(docs, "doc_id", "w", recomputed)
+    val scored = Corpus.kn3ScoreFromJoined(docs, "doc_id", "w",
+        Corpus.kn3JoinedRelation(recomputed))
       .collect().map(_.getLong(0)).toSet
     assert(!scored.contains(100L) && !scored.contains(101L))
   }

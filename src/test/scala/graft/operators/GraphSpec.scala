@@ -536,7 +536,8 @@ class GraphSpec extends SparkSpec {
     // K4 on 1..4 plus a pendant 4-5 and a path 5-6
     val edges = ((for { a <- 1L to 4L; b <- 1L to 4L if a < b }
       yield (a, b)) ++ Seq((4L, 5L), (5L, 6L))).toDF("s", "d")
-    val r = Graph.clusteringCoefficients(edges, "s", "d").collect()
+    val r = Graph.clusteringCoefficientsFromTriangles(
+        Graph.triangleCounts(edges, "s", "d"), edges, "s", "d").collect()
       .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2),
         x.getDouble(3))).toMap
     // 1..3: deg 3 inside K4, all 3 neighbor pairs linked -> cc 1.0

@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Higher-order-function Column formulations of the native text
-  * kernels — the executable specifications NativeTextSpec compares
-  * the kernels against. They run interpreted (`transform` is
-  * CodegenFallback) and re-read the words array n times per window,
-  * which is why the program itself calls the kernels. */
+/** Higher-order-function and aggregate formulations of the native
+  * text kernels — the executable specifications NativeTextSpec and
+  * LlmOpsSpec compare the kernels against. The Column forms run
+  * interpreted (`transform` is CodegenFallback) and re-read the words
+  * array n times per window, and the SimHash form shuffles a word
+  * explode, which is why the program itself calls the kernels. */
 object HofText {
 
   /** Distinct n-word shingles of a words column: `concat_ws(" ", …)`
@@ -25,4 +27,37 @@ object HofText {
     * kernel ([[graft.functions.NativeTextStats.textStats]]). */
   def fingerprintFromWords(w: Column, shingleSize: Int = 3): Column =
     array_min(transform(shinglesFromWords(w, shingleSize), TextDedup.hash60 _))
+
+  /** hash60 of each space-joined k-word window, in position order;
+    * empty for docs shorter than k (sequence(0, n) DESCENDS for
+    * negative n — the guard matters). The specification of
+    * [[graft.functions.NativeText.spanHashes]]. */
+  def spanHashesSpec(w: Column, k: Int): Column =
+    when(size(w) < k, array().cast(ArrayType(LongType)))
+      .otherwise(transform(
+        sequence(lit(0), size(w) - k),
+        i => TextDedup.hash60(concat_ws(" ",
+          (0 until k).map(j => element_at(w, i + j + 1)): _*))))
+
+  /** 60-bit SimHash per doc from its distinct words — aggregate
+    * formulation: one exploded aggregation with 60 conditional sums
+    * (each partial-aggregable). Bit j of the result is 1 iff the sum
+    * of (±1 per word, + when word-hash bit j set) is positive. The
+    * specification of [[graft.functions.NativeText.simhash60]], which
+    * [[TextDedup.simhashNearDups]] computes per row with no explode
+    * and no shuffle. Output: (idCol, simhash). */
+  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val words = docs.select(col(idCol),
+        explode(array_distinct(split(col(textCol), " "))).as("w"))
+      .select(col(idCol), TextDedup.hash60(col("w")).as("h"))
+    val sums = (0 until TextDedup.SimBits).map { j =>
+      sum(when(shiftright(col("h"), j) % 2 === 1, 1).otherwise(-1)).as(s"s$j")
+    }
+    words.groupBy(col(idCol))
+      .agg(sums.head, sums.tail: _*)
+      .select(col(idCol),
+        (0 until TextDedup.SimBits).map(j =>
+          when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+          .reduce(_ + _).as("simhash"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class LlmOpsSpec extends SparkSpec {
@@ -17,6 +18,17 @@ class LlmOpsSpec extends SparkSpec {
            "with flowers blooming and insects buzzing around the pond"),
       (4L, base),                                      // exact dup of 1
     ).toDF("doc_id", "text")
+  }
+
+  /** The (doc_id, h) distinct 3-shingle hash table of a docs frame. */
+  private def shingles3(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), explode(graft.functions.NativeText.shingleHashes(
+      split(col("text"), " "), 3)).as("h"))
+
+  private def jaccardPairs(d: DataFrame, threshold: Double): DataFrame = {
+    val sh = shingles3(d)
+    TextDedup.jaccardSelfJoinFromShingles(sh, "doc_id", threshold,
+      TextDedup.rankedShingles(sh, "doc_id"))
   }
 
   test("shingles: distinct 3-grams, per-row") {
@@ -72,7 +84,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("jaccardSelfJoin finds exactly the true pairs at τ=0.4 over 3-shingles") {
-    val pairs = TextDedup.jaccardSelfJoin(docs, "doc_id", "text", 3, 0.4)
+    val pairs = jaccardPairs(docs, 0.4)
       .select("d1", "d2", "jaccard").collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs.keySet === Set((1L, 2L), (1L, 4L), (2L, 4L)))
@@ -86,12 +98,11 @@ class LlmOpsSpec extends SparkSpec {
     // candidate generation on a persisted (id, h) table must feed BOTH
     // the document-frequency aggregate and the rank window from the
     // cache — the explode appears nowhere in the plan
-    val sh = docs.select(col("doc_id"),
-      explode(graft.functions.NativeText.shingleHashes(
-        split(col("text"), " "), 3)).as("h")).persist()
+    val sh = shingles3(docs).persist()
     try {
       sh.count()
-      val plan = TextDedup.jaccardCandidates(sh, "doc_id", 0.4)
+      val plan = TextDedup.jaccardCandidatesFromRanked(
+          TextDedup.rankedShingles(sh, "doc_id"), "doc_id", 0.4)
         .queryExecution.executedPlan.toString
       assert(plan.contains("InMemoryTableScan"),
         "candidate generation must read the persisted shingle table")
@@ -99,13 +110,18 @@ class LlmOpsSpec extends SparkSpec {
         "no consumer may re-derive the shingle explode:\n" + plan)
     } finally sh.unpersist(true)
     // end-to-end: after materialization the only cache residue is the
-    // localCheckpoint'ed candidate PAIR list (small), never the
-    // corpus × shingles table (the Graph.scala residue discipline)
+    // candidate PAIR list's cut (small), registered with the session —
+    // never the corpus × shingles table — and evicting the session
+    // frees it
+    graft.Staging.evictSession(s)
     val before = s.sparkContext.getPersistentRDDs.keySet
-    TextDedup.jaccardSelfJoin(docs, "doc_id", "text", 3, 0.4).collect()
-    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1,
-      s"only the checkpointed pair list may stay cached, found $leaked")
+    jaccardPairs(docs, 0.4).collect()
+    val residue = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size === 1,
+      s"exactly the pinned pair-list cut may stay cached, found $residue")
+    graft.Staging.evictSession(s)
+    assert(s.sparkContext.getPersistentRDDs.keySet === before,
+      "evicting the session must free the pair-list cut")
   }
 
   test("containmentSelfJoin catches the subset-dup Jaccard misses; " +
@@ -120,10 +136,11 @@ class LlmOpsSpec extends SparkSpec {
       (3L, "totally different words here about other topics entirely"),
     ).toDF("doc_id", "text")
     // Jaccard is blind: |small 3-shingles| = 4, |big| = 64+, J ≈ 0.06
-    val jac = TextDedup.jaccardSelfJoin(docs, "doc_id", "text", 3, 0.5)
-      .collect()
+    val jac = jaccardPairs(docs, 0.5).collect()
     assert(jac.isEmpty)
-    val cont = TextDedup.containmentSelfJoin(docs, "doc_id", "text", 3, 0.8)
+    val sh = shingles3(docs)
+    val cont = TextDedup.containmentSelfJoinFromShingles(sh, "doc_id", 0.8,
+        TextDedup.rankedShingles(sh, "doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(cont.toSeq === Seq((1L, 2L, 1.0)))
   }
@@ -136,10 +153,8 @@ class LlmOpsSpec extends SparkSpec {
       (2L, "a b c d e f g h extra words beyond the small doc here now"),
       (3L, "unrelated text entirely different from everything else here"),
     ).toDF("doc_id", "text")
-    val sh = docs
-      .select(col("doc_id"), explode(graft.functions.NativeText.shingleHashes(
-        split(col("text"), " "), 3)).as("h"))
-    val cands = TextDedup.containmentCandidates(sh, "doc_id", 0.8)
+    val cands = TextDedup.containmentCandidatesFromRanked(
+        TextDedup.rankedShingles(shingles3(docs), "doc_id"), "doc_id", 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // the true pair (2,10) — smaller id first after normalization —
     // must be present even though the ids order opposite to the sizes
@@ -337,7 +352,7 @@ class LlmOpsSpec extends SparkSpec {
     for (k <- Seq(1, 3, 10)) {
       val rows = df.select(
         graft.functions.NativeText.spanHashes(col("_w"), k).as("kern"),
-        TextDedup.spanHashesSpec(col("_w"), k).as("spec")).collect()
+        HofText.spanHashesSpec(col("_w"), k).as("spec")).collect()
       rows.foreach { r =>
         assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"k=$k row $r")
       }
@@ -372,7 +387,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("simhash: identical docs have hamming 0; near-dups small; unrelated far") {
-    val h = TextDedup.simhash(docs, "doc_id", "text")
+    val h = HofText.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(h(a) ^ h(b))
     assert(ham(1L, 4L) === 0)

@@ -40,7 +40,7 @@ class NativeTextSpec extends SparkSpec {
     import s.implicits._
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val agg = TextDedup.simhash(docs, "doc_id", "text")
+    val agg = HofText.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kernel = docs.select(col("doc_id"),
         NativeText.simhash60(split(col("text"), " ")).as("h"))
