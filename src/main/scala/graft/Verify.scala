@@ -45,6 +45,12 @@ object Verify {
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    // the fixture and core count this dir was written from:
+    // tools/check.py takes its oracle fixture from here, so an output
+    // is never checked against another scale's tables
+    val absSf = Paths.get(sfDir).toAbsolutePath.normalize.toString
+    Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
+      s"""{"sf_dir": ${q(absSf)}, "cpus": ${Session.cpus}}""")
     val ran = SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }
     println(s"[verify] ${ran - errors.size}/$ran queries wrote results; " +
       s"${errors.size} failed (see $outDir/errors.json)")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
@@ -19,7 +18,7 @@ import org.apache.spark.sql.types._
   * this transparently for eligible equi-joins; this is the explicit,
   * composable form — usable as a standalone approximate-membership
   * operator (e.g. a decontamination prefilter) and inspectable in the
-  * plan (`might_contain` in a Filter under the big side's Exchange).
+  * plan (`BloomKernel.contains` in a Filter under the big side's Exchange).
   *
   * Hashing: two independent 64-bit values from the key via splitmix64
   * finalization (h1 = mix(key), h2 = mix(key ^ GOLDEN) | 1), then the
@@ -40,12 +39,11 @@ object Bloom {
     * definitely absent). Codegen'd — runs inside the scan's
     * WholeStageCodegen span. */
   def mightContain(bloom: Column, key: Column, numHashes: Int): Column =
-    GraftSqlBridge.column(MightContainExpr(
-      GraftSqlBridge.expression(bloom), GraftSqlBridge.expression(key),
-      numHashes))
+    Kernels.mightContain(Seq(bloom, key), numHashes)
 }
 
-/** Static kernel shared by the interpreted and generated paths. */
+/** The static kernel: the build aggregate sets bits, the `might_contain`
+  * probe ([[Kernels.mightContain]]) tests them. */
 object BloomKernel {
   private final val GOLDEN = 0x9e3779b97f4a7c15L
 
@@ -148,22 +146,3 @@ case class BloomBuildAgg(
     copy(child = newChildren.head)
 }
 
-case class MightContainExpr(left: Expression, right: Expression, numHashes: Int)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "might_contain needs (binary bloom, bigint key)")
-    }
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "might_contain"
-  protected override def nullSafeEval(bloom: Any, key: Any): Any =
-    BloomKernel.contains(bloom.asInstanceOf[Array[Byte]],
-      key.asInstanceOf[Long], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, k) =>
-      s"${ev.value} = graft.functions.BloomKernel.contains($b, $k, $numHashes);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : MightContainExpr = copy(left = newLeft, right = newRight)
-}

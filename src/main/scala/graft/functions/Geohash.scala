@@ -1,16 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Standard geohash encoding (Niemeyer base-32: bits alternate
-  * lon, lat from the high bit; 5 bits per character) as a codegen
-  * expression, plus the driver-side bbox covering-set used by the
+  * lon, lat from the high bit; 5 bits per character) as a native
+  * kernel, plus the driver-side bbox covering-set used by the
   * [[graft.plans.GeohashPruning]] optimizer rule — SURVEY §7.3's
   * "geohash partition-pruning rule for geo bounding boxes" made real:
   * partition the lake by `ghash<p> = geohash(lat, lon, p)` and a
@@ -18,16 +13,14 @@ import org.apache.spark.unsafe.types.UTF8String
 object Geohash {
 
   def geohash(lat: Column, lon: Column, precision: Int): Column =
-    GraftSqlBridge.column(GeohashExpr(
-      GraftSqlBridge.expression(lat), GraftSqlBridge.expression(lon),
-      precision))
+    Kernels.geohash(Seq(lat, lon), precision)
 
   /** All geohash cells of `precision` intersecting the bbox — the
     * partition-pruning IN-list. Sound by quantization monotonicity:
     * every point inside the box hashes into one of these cells.
     * Size is (lonCells × latCells); callers cap it (a box spanning
     * the planet at high precision is not worth an IN-list).
-    * Precision is capped at 12 like [[GeohashExpr]]: at 13+ the lon
+    * Precision is capped at 12 like [[geohash]]: at 13+ the lon
     * cell index exceeds Int and the 64-bit interleave accumulator
     * overflows, which would yield a garbage cover. */
   def cover(minLat: Double, maxLat: Double, minLon: Double,
@@ -92,23 +85,3 @@ object GeohashKernel {
   }
 }
 
-case class GeohashExpr(left: Expression, right: Expression, precision: Int)
-    extends BinaryExpression {
-  require(precision >= 1 && precision <= 12, "precision in [1,12]")
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (DoubleType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "geohash needs (double lat, double lon)")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "geohash"
-  protected override def nullSafeEval(lat: Any, lon: Any): Any =
-    GeohashKernel.encode(lat.asInstanceOf[Double],
-      lon.asInstanceOf[Double], precision)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.GeohashKernel.encode($a, $b, $precision);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : GeohashExpr = copy(left = newLeft, right = newRight)
-}

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The graft session extensions: the native SQL functions plus the
   * planner strategies (TopKStrategy, CodegenBarrierStrategy) and
@@ -21,7 +20,7 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Either way, `spark.sql("SELECT minhash_sig(split(text, ' '), 3)
   * ...")` plans the same Catalyst expression the DataFrame API uses —
-  * the SQL surface and the Column surface share one implementation.
+  * both build a call of the one declared [[Kernel]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -41,52 +40,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
 
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  /** (name, info, builder) for every SQL-exposed native expression. */
-  val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("minhash_sig",
-      new ExpressionInfo(classOf[MinhashSigExpr].getName, "minhash_sig"),
-      (es: Seq[Expression]) => MinhashSigExpr(es.head,
-        if (es.length > 1) intLit(es(1), "shingle size") else 3)),
-    ("simhash60",
-      new ExpressionInfo(classOf[Simhash60Expr].getName, "simhash60"),
-      (es: Seq[Expression]) => Simhash60Expr(es.head)),
-    ("repetition_stats",
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "repetition_stats"),
-      (es: Seq[Expression]) => RepetitionStatsExpr(es.head)),
-    ("dot_product",
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      (es: Seq[Expression]) => DotProductExpr(es(0), es(1))),
-    ("shingle_hashes",
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName, "shingle_hashes"),
-      (es: Seq[Expression]) => ShingleHashesExpr(es.head,
-        if (es.length > 1) intLit(es(1), "shingle size") else 3)),
-    ("sci_parse",
-      new ExpressionInfo(classOf[SciParseExpr].getName, "sci_parse"),
-      (es: Seq[Expression]) => SciParseExpr(es.head)),
-    ("date_shape",
-      new ExpressionInfo(classOf[DateShapeExpr].getName, "date_shape"),
-      (es: Seq[Expression]) => DateShapeExpr(es.head)),
-    ("geohash",
-      new ExpressionInfo(classOf[GeohashExpr].getName, "geohash"),
-      (es: Seq[Expression]) => GeohashExpr(es(0), es(1),
-        if (es.length > 2) intLit(es(2), "precision") else 9)),
-    ("might_contain",
-      new ExpressionInfo(classOf[MightContainExpr].getName, "might_contain"),
-      (es: Seq[Expression]) => MightContainExpr(es(0), es(1),
-        if (es.length > 2) intLit(es(2), "numHashes") else 5)),
-    ("int8_quantize",
-      new ExpressionInfo(classOf[Int8QuantizeExpr].getName, "int8_quantize"),
-      (es: Seq[Expression]) => Int8QuantizeExpr(es.head)),
-    ("int8_dot",
-      new ExpressionInfo(classOf[Int8DotExpr].getName, "int8_dot"),
-      (es: Seq[Expression]) => Int8DotExpr(es(0), es(1))),
-  )
+  /** (name, info, builder) for every SQL-exposed native kernel. */
+  val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(Kernels.minhashSig, Kernels.simhash60, Kernels.repetitionStats,
+      Kernels.dotProduct, Kernels.shingleHashes, Kernels.sciParse,
+      Kernels.dateShape, Kernels.geohash, Kernels.mightContain,
+      Kernels.int8Quantize, Kernels.int8Dot).map(_.sqlFunction)
 
   /** Register into an existing session's function registry. */
   def register(spark: SparkSession): Unit =

@@ -25,6 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * kernels Spark's own trim/lower expressions call), so
   * `mapFields(data, keys)(k)` ≡ `lower(trim(element_at(data, k)))`,
   * parity-pinned in EnrichSpec.
+  *
+  * Hand-written rather than a declared [[Kernel]], like
+  * [[StructScoreExpr]]: the key→slot table is lazy per-expression
+  * state that the generated code reaches through a reference object.
   */
 case class MapFieldsExpr(child: Expression, keys: Seq[String],
     normalize: Boolean) extends UnaryExpression {
@@ -104,7 +108,9 @@ object MapFields {
 
 /** Σ weight(field) over non-null struct fields: the ~40-branch
   * when/isNotNull fold of the enrich verbatim score as a single pass
-  * (parity-pinned in EnrichSpec against the fold form). */
+  * (parity-pinned in EnrichSpec against the fold form). Its field
+  * slots are lazy per-expression state, and a null struct scores 0
+  * rather than null. */
 case class StructScoreExpr(child: Expression, weights: Seq[(String, Int)])
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -128,7 +134,7 @@ case class StructScoreExpr(child: Expression, weights: Seq[(String, Int)])
 
   def score(row: org.apache.spark.sql.catalyst.InternalRow): Int = {
     // a null struct scores 0 — every field of it "is null", exactly the
-    // when/isNotNull fold's result (mirrors DecimalExponentExpr's
+    // when/isNotNull fold's result (mirrors decimal_exponent's
     // null→0 contract rather than crashing or leaking a fake null)
     if (row == null) return 0
     var total = 0

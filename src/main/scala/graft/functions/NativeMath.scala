@@ -1,12 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Native numeric kernels for the similarity family (SURVEY §2.11).
   *
@@ -20,8 +15,7 @@ import org.apache.spark.sql.types._
 object NativeMath {
 
   def dotProduct(a: Column, b: Column): Column =
-    GraftSqlBridge.column(DotProductExpr(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+    Kernels.dotProduct(Seq(a, b))
 
   /** Symmetric per-vector int8 quantization: q_i = floor(e_i/s + 0.5)
     * with s = max|e_i|/127 (zero vector → all zeros). The 100 TB ANN
@@ -30,13 +24,12 @@ object NativeMath {
     * order-independent, so the DuckDB oracle replays them bit-for-bit
     * with no summation-order caveat at all. */
   def int8Quantize(a: Column): Column =
-    GraftSqlBridge.column(Int8QuantizeExpr(GraftSqlBridge.expression(a)))
+    Kernels.int8Quantize(Seq(a))
 
   /** Exact integer dot product of two quantized vectors (array<byte>),
     * accumulated in a long. */
   def int8Dot(a: Column, b: Column): Column =
-    GraftSqlBridge.column(Int8DotExpr(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+    Kernels.int8Dot(Seq(a, b))
 
   /** Product-quantization encode: the vector is split into `m`
     * contiguous subspaces and each is assigned its nearest codebook
@@ -46,170 +39,19 @@ object NativeMath {
     * `codebook` is a flattened array<double> literal laid out
     * [m][k][sub] (size m·k·sub). */
   def pqEncode(vec: Column, codebook: Column, m: Int, k: Int): Column =
-    GraftSqlBridge.column(PqEncodeExpr(
-      GraftSqlBridge.expression(vec), GraftSqlBridge.expression(codebook), m, k))
+    Kernels.pqEncode(Seq(vec, codebook), m, k)
 
   /** Per-query asymmetric-distance table: t[i·k + j] = |c_ij|² − 2·q_i·c_ij
     * for subspace i, code j — the constant-per-query lookup table ADC
     * scoring reads. Same layout and fold order as [[pqEncode]]. */
   def pqDistTable(vec: Column, codebook: Column, m: Int, k: Int): Column =
-    GraftSqlBridge.column(PqDistTableExpr(
-      GraftSqlBridge.expression(vec), GraftSqlBridge.expression(codebook), m, k))
+    Kernels.pqDistTable(Seq(vec, codebook), m, k)
 
   /** ADC score: Σ over subspaces of table[i·k + code_i], folded in
     * subspace order (the DuckDB oracle replays the same explicit
     * left-to-right sum). */
   def pqAdc(codes: Column, table: Column, k: Int): Column =
-    GraftSqlBridge.column(PqAdcExpr(
-      GraftSqlBridge.expression(codes), GraftSqlBridge.expression(table), k))
-}
-
-case class PqEncodeExpr(left: Expression, right: Expression, m: Int, k: Int)
-    extends BinaryExpression {
-  private def vecOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (vecOk(left.dataType) && right.dataType.isInstanceOf[ArrayType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("pq_encode needs (array<float|double>, array<double>)")
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    MathKernel.pqEncode(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      m, k, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.MathKernel.pqEncode($a, $b, $m, $k, $isFloat);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : PqEncodeExpr = copy(left = newLeft, right = newRight)
-}
-
-case class PqDistTableExpr(left: Expression, right: Expression, m: Int, k: Int)
-    extends BinaryExpression {
-  private def vecOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (vecOk(left.dataType) && right.dataType.isInstanceOf[ArrayType])
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("pq_dist_table needs (array<float|double>, array<double>)")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_dist_table"
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    MathKernel.pqDistTable(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      m, k, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.MathKernel.pqDistTable($a, $b, $m, $k, $isFloat);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : PqDistTableExpr = copy(left = newLeft, right = newRight)
-}
-
-case class PqAdcExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "pq_adc needs (array<byte>, array<double>)")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    MathKernel.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.MathKernel.pqAdc($a, $b, $k);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : PqAdcExpr = copy(left = newLeft, right = newRight)
-}
-
-case class Int8QuantizeExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"int8_quantize needs array<float|double>, got ${child.dataType.catalogString}")
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def prettyName: String = "int8_quantize"
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  protected override def nullSafeEval(a: Any): Any =
-    MathKernel.int8Quantize(a.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.MathKernel.int8Quantize($a, $isFloat);")
-  override protected def withNewChildInternal(newChild: Expression): Int8QuantizeExpr =
-    copy(child = newChild)
-}
-
-case class Int8DotExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(ByteType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"int8_dot needs array<byte> operands, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "int8_dot"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    MathKernel.int8Dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.MathKernel.int8Dot($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : Int8DotExpr = copy(left = newLeft, right = newRight)
-}
-
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product needs array<float|double> operands, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    MathKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.MathKernel.dot($a, $b, ${isFloat(left)}, ${isFloat(right)});")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : DotProductExpr = copy(left = newLeft, right = newRight)
+    Kernels.pqAdc(Seq(codes, table), k)
 }
 
 object MathKernel {

@@ -10,22 +10,25 @@ import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the text-dedup hot path (SURVEY
-  * §2.11: custom `Expression` with `doGenCode` where built-ins can't
-  * express the semantics efficiently).
+/** Native kernels for the text-dedup, quality and enrichment paths
+  * (SURVEY §2.11: native code where built-ins can't express the
+  * semantics efficiently).
   *
-  * Both expressions compute a whole per-document summary in ONE pass
-  * over the document's words array, replacing a
-  * shingle-explode → 64-min-aggregate shuffle (MinHash) and a
-  * word-explode → 60-conditional-sum shuffle (SimHash) with per-row
-  * work — at 100 TB that removes the two widest intermediate tables in
-  * the dedup family (corpus × shingles rows) entirely.
+  * Each kernel computes a whole per-row summary in ONE pass over the
+  * row's value. MinHash and SimHash, for instance, replace a
+  * shingle-explode → 64-min-aggregate shuffle and a word-explode →
+  * 60-conditional-sum shuffle with per-row work — at 100 TB that
+  * removes the two widest intermediate tables in the dedup family
+  * (corpus × shingles rows) entirely.
   *
-  * Codegen strategy: `doGenCode` emits a single static call into the
-  * kernel object. The kernel is plain JVM code (tight primitive loops,
-  * no megamorphic dispatch), so HotSpot JITs it like any hand-written
-  * hash loop; the expression itself stays codegen-compatible, so the
-  * enclosing Project keeps whole-stage fusion.
+  * Binding: each Column function below calls a [[Kernel]] declared in
+  * [[Kernels]], which binds through Catalyst's `StaticInvoke`, so the
+  * generated code is one static call into [[MinhashKernel]]. The
+  * kernel is plain JVM code (tight primitive loops, no megamorphic
+  * dispatch), so HotSpot JITs it like any hand-written hash loop, and
+  * the enclosing Project keeps whole-stage fusion. `shapedDate` is the
+  * one hand-written expression ([[ShapedDateExpr]]): it resolves the
+  * session time zone, and its kernel returns a boxed Long.
   */
 object NativeText {
 
@@ -38,14 +41,14 @@ object NativeText {
     * so no distinct step is needed (min over a multiset equals min over
     * its support set). */
   def minhashSig(words: Column, n: Int): Column =
-    GraftSqlBridge.column(MinhashSigExpr(GraftSqlBridge.expression(words), n))
+    Kernels.minhashSig(Seq(words), n)
 
   /** 60-bit SimHash over the DISTINCT words of `words`, bit-identical
     * to the SQL formulation the DuckDB oracle replays: per distinct
     * word h = first 15 hex digits of md5 (= top 60 bits of the
     * digest), bit j of the result set iff Σ(±1 by bit j of h) > 0. */
   def simhash60(words: Column): Column =
-    GraftSqlBridge.column(Simhash60Expr(GraftSqlBridge.expression(words)))
+    Kernels.simhash60(Seq(words))
 
   /** Feature-hashed document vector (the hashing trick, Weinberger et
     * al., ICML'09): token counts folded into a fixed `dim`-bucket
@@ -55,7 +58,7 @@ object NativeText {
     * order-independent-exact. The fixed-dim output plugs directly into
     * the embedding operators (cosine near-dup, ANN). */
   def featureHash(words: Column, dim: Int): Column =
-    GraftSqlBridge.column(FeatureHashExpr(GraftSqlBridge.expression(words), dim))
+    Kernels.featureHash(Seq(words), dim)
 
   /** Distinct n-word shingle hashes of `words` — the join key column
     * for shingle-overlap operators (Jaccard verify, decontamination).
@@ -65,7 +68,7 @@ object NativeText {
     * hash-keyed candidate join here — while never materializing a
     * shingle string or running an interpreted HOF. */
   def shingleHashes(words: Column, n: Int): Column =
-    GraftSqlBridge.column(ShingleHashesExpr(GraftSqlBridge.expression(words), n))
+    Kernels.shingleHashes(Seq(words), n)
 
   /** Distinct n-word shingle STRINGS of `words`: each window's words
     * joined by " " with null elements skipped (`concat_ws`
@@ -76,7 +79,7 @@ object NativeText {
     * native pass per row where that formulation runs an interpreted
     * lambda (NativeTextSpec pins the parity on both eval paths). */
   def shingles(words: Column, n: Int): Column =
-    GraftSqlBridge.column(ShinglesExpr(GraftSqlBridge.expression(words), n))
+    Kernels.shingles(Seq(words), n)
 
   /** POSITIONAL k-word window hashes (one per window start, order
     * preserved, NOT distinct — posexplode recovers positions). The
@@ -86,7 +89,7 @@ object NativeText {
     * scrub's keeper election depends on that. One digest pass per
     * window, no window strings materialized, no interpreted HOF. */
   def spanHashes(words: Column, n: Int): Column =
-    GraftSqlBridge.column(SpanHashesExpr(GraftSqlBridge.expression(words), n))
+    Kernels.spanHashes(Seq(words), n)
 
   /** Scientific-name parse (genus, epithet) — the native form of
     * Grabbers.parseSciName: whitespace split, plain-word genus,
@@ -94,7 +97,7 @@ object NativeText {
     * with no regex. Semantics are pinned to the Column formulation by
     * a parity spec over the golden cases. */
   def sciParse(sci: Column): Column =
-    GraftSqlBridge.column(SciParseExpr(GraftSqlBridge.expression(sci)))
+    Kernels.sciParse(Seq(sci))
 
   /** Date-format shape classifier for the permissive timestamp
     * cascade: returns which of the non-ISO format families the string
@@ -106,7 +109,7 @@ object NativeText {
     * untouched. A property spec pins the classifier to the exact
     * regexes it replaced. */
   def dateShape(c: Column): Column =
-    GraftSqlBridge.column(DateShapeExpr(GraftSqlBridge.expression(c)))
+    Kernels.dateShape(Seq(c))
 
   /** Native parse of the shaped (non-ISO) date families; null when the
     * value matches no family or fails its family's validation. */
@@ -119,12 +122,12 @@ object NativeText {
     * (~10 uses in one enrich projection); same java.util.regex engine,
     * same pattern, parity-pinned by EnrichSpec's golden table. */
   def firstNumber(c: Column): Column =
-    GraftSqlBridge.column(FirstNumberExpr(GraftSqlBridge.expression(c)))
+    Kernels.firstNumber(Seq(c))
 
   /** Fraction-digit count of a plain decimal string (getExponent);
     * 0 for non-decimals AND for null input, like the Column spec. */
   def decimalExponent(c: Column): Column =
-    GraftSqlBridge.column(DecimalExponentExpr(GraftSqlBridge.expression(c)))
+    Kernels.decimalExponent(Seq(c))
 
   /** Repetition statistics of one document (Gopher/C4-style quality
     * signals) in a single pass: word count, distinct-word count, the
@@ -134,7 +137,7 @@ object NativeText {
     * fraction, top-n-gram coverage) with plain double division so the
     * DuckDB oracle can replay the exact arithmetic. */
   def repetitionStats(words: Column): Column =
-    GraftSqlBridge.column(RepetitionStatsExpr(GraftSqlBridge.expression(words)))
+    Kernels.repetitionStats(Seq(words))
 
   /** Clipped BLEU n-gram match counts of one (candidate, reference)
     * pair in a single pass: c1 = Σ over distinct unigrams of
@@ -147,8 +150,7 @@ object NativeText {
     * never materializing the corpus × grams stream, its two shuffles,
     * or the gram-keyed join. */
   def bleuClip(cand: Column, ref: Column): Column =
-    GraftSqlBridge.column(BleuClipExpr(
-      GraftSqlBridge.expression(cand), GraftSqlBridge.expression(ref)))
+    Kernels.bleuClip(Seq(cand, ref))
 
   /** DSIR importance score (Xie et al., NeurIPS'23 "Data Selection
     * for Language Models via Importance Resampling"): the document's
@@ -158,166 +160,22 @@ object NativeText {
     * BIGINTs (the q_entropy discipline), so the score is an exact
     * integer and the oracle replay is order-independent. */
   def dsirScore(words: Column, llr: Column, dim: Int): Column =
-    GraftSqlBridge.column(DsirScoreExpr(
-      GraftSqlBridge.expression(words), GraftSqlBridge.expression(llr), dim))
+    Kernels.dsirScore(Seq(words, llr), dim)
 }
 
-case class MinhashSigExpr(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-  require(shingleN >= 1, "shingleN must be >= 1")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.sig(words.asInstanceOf[ArrayData], shingleN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.sig($c, $shingleN);")
-  override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
-    copy(child = newChild)
-}
-
-case class Simhash60Expr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash60 needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash60"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.simhash60(words.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.simhash60($c);")
-  override protected def withNewChildInternal(newChild: Expression): Simhash60Expr =
-    copy(child = newChild)
-}
-
-case class FeatureHashExpr(child: Expression, dim: Int)
-    extends UnaryExpression {
-  require(dim >= 1, "dim >= 1")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"feature_hash needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "feature_hash"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.featureHash(words.asInstanceOf[ArrayData], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.featureHash($c, $dim);")
-  override protected def withNewChildInternal(newChild: Expression): FeatureHashExpr =
-    copy(child = newChild)
-}
-
-case class DsirScoreExpr(left: Expression, right: Expression, dim: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(dim >= 1, "dim >= 1")
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"dsir_score needs (array<string>, array<bigint>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dsir_score"
-  protected override def nullSafeEval(words: Any, llr: Any): Any =
-    MinhashKernel.dsirScore(words.asInstanceOf[ArrayData],
-      llr.asInstanceOf[ArrayData], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, l) =>
-      s"${ev.value} = graft.functions.MinhashKernel.dsirScore($w, $l, $dim);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DsirScoreExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-case class BleuClipExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bleu_clip needs (array<string>, array<string>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("c1", LongType, nullable = false),
-    StructField("c2", LongType, nullable = false)))
-  override def prettyName: String = "bleu_clip"
-  protected override def nullSafeEval(ca: Any, ra: Any): Any =
-    MinhashKernel.bleuClip(ca.asInstanceOf[ArrayData],
-      ra.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r) =>
-      s"${ev.value} = graft.functions.MinhashKernel.bleuClip($c, $r);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): BleuClipExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-case class SciParseExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"sci_parse needs string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("genus", StringType, nullable = true),
-    StructField("epithet", StringType, nullable = true),
-    StructField("year", IntegerType, nullable = true),
-    StructField("basionym_authors", ArrayType(StringType), nullable = true),
-    StructField("combination_authors", ArrayType(StringType), nullable = true)))
-  override def prettyName: String = "sci_parse"
-  protected override def nullSafeEval(sci: Any): Any =
-    MinhashKernel.sciParse(sci.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.sciParse($c);")
-  override protected def withNewChildInternal(newChild: Expression): SciParseExpr =
-    copy(child = newChild)
-}
-
-case class DateShapeExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"date_shape needs string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "date_shape"
-  protected override def nullSafeEval(c: Any): Any =
-    MinhashKernel.dateShape(c.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.dateShape($c);")
-  override protected def withNewChildInternal(newChild: Expression): DateShapeExpr =
-    copy(child = newChild)
-}
-
-/** Parse the non-ISO date families (shapes 1-13 of [[DateShapeExpr]]) in
-  * one native call. The Column cascade this replaces
-  * (Grabbers.permissiveTimestampSpec — retained as the executable spec,
-  * parity-pinned in EnrichSpec) generated 15-20 KB of bytecode PER USE
-  * (two uses per enrich pipeline), blowing every fused span past the
-  * 8 KB JIT ceiling; this call is ~40 bytes. ISO forms stay on Spark's
-  * own `try_cast(… AS TIMESTAMP)` in front of it, so cast semantics are
-  * untouched. `runYear` pins dateutil's two-digit-year window at plan
-  * build; the session time zone arrives via the standard
-  * TimeZoneAwareExpression resolution. */
+/** Parse the non-ISO date families (shapes 1-13 of
+  * [[NativeText.dateShape]]) in one native call. The Column cascade
+  * this replaces (kept in the tests as `DateCascade.permissiveTimestamp`,
+  * the executable spec EnrichSpec pins parity against) generated
+  * 15-20 KB of bytecode PER USE (two uses per enrich pipeline), blowing
+  * every fused span past the 8 KB JIT ceiling; this call is ~40 bytes.
+  * ISO forms stay on Spark's own `try_cast(… AS TIMESTAMP)` in front of
+  * it, so cast semantics are untouched. `runYear` pins dateutil's
+  * two-digit-year window at plan build; the session time zone arrives
+  * via the standard TimeZoneAwareExpression resolution. Hand-written
+  * rather than a declared [[Kernel]]: the zone is resolved per
+  * expression, and the kernel's boxed `Long` result is null for an
+  * unparsed value, which a primitive binding would unbox. */
 case class ShapedDateExpr(child: Expression, runYear: Int,
     timeZoneId: Option[String] = None)
     extends UnaryExpression
@@ -343,139 +201,6 @@ case class ShapedDateExpr(child: Expression, runYear: Int,
       else { ${ev.value} = r.longValue(); }""")
   }
   override protected def withNewChildInternal(newChild: Expression): ShapedDateExpr =
-    copy(child = newChild)
-}
-
-case class DecimalExponentExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"decimal_exponent needs string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = IntegerType
-  // the Column spec returns 0 (not null) for null input — when(rlike)
-  // over a null condition falls to the otherwise(0) branch
-  override def nullable: Boolean = false
-  override def prettyName: String = "decimal_exponent"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0
-    else MinhashKernel.decimalExponent(v.asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      int ${ev.value} = ${childGen.isNull} ? 0 :
-        graft.functions.MinhashKernel.decimalExponent(${childGen.value});""",
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): DecimalExponentExpr =
-    copy(child = newChild)
-}
-
-case class FirstNumberExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"first_number needs string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "first_number"
-  protected override def nullSafeEval(c: Any): Any =
-    MinhashKernel.firstNumber(c.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.unsafe.types.UTF8String r =
-        graft.functions.MinhashKernel.firstNumber($c);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = r; }""")
-  override protected def withNewChildInternal(newChild: Expression): FirstNumberExpr =
-    copy(child = newChild)
-}
-
-case class ShingleHashesExpr(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-  require(shingleN >= 1, "shingleN must be >= 1")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.shingleHashes(words.asInstanceOf[ArrayData], shingleN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.shingleHashes($c, $shingleN);")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-    copy(child = newChild)
-}
-
-case class ShinglesExpr(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-  require(shingleN >= 1, "shingleN must be >= 1")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingles needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingles"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.shingles(words.asInstanceOf[ArrayData], shingleN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.shingles($c, $shingleN);")
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
-
-case class SpanHashesExpr(child: Expression, spanN: Int)
-    extends UnaryExpression {
-  require(spanN >= 1, "spanN must be >= 1")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"span_hashes needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "span_hashes"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.spanHashes(words.asInstanceOf[ArrayData], spanN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.spanHashes($c, $spanN);")
-  override protected def withNewChildInternal(newChild: Expression): SpanHashesExpr =
-    copy(child = newChild)
-}
-
-case class RepetitionStatsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"repetition_stats needs array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top2", LongType, nullable = false),
-    StructField("dup2", LongType, nullable = false),
-    StructField("top3", LongType, nullable = false)))
-  override def prettyName: String = "repetition_stats"
-  protected override def nullSafeEval(words: Any): Any =
-    MinhashKernel.repetitionStats(words.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashKernel.repetitionStats($c);")
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpr =
     copy(child = newChild)
 }
 
@@ -1366,12 +1091,14 @@ object MinhashKernel {
     flex(fs >> 1, (fs & 1) == 1)
   }
 
-  // --- decimal-exponent count (DecimalExponentExpr) ---------------------
+  // --- decimal-exponent count (decimal_exponent) ----------------------
 
   /** getExponent (conversions.py:246-251): count of fraction digits when
     * the trimmed string is `^[+-]?[0-9]*\.[0-9]*$`, else 0. Byte-exact
-    * restatement of the rlike + regexp_extract Column form. */
+    * restatement of the rlike + regexp_extract Column form; 0 for a
+    * null input, like the Column form. */
   def decimalExponent(c: UTF8String): Int = {
+    if (c == null) return 0
     val b = c.trim().getBytes
     var i = 0
     if (i < b.length && (b(i) == '+' || b(i) == '-')) i += 1
@@ -1384,7 +1111,7 @@ object MinhashKernel {
     j - fs
   }
 
-  // --- first-number extraction (FirstNumberExpr) ------------------------
+  // --- first-number extraction (first_number) -------------------------
 
   // grabFirstNumber's exact pattern (conversions.py:296-310); same
   // java.util.regex engine Spark's regexp_extract runs on
@@ -1833,8 +1560,8 @@ object MinhashKernel {
 
   /** Parse a string already classified by [[dateShape]]; null when it is
     * shape 0 or fails its family's calendar/clock validation. Semantics
-    * are pinned to Grabbers.permissiveTimestampSpec (the original
-    * try_to_timestamp cascade) by EnrichSpec's parity sweep.
+    * are pinned to the original try_to_timestamp cascade (the specs'
+    * DateCascade) by EnrichSpec's parity sweep.
     *
     * Weekday prefixes (r11) are stripped BEFORE classification; when
     * the remainder parses WITHOUT an explicit day, dateutil moves the

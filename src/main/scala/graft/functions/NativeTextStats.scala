@@ -20,6 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - distinct words by string (list_distinct semantics)
   *  - fingerprint    min over md5-60bit of the n-word shingle STRINGS
   *                   (the oracle replays md5, so the hash must stay)
+  *
+  * Both are hand-written rather than declared [[Kernel]]s: the stopword
+  * set and the language profiles are reference objects built once per
+  * expression and handed to the generated code.
   */
 object NativeTextStats {
 

@@ -22,9 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference object — ~30 bytes of generated code per use, constant
   * time per row, identical null-when-absent semantics.
   *
-  * The when-chain formulations remain in Grabbers as executable
-  * specifications; NativeTextSpec/EnrichSpec pin parity over the full
-  * key sets plus misses.
+  * The license when-chain remains as `Grabbers.licenseKeySpec`, the
+  * executable specification EnrichMediaSpec pins this probe against
+  * over the full key set plus misses and null.
+  *
+  * Hand-written rather than a declared [[Kernel]]: the table is a
+  * reference object built once per expression, and the plan string
+  * prints it by name and size rather than as its entries.
   */
 case class StaticLookupExpr(child: Expression, tableName: String,
     entries: Map[String, Any], valueType: DataType)

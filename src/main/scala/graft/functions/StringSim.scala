@@ -1,11 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro / Jaro–Winkler string similarity — the record-linkage scorer
@@ -91,30 +86,8 @@ object StringSimKernel {
   }
 }
 
-case class JaroWinklerExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "jaro_winkler needs (string, string)")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
-  protected override def nullSafeEval(s1: Any, s2: Any): Any =
-    StringSimKernel.jaroWinkler(s1.asInstanceOf[UTF8String],
-      s2.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.StringSimKernel.jaroWinkler($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): JaroWinklerExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 object StringSim {
   /** Column: Jaro–Winkler similarity in [0, 1] (codegen'd). */
   def jaroWinkler(a: Column, b: Column): Column =
-    GraftSqlBridge.column(JaroWinklerExpr(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+    Kernels.jaroWinkler(Seq(a, b))
 }

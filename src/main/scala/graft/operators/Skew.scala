@@ -54,7 +54,7 @@ object Skew {
     * This is the explicit form of Spark's InjectRuntimeFilter rewrite:
     * explicit because it composes (any key expression, any downstream
     * use of the filter bytes) and because the plan shows the probe
-    * (`might_contain` in the big side's scan-stage Filter, pinned in
+    * (`BloomKernel.contains` in the big side's scan-stage Filter, pinned in
     * BloomSpec). At 1000 executors the filter costs `numBits/8` bytes
     * per task of aggregation traffic + one broadcast; a 1M-bit filter
     * at 5 hashes holds ~70k keys under 1% false positives. Keys are
@@ -64,7 +64,6 @@ object Skew {
       bigKey: String, smallKey: String,
       numBits: Int = 1 << 20, numHashes: Int = 5,
       exact: Boolean = true): DataFrame = {
-    import graft.functions.{MightContainExpr}
     import org.apache.spark.sql.GraftSqlBridge
     val bloom = small.agg(
       graft.functions.Bloom.bloomBuild(
@@ -76,9 +75,9 @@ object Skew {
     // Exchange first — the exact shuffle the filter exists to shrink.
     // As a subquery the probe is a plain Filter on big's scan, below
     // every Exchange by construction.
-    val probe = GraftSqlBridge.column(MightContainExpr(
-      GraftSqlBridge.scalarSubquery(bloom),
-      GraftSqlBridge.expression(col(bigKey).cast("long")), numHashes))
+    val probe = graft.functions.Bloom.mightContain(
+      GraftSqlBridge.column(GraftSqlBridge.scalarSubquery(bloom)),
+      col(bigKey).cast("long"), numHashes)
     val prefiltered = big.where(probe)
     if (!exact) prefiltered
     else prefiltered.join(

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  /** Tokenize once — every stat below also has a `FromWords` form
-    * taking this column, so a multi-stat projection computes the split
-    * a single time (the words column is multi-referenced, which keeps
-    * Catalyst from inlining one split per consumer). */
+  /** Tokenize once — the `FromWords` forms below and the native
+    * `text_stats` kernel take this column, so a multi-stat projection
+    * computes the split a single time (the words column is
+    * multi-referenced, which keeps Catalyst from inlining one split per
+    * consumer). */
   def words(text: Column): Column = split(text, "\\s+")
 
   /** Whitespace token count. */
@@ -23,26 +24,6 @@ object TextStats {
     size(split(text, "\\s+"))
 
   def tokenCountFromWords(w: Column): Column = size(w)
-
-  def subwordCountFromWords(w: Column): Column =
-    aggregate(
-      transform(w, x => ceil(length(x).cast("double") / 4.0).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-
-  def distinctTokenCountFromWords(w: Column): Column =
-    size(array_distinct(w))
-
-  def avgTokenLenFromWords(w: Column): Column =
-    when(size(w) === 0, lit(0.0))
-      .otherwise(
-        aggregate(transform(w, length(_).cast("long")), lit(0L), _ + _)
-          .cast("double") / size(w).cast("double"))
-
-  def stopwordRatioFromWords(w: Column, stopwords: Seq[String]): Column =
-    when(size(w) === 0, lit(0.0)).otherwise(
-      aggregate(transform(w,
-          x => when(lower(x).isin(stopwords: _*), 1L).otherwise(0L)),
-        lit(0L), _ + _).cast("double") / size(w).cast("double"))
 
   /** BPE-ish subword count: word-characters chunk to runs of ≤4 chars
     * (a crude stand-in for byte-pair merges), punctuation counts singly.

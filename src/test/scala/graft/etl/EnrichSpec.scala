@@ -382,7 +382,7 @@ class EnrichSpec extends SparkSpec {
     val df = (fixed ++ fuzz).map(Tuple1(_)).toDF("x")
       .select(col("x"),
         Grabbers.permissiveTimestamp(upper(trim(col("x")))).as("kern"),
-        Grabbers.permissiveTimestampSpec(upper(trim(col("x")))).as("spec"))
+        graft.operators.DateCascade.permissiveTimestamp(upper(trim(col("x")))).as("spec"))
     df.collect().foreach { r =>
       assert(Option(r.get(1)) === Option(r.get(2)), s"input '${r.getString(0)}'")
     }

@@ -38,6 +38,29 @@ class GraftFunctionsSpec extends SparkSpec {
     val r = s.sql("SELECT size(minhash_sig(split('a b c', ' '))) AS n")
       .collect()(0).getInt(0)
     assert(r === MinhashKernel.NumHashes)
+    assertRejectsNonLiteral("minhash_sig(split(t, ' '), n)", "shingle size")
+  }
+
+  test("shingle_hashes / geohash / might_contain reject non-literal int parameters") {
+    assertRejectsNonLiteral("shingle_hashes(split(t, ' '), n)", "shingle size")
+    assertRejectsNonLiteral("geohash(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE), n)",
+      "precision")
+    assertRejectsNonLiteral("might_contain(CAST('ab' AS BINARY), CAST(7 AS BIGINT), n)",
+      "numHashes")
+  }
+
+  /** `call` reads the int parameter from the column `n`, not a literal:
+    * building the function must fail and name the parameter. */
+  private def assertRejectsNonLiteral(call: String, what: String): Unit = {
+    val s = spark
+    GraftFunctions.register(s)
+    val e = intercept[Exception] {
+      s.sql(s"SELECT $call AS r FROM VALUES ('a b c', 2) AS v(t, n)").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null &&
+      m.contains(s"$what must be an integer literal")), msgs.mkString("\n"))
   }
 
   test("shingle_hashes / sci_parse / date_shape answer from SQL") {

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.functions.{Bloom, BloomKernel}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -71,17 +72,27 @@ class BloomSpec extends SparkSpec {
     val big = (1L to 2000L).map(i => (i, s"p$i")).toDF("id", "payload")
     val dim = (1L to 2000L by 13).toDF("key")
     val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     try {
       // force the verify join to shuffle so "below the Exchange" is testable
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // the executed plan of a non-adaptive query carries its exchanges
+      // as plain tree nodes (the adaptive wrapper hides them from
+      // collect(), and the pre-preparation sparkPlan has none yet)
+      s.conf.set("spark.sql.adaptive.enabled", "false")
       val df = Skew.bloomSemiJoin(big, dim, "id", "key",
         numBits = 1 << 14, numHashes = 5)
       df.collect()
-      // sparkPlan (pre-AQE) traverses with collect(); the adaptive
-      // wrapper hides its final plan from tree traversal
-      val plan = df.queryExecution.sparkPlan
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.nonEmpty,
+        s"the verify join did not shuffle:\n$plan")
+      // the probe binds to BloomKernel.contains (Kernels.mightContain)
       val probeFilters = plan.collect {
-        case f: FilterExec if f.condition.toString.contains("might_contain") => f
+        case f: FilterExec if f.condition.exists {
+          case si: StaticInvoke => si.functionName == "contains" &&
+            si.staticObject == BloomKernel.getClass
+          case _ => false
+        } => f
       }
       assert(probeFilters.nonEmpty, s"no might_contain Filter in\n$plan")
       assert(probeFilters.forall(f =>
@@ -91,6 +102,9 @@ class BloomSpec extends SparkSpec {
       // join Catalyst can lift above the verify semi-join (the r11 bug
       // this pin caught): no nested-loop join may appear anywhere
       assert(!plan.toString.contains("BroadcastNestedLoopJoin"), plan.toString)
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 }

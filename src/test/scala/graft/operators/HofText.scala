@@ -22,6 +22,30 @@ object HofText {
         .otherwise(transform(sequence(lit(0), size(w) - n),
           i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))))
 
+  /** The per-word statistics the native `text_stats` kernel
+    * ([[graft.functions.NativeTextStats.textStats]]) computes in one
+    * pass: Σ ceil(chars/4) subwords, distinct tokens, mean token
+    * length and the stopword ratio (0.0 for an empty array). */
+  def subwordCountFromWords(w: Column): Column =
+    aggregate(
+      transform(w, x => ceil(length(x).cast("double") / 4.0).cast("long")),
+      lit(0L), (acc, x) => acc + x)
+
+  def distinctTokenCountFromWords(w: Column): Column =
+    size(array_distinct(w))
+
+  def avgTokenLenFromWords(w: Column): Column =
+    when(size(w) === 0, lit(0.0))
+      .otherwise(
+        aggregate(transform(w, length(_).cast("long")), lit(0L), _ + _)
+          .cast("double") / size(w).cast("double"))
+
+  def stopwordRatioFromWords(w: Column, stopwords: Seq[String]): Column =
+    when(size(w) === 0, lit(0.0)).otherwise(
+      aggregate(transform(w,
+          x => when(lower(x).isin(stopwords: _*), 1L).otherwise(0L)),
+        lit(0L), _ + _).cast("double") / size(w).cast("double"))
+
   /** Minimum md5-60 hash over the distinct n-word shingles — the
     * specification of the `fp` field of the native `text_stats`
     * kernel ([[graft.functions.NativeTextStats.textStats]]). */

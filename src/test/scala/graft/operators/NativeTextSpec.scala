@@ -126,10 +126,10 @@ class NativeTextSpec extends SparkSpec {
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
       .select(col("id"), col("text"), TextStats.words(col("text")).as("_w"))
     val hof = docs.select(col("id"),
-        TextStats.subwordCountFromWords(col("_w")).as("sub"),
-        TextStats.distinctTokenCountFromWords(col("_w")).as("nd"),
-        TextStats.avgTokenLenFromWords(col("_w")).as("avg"),
-        TextStats.stopwordRatioFromWords(col("_w"), stops).as("stop"),
+        HofText.subwordCountFromWords(col("_w")).as("sub"),
+        HofText.distinctTokenCountFromWords(col("_w")).as("nd"),
+        HofText.avgTokenLenFromWords(col("_w")).as("avg"),
+        HofText.stopwordRatioFromWords(col("_w"), stops).as("stop"),
         HofText.fingerprintFromWords(col("_w")).as("fp"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2),
         r.getDouble(3), r.getDouble(4),
@@ -557,7 +557,7 @@ class NativeTextSpec extends SparkSpec {
     * `docs` (null entries are null arrays) for each n, on the
     * whole-stage codegen path or on the interpreted path (no
     * whole-stage fusion, projections built by the interpreted factory,
-    * so the kernel runs through `nullSafeEval`). An RDD-backed frame:
+    * so the kernel runs through `StaticInvoke.eval`). An RDD-backed frame:
     * the optimizer would fold a projection over local rows itself. */
   private def assertShinglesParity(docs: Seq[Seq[String]], ns: Seq[Int],
       codegen: Boolean): Unit = {

@@ -6,13 +6,26 @@ Usage: python3 tools/check.py <verify_out_dir> [sf_dir]
 Reads each <name>/ parquet dir written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB against the sf parquet tables,
 sorts columns by name + rows by all columns, and compares values exactly.
+
+The sf dir defaults to the one recorded in <verify_out_dir>/verify_meta.json
+(graft.Verify writes it); an explicit sf_dir that disagrees with the record
+is an error, and so is an output with neither.
 """
-import json, sys, math
+import json, os, sys, math
 import duckdb
 import pandas as pd
 
 out = sys.argv[1]
-sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+meta_path = os.path.join(out, "verify_meta.json")
+meta_sf = json.load(open(meta_path))["sf_dir"] if os.path.exists(meta_path) else None
+if len(sys.argv) > 2:
+    sf = sys.argv[2]
+    if meta_sf is not None and os.path.realpath(sf) != os.path.realpath(meta_sf):
+        sys.exit(f"check.py: {out} was written from {meta_sf}, not {sf}")
+elif meta_sf is not None:
+    sf = meta_sf
+else:
+    sys.exit(f"check.py: {out} has no verify_meta.json; give the sf dir it was written from")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
