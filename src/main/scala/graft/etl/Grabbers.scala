@@ -26,7 +26,7 @@ object Grabbers {
   /** grabFirstNumber (conversions.py:296-310): first number in the
     * string, thousands separators allowed, returned as the matched text
     * (comma-stripped here for casting). */
-  private val FirstNumber = "([+-]?[0-9]+(?:[,][0-9]{3})*(?:[\\.][0-9]*)?)"
+  private[graft] val FirstNumber = "([+-]?[0-9]+(?:[,][0-9]{3})*(?:[\\.][0-9]*)?)"
 
   def grabFirstNumber(c: Column): Column =
     nullif(regexp_extract(c, FirstNumber, 1), lit(""))
@@ -39,12 +39,6 @@ object Grabbers {
   def firstNumberDouble(c: Column): Column =
     graft.functions.NativeText.firstNumber(c)
       .try_cast(org.apache.spark.sql.types.DoubleType)
-
-  /** Regex-tree form of the comma-stripped first number — the
-    * executable spec of the native kernel (parity-fuzzed in
-    * EnrichSpec). */
-  def firstNumberTextSpec(c: Column): Column =
-    nullif(regexp_replace(regexp_extract(c, FirstNumber, 1), ",", ""), lit(""))
 
   /** locale.atoi of the first number: fails (null) when the match has a
     * fractional part, like Python int() on "1.5" (intGrabber :380-384).
@@ -75,15 +69,6 @@ object Grabbers {
     * decimals in practice (documented divergence). */
   def getExponent(c: Column): Column =
     graft.functions.NativeText.decimalExponent(c)
-
-  /** Regex form of getExponent — the executable spec of the native
-    * kernel (parity-fuzzed in EnrichSpec). */
-  def getExponentSpec(c: Column): Column = {
-    val t = trim(c)
-    when(t.rlike("^[+-]?[0-9]*\\.[0-9]*$"),
-      length(regexp_extract(t, "\\.([0-9]*)$", 1)))
-      .otherwise(lit(0))
-  }
 
   /** Permissive timestamp parse standing in for dateutil
     * (conversions.py:585-598; no month-name or exotic formats —
@@ -286,16 +271,11 @@ object Grabbers {
   /** getLicense step 1 (conversions.py:683-708): map one candidate
     * field's raw value to a license key via the acceptable-licenses
     * table — one native hash probe per candidate
-    * (graft.functions.StaticLookup; the when-chain form below is the
-    * executable spec EnrichMediaSpec pins it against). */
+    * (graft.functions.StaticLookup; the when-chain form
+    * `GrabberForms.licenseKey` in the specs is the executable
+    * specification EnrichMediaSpec pins it against). */
   def licenseKey(v: Column): Column =
     graft.functions.StaticLookup(v, "license_trans", Vocab.licenseTrans)
-
-  /** [[licenseKey]] as the original 103-branch when-chain — the
-    * specification the native probe is parity-tested against. */
-  def licenseKeySpec(v: Column): Column =
-    Vocab.licenseTrans.foldLeft(when(lit(false), lit("")))(
-      (acc, kv) => acc.when(v === kv._1, kv._2))
 
   /** getLicense step 2: majority vote with first-seen tiebreak (Python
     * max(set, key=count) ties are hash-order-arbitrary; we pin to

@@ -22,9 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference object — ~30 bytes of generated code per use, constant
   * time per row, identical null-when-absent semantics.
   *
-  * The license when-chain remains as `Grabbers.licenseKeySpec`, the
-  * executable specification EnrichMediaSpec pins this probe against
-  * over the full key set plus misses and null.
+  * The license when-chain remains in the specs as
+  * `GrabberForms.licenseKey`, the executable specification
+  * EnrichMediaSpec pins this probe against over the full key set plus
+  * misses and null.
   *
   * Hand-written rather than a declared [[Kernel]]: the table is a
   * reference object built once per expression, and the plan string

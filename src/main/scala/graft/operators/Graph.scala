@@ -1,10 +1,14 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Small-graph algorithms the dedup pipelines need, and the one
   * lineage-cut primitive ([[Graph.cut]] / [[Graph.release]]) that every
@@ -17,45 +21,69 @@ object Graph {
     * the set, and its canonical id is the minimum member", which is
     * what a dedup pass actually deletes against.
     *
-    * Each round every node takes the minimum component label among
-    * itself and its neighbors (one hash join edges⋈labels + one
-    * partial-aggregable min — both shuffle on the same id key);
-    * convergence needs diameter rounds, and near-dup clusters are
-    * almost-cliques, so 2-3 rounds settle real corpora. The loop stops
-    * early on a fixpoint (an aggregate-only check, no driver-side
-    * data).
+    * The edge list is materialized once, both directions, through
+    * [[cutCounted]]; its measured row count picks the path:
+    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and an id
+    *     type the driver orders as Spark does — see [[driverOrdering]]):
+    *     the cut's rows are collected and union-find with the minimum
+    *     id as the root labels every node, in one job on the cached
+    *     cut. The answer is exact whatever the diameter, so `maxIter`
+    *     does not apply. A node with a null endpoint keeps the
+    *     distributed path's (null, null) row.
+    *   - DISTRIBUTED (above the bound): each round every node takes the
+    *     minimum component label among itself and its neighbors (one
+    *     hash join edges⋈labels + one partial-aggregable min — both
+    *     shuffle on the same id key); convergence needs diameter rounds,
+    *     and near-dup clusters are almost-cliques, so 2-3 rounds settle
+    *     real corpora. The loop stops early on a fixpoint (an
+    *     aggregate-only check, no driver-side data). Every round
+    *     materializes through a [[cut]] — iterative DataFrame algorithms
+    *     MUST truncate the plan each round or the nested join plan grows
+    *     exponentially with iterations (a 10-hop path aborts analysis
+    *     without it; GraphSpec pins that case on this path). Each
+    *     superseded round is [[release]]d as soon as its successor
+    *     materializes, so block usage stays O(1) in rounds.
+    * Both paths return the same rows under the same schema
+    * (RandomizedParitySpec pins it).
     *
-    * Every round materializes through a [[cut]] — iterative DataFrame
-    * algorithms MUST truncate the plan each round or the nested join
-    * plan grows exponentially with iterations (a 10-hop path aborts
-    * analysis without it; GraphSpec pins that case). Each superseded
-    * round is [[release]]d as soon as its successor materializes and
-    * the edge list is released on exit, so block usage stays O(1) in
-    * rounds instead of O(rounds).
-    *
-    * Cache residue: exactly ONE cut remains after the call — the
-    * final round, which backs the returned label table (two columns,
-    * one row per node that appears in an edge). It is registered with
+    * Cache residue: on the driver path none — the result is a
+    * `LocalRelation` and the edge cut is released. On the distributed
+    * path exactly ONE cut remains — the final round, which backs the
+    * returned label table; it is registered with
     * [[graft.Staging.registerPinned]], so it lives until the session
-    * releases its pins. GraphSpec pins the residue count.
+    * releases its pins. GraphSpec pins both residue counts.
     *
     * @param edges undirected pair list (src, dst)
     * @return (id, comp) — every node that appears in any edge, labeled
     *   with the minimum id reachable from it
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 20): DataFrame = {
+      maxIter: Int = 20): DataFrame =
+    connectedComponents(edges, src, dst, maxIter, LocalEdgeRows)
+
+  private[graft] def connectedComponents(edges: DataFrame, src: String,
+      dst: String, maxIter: Int, localEdgeRows: Long): DataFrame = {
     // materialize the edge list ONCE: every round references it twice,
     // and without the cut each round would recompute the whole upstream
     // pair-generation pipeline (for near-dup input that is the entire
     // LSH + verify chain — measured 5x the total query cost). Both
     // directions come from ONE reference to `edges`, so the cut scans
     // that upstream once; a union of two projections would plan it twice
-    val und = cut(
+    val (und, undRows) = cutCounted(
       edges.select(inline(array(
           struct(col(src).as("a"), col(dst).as("b")),
           struct(col(dst).as("a"), col(src).as("b")))))
         .distinct())
+    val id = und.schema("a")
+    driverOrdering(id.dataType) match {
+      case Some(ord) if undRows <= localEdgeRows =>
+        val rows = cutRdd(und).collect()
+        release(und)
+        return localFrame(edges.sparkSession,
+          StructType(Seq(id.copy(name = "id"), id.copy(name = "comp"))),
+          minRootComponents(rows, id.dataType, ord))
+      case _ =>
+    }
     // (id, comp); from round 1 on, the round's cut (id, comp, _chg)
     var labels = und.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -100,6 +128,76 @@ object Graph {
     graft.Staging.registerPinned(edges.sparkSession, labels).drop("_chg")
   }
 
+  /** Union-find over collected (a, b) edge rows, the minimum id always
+    * the root: one (id, comp) row per non-null endpoint, comp the
+    * minimum id of its component, plus the distributed path's
+    * (null, null) row when any endpoint is null (a null id joins
+    * nothing there, so it never takes or gives a label). */
+  private def minRootComponents(edgeRows: Array[InternalRow], t: DataType,
+      ord: Ordering[Any]): Seq[InternalRow] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val up = parent(c); parent(c) = r; c = up }
+      r
+    }
+    var sawNull = false
+    // `und` holds both directions, so every endpoint shows up as `a`
+    edgeRows.foreach { r =>
+      if (r.isNullAt(0)) sawNull = true
+      else {
+        val a = r.get(0, t)
+        parent.getOrElseUpdate(a, a)
+        if (!r.isNullAt(1)) {
+          val b = r.get(1, t)
+          parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ord.lt(ra, rb)) parent(rb) = ra
+          else if (ord.lt(rb, ra)) parent(ra) = rb
+        }
+      }
+    }
+    val out = parent.keysIterator
+      .map(k => new GenericInternalRow(Array[Any](k, find(k))): InternalRow)
+      .toVector
+    if (sawNull) out :+ new GenericInternalRow(Array[Any](null, null))
+    else out
+  }
+
+  /** Bidirected edge-row count at or under which [[connectedComponents]],
+    * [[labelPropagation]] and [[kCoreNumbers]] finish IN-PROCESS off
+    * their already-materialized edge cut (≈ 32 MB of long pairs at the
+    * default). Per-round Spark latency (a lineage-cut job plus
+    * exchanges, tenths of a second however small the data) is the
+    * entire cost of a dimension-sized graph — a `curate` pass's
+    * 11-edge graph spent 28 jobs in components — while driver
+    * arithmetic over 65k edges takes microseconds. The bound is
+    * MEASURED (the cut's own count, from [[cutCounted]], no extra
+    * job), never assumed; graphs above it take the distributed rounds
+    * unchanged, and the local loops compute the identical answer
+    * (GraphSpec and RandomizedParitySpec pin local ≡ distributed). */
+  private val LocalEdgeRows = 2000000L
+
+  /** The ordering of `t`'s values when the driver compares and hashes
+    * them exactly as Spark's min / least / equi-join do: integral types
+    * and binary-collated strings. Other id types keep the distributed
+    * path. */
+  private def driverOrdering(t: DataType): Option[Ordering[Any]] = t match {
+    // `StringType` matches the default UTF8_BINARY collation only
+    case ByteType | ShortType | IntegerType | LongType | StringType =>
+      Some(PhysicalDataType.ordering(t))
+    case _ => None
+  }
+
+  /** A driver-computed result as a frame: a `LocalRelation` leaf over
+    * `rows` (no blocks to pin or release). */
+  private def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    GraftSqlBridge.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
   /** Eager local lineage cut: materialize `df` into locally
     * checkpointed blocks and return a frame whose plan is a single
     * leaf over them (a `LogicalRDD` with default statistics — the
@@ -116,7 +214,11 @@ object Graph {
     * uncopied rows would alias them. `Dataset.localCheckpoint` is not
     * used because it hides the checkpointed RDD behind the frame's
     * plan and keeps the origin plan's constraints. */
-  def cut(df: DataFrame): DataFrame =
+  def cut(df: DataFrame): DataFrame = cutCounted(df)._1
+
+  /** [[cut]], with the row count its materialization job measured — a
+    * size gate read from it costs no extra job. */
+  private def cutCounted(df: DataFrame): (DataFrame, Long) =
     materialize(df, df.queryExecution.toRdd.map(_.copy()))
 
   /** Unpersist the blocks behind a frame [[cut]] returned. The frame
@@ -135,19 +237,21 @@ object Graph {
     }
 
   /** Checkpoint `rows` (the per-row copy of `df`'s Tungsten rows) and
-    * rebuild a frame of `df`'s schema over them. The count stays in
-    * this file: the benchmark's tracer attributes cut jobs by the
-    * stage name "count at Graph.scala". */
-  private def materialize(df: DataFrame, rows: RDD[InternalRow]): DataFrame = {
+    * rebuild a frame of `df`'s schema over them; returns it with the
+    * row count. The count stays in this file: the benchmark's tracer
+    * attributes cut jobs by the stage name "count at Graph.scala". */
+  private def materialize(df: DataFrame,
+      rows: RDD[InternalRow]): (DataFrame, Long) = {
     rows.localCheckpoint()
     // a failed materialization must drop its own checkpoint marking
     // (localCheckpoint registers the RDD persisted BEFORE the count),
     // or every failed cut leaks an entry in the context's persistent
     // registry for the life of the session
-    try rows.count()
-    catch { case t: Throwable => rows.unpersist(blocking = false); throw t }
-    org.apache.spark.sql.GraftSqlBridge
-      .internalCreateDataFrame(df.sparkSession, rows, df.schema)
+    val n =
+      try rows.count()
+      catch { case t: Throwable => rows.unpersist(blocking = false); throw t }
+    (GraftSqlBridge.internalCreateDataFrame(df.sparkSession, rows, df.schema),
+      n)
   }
 
   /** PageRank (Brin & Page '98, the simplified no-dangling-
@@ -164,18 +268,17 @@ object Graph {
     * double-sum order wobble (~1e-16) can never accumulate across
     * sweeps, so an oracle replaying the same rounded sweeps is
     * bit-identical (the trained-quantizer pinning discipline). `n` is
-    * a driver-side scalar (one count over the already-cut node set —
-    * the graph's node count, not data motion). The last sweep's cut
+    * a driver-side scalar (the node-set cut's own measured count —
+    * the graph's node count, no extra job). The last sweep's cut
     * backs the result and is registered with
     * [[graft.Staging.registerPinned]]; every other cut is released. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
     val e = cut(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val nodes = cut(
+    val (nodes, n) = cutCounted(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
-    val n = nodes.count()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var r = nodes.withColumn("r", lit(1.0 / n))
     (1 to iters).foreach { i =>
@@ -441,18 +544,6 @@ object Graph {
     * join beats three semi-join stages of bookkeeping. */
   private val KCoreBroadcastFrontier = 1000000L
 
-  /** Bidirected-edge row count under which the whole H-iteration runs
-    * IN-PROCESS off the already-materialized edge cut (≈ 32 MB of long
-    * pairs at the default): per-sweep Spark latency (a lineage-cut job
-    * plus broadcast builds, ~0.3 s each however small the data) is the
-    * entire cost of a dimension-sized graph, and 16 sweeps of driver
-    * arithmetic on 65k edges take microseconds. The bound is MEASURED
-    * (the cut's own count), never assumed — graphs above it take the
-    * distributed worklist sweeps unchanged, and the local loop runs
-    * the identical integer H-update, so results are bit-equal
-    * (GraphSpec pins local ≡ distributed on the same graphs). */
-  private val KCoreLocalEdgeRows = 2000000L
-
   /** [[kCoreNumbers]] with convergence telemetry: (result, sweeps
     * actually run, converged). The round-15 DELTA-WORKLIST form —
     * sweep 1 recomputes every node (it must: all values are newly
@@ -499,7 +590,7 @@ object Graph {
     * (the r14 ADVICE leak). */
   private[graft] def kCoreNumbersConverged(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int): (DataFrame, Int, Boolean) =
-    kCoreNumbersConverged(edges, srcCol, dstCol, iters, KCoreLocalEdgeRows)
+    kCoreNumbersConverged(edges, srcCol, dstCol, iters, LocalEdgeRows)
 
   private[graft] def kCoreNumbersConverged(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int,
@@ -507,14 +598,12 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     val e = cut(undirect(edges, srcCol, dstCol))
-    val bi = cut(
+    val (bi, biRows) = cutCounted(
       e.select(col("u").as("a"), col("v").as("b"))
         .union(e.select(col("v").as("a"), col("u").as("b"))))
-    // small-graph fast path: the count is already materialized by the
-    // cut, so the bound costs one cached-RDD count
-    if (bi.schema("a").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        cutRdd(bi).count() <= localEdgeRows) {
+    // small-graph fast path ([[LocalEdgeRows]]): the gate reads the
+    // count the cut job measured, so it costs no job of its own
+    if (bi.schema("a").dataType == LongType && biRows <= localEdgeRows) {
       val sq = spark
       import sq.implicits._
       val adj = scala.collection.mutable.HashMap
@@ -559,7 +648,7 @@ object Graph {
     // extra jobs (schema is (id, c, chg); chg at ordinal 2)
     def cutCounting(df: DataFrame): (DataFrame, Long) = {
       val acc = spark.sparkContext.longAccumulator
-      val counted = materialize(df, df.queryExecution.toRdd.map { r =>
+      val (counted, _) = materialize(df, df.queryExecution.toRdd.map { r =>
         val c = r.copy()
         if (c.getBoolean(2)) acc.add(1L)
         c
@@ -636,17 +725,47 @@ object Graph {
     * internal majority, so blobs keep distinct labels while min-label
     * would flood one id over the whole component.
     *
-    * Same scale discipline as [[pageRank]]: edge/node sets lineage-cut
-    * once before the loop, label table cut per sweep (constant plan
-    * depth, superseded sweeps unpersisted); per sweep ONE join of the
-    * label table to the bidirected edge list + a (node, label) count
-    * + a per-node argmax via min_by over the (−count, label) struct —
-    * no window, partial-agg friendly, nothing quadratic. Fixed sweep
+    * The canonical edge list is lineage-cut once, through
+    * [[cutCounted]]; its measured size picks the path:
+    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and an id
+    *     type [[driverOrdering]] accepts): the cut's rows are collected
+    *     and the same `sweeps` synchronous mode-label sweeps run on an
+    *     adjacency map, ties to the smallest label; a sweep that
+    *     changes nothing ends the loop, since every further sweep is
+    *     the identity. The result is a `LocalRelation`; nothing stays
+    *     pinned.
+    *   - DISTRIBUTED (above the bound), the [[pageRank]] scale
+    *     discipline: label table cut per sweep (constant plan depth,
+    *     superseded sweeps unpersisted); per sweep ONE join of the
+    *     label table to the bidirected edge list + a (node, label)
+    *     count + a per-node argmax via min_by over the (−count, label)
+    *     struct — no window, partial-agg friendly, nothing quadratic.
+    *     The last sweep's cut is registered with
+    *     [[graft.Staging.registerPinned]].
+    * Both paths return the same rows under the same schema
+    * (RandomizedParitySpec pins it on tie-heavy graphs). Fixed sweep
     * counts (not convergence polling) keep the result a pure function
     * of the data — and the oracle replays each sweep verbatim. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      sweeps: Int): DataFrame = {
-    val e = cut(undirect(edges, srcCol, dstCol))
+      sweeps: Int): DataFrame =
+    labelPropagation(edges, srcCol, dstCol, sweeps, LocalEdgeRows)
+
+  private[graft] def labelPropagation(edges: DataFrame, srcCol: String,
+      dstCol: String, sweeps: Int, localEdgeRows: Long): DataFrame = {
+    val (e, eRows) = cutCounted(undirect(edges, srcCol, dstCol))
+    val u = e.schema("u")
+    driverOrdering(u.dataType) match {
+      // the cut holds each undirected edge once; the bound counts both
+      // directions, as the distributed path's edge list does
+      case Some(ord) if 2 * eRows <= localEdgeRows =>
+        val rows = cutRdd(e).collect()
+        release(e)
+        return localFrame(edges.sparkSession,
+          StructType(Seq(u.copy(name = "id"),
+            StructField("label", u.dataType, nullable = true))),
+          modeLabelSweeps(rows, u.dataType, ord, sweeps))
+      case _ =>
+    }
     val bi = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
     var lab = bi.select(col("a").as("id")).distinct()
@@ -665,6 +784,46 @@ object Graph {
     }
     release(e)
     graft.Staging.registerPinned(edges.sparkSession, lab)
+  }
+
+  /** `sweeps` synchronous label-propagation sweeps over collected
+    * canonical (u, v) edge rows (no nulls, no self-loops — [[undirect]]
+    * drops them): labels start as ids, and each sweep every node adopts
+    * its neighbors' most frequent label, ties to the smallest under
+    * `ord`. One (id, label) row per node. */
+  private def modeLabelSweeps(edgeRows: Array[InternalRow], t: DataType,
+      ord: Ordering[Any], sweeps: Int): Seq[InternalRow] = {
+    val adj = scala.collection.mutable.HashMap
+      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
+    edgeRows.foreach { r =>
+      val (a, b) = (r.get(0, t), r.get(1, t))
+      adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
+      adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
+    }
+    var lab: Map[Any, Any] = adj.keysIterator.map(k => k -> k).toMap
+    var i = 0
+    var changed = true
+    while (i < sweeps && changed) {
+      val next = adj.iterator.map { case (v, nbrs) =>
+        val votes = scala.collection.mutable.HashMap.empty[Any, Int]
+        nbrs.foreach(n => votes(lab(n)) = votes.getOrElse(lab(n), 0) + 1)
+        var best: Any = null
+        var bestN = 0
+        votes.foreach { case (l, c) =>
+          if (c > bestN || (c == bestN && ord.lt(l, best))) {
+            best = l
+            bestN = c
+          }
+        }
+        v -> best
+      }.toMap
+      changed = next != lab
+      lab = next
+      i += 1
+    }
+    lab.iterator
+      .map { case (k, l) => new GenericInternalRow(Array[Any](k, l)): InternalRow }
+      .toVector
   }
 
   /** Newman modularity of a community assignment, per community —

@@ -25,17 +25,6 @@ object TextStats {
 
   def tokenCountFromWords(w: Column): Column = size(w)
 
-  /** BPE-ish subword count: word-characters chunk to runs of ≤4 chars
-    * (a crude stand-in for byte-pair merges), punctuation counts singly.
-    * Deterministic and cheap — the shape a tokenizer-cost estimator
-    * needs, not a real BPE. */
-  def subwordCount(text: Column): Column = {
-    val words = split(text, "\\s+")
-    aggregate(
-      transform(words, w => ceil(length(w).cast("double") / 4.0).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-  }
-
   /** GPT-2-style pre-tokenizer pattern (public BPE pre-tokenization
     * shape: contraction tail, space-prefixed letter runs, digit runs,
     * punctuation runs, whitespace). Restricted to the ASCII classes so
@@ -43,7 +32,8 @@ object TextStats {
   val BpePattern = "'[a-z]+| ?[a-z]+| ?[0-9]+| ?[^ a-z0-9]+| +"
 
   /** BPE-ish token count: matches of [[BpePattern]] — the regex half of
-    * "whitespace + BPE-ish regex" token counting (subwordCount is the
+    * "whitespace + BPE-ish regex" token counting (the native
+    * `text_stats` kernel's Σ ceil(chars/4) subword count is the
     * whitespace/length half). Codegen regexp_count, no explode. */
   def bpeTokenCount(text: Column): Column =
     regexp_count(text, lit(BpePattern)).cast("long")

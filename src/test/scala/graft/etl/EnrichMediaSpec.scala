@@ -115,7 +115,7 @@ class EnrichMediaSpec extends SparkSpec {
     val df = inputs.map(Tuple1(_)).toDF("v").select(
       col("v"),
       graft.etl.Grabbers.licenseKey(col("v")).as("probe"),
-      graft.etl.Grabbers.licenseKeySpec(col("v")).as("spec"))
+      graft.operators.GrabberForms.licenseKey(col("v")).as("spec"))
     df.collect().foreach { r =>
       assert(Option(r.getString(1)) === Option(r.getString(2)),
         s"input '${r.getString(0)}'")

@@ -246,7 +246,7 @@ class EnrichSpec extends SparkSpec {
     (fixed ++ fuzz).map(Tuple1(_)).toDF("x")
       .select(col("x"),
         graft.functions.NativeText.firstNumber(col("x")).as("kern"),
-        Grabbers.firstNumberTextSpec(col("x")).as("spec"))
+        graft.operators.GrabberForms.firstNumberText(col("x")).as("spec"))
       .collect().foreach { r =>
         assert(Option(r.getString(1)) === Option(r.getString(2)),
           s"input '${r.getString(0)}'")
@@ -266,7 +266,7 @@ class EnrichSpec extends SparkSpec {
     (fixed ++ fuzz).map(Tuple1(_)).toDF("x")
       .select(col("x"),
         Grabbers.getExponent(col("x")).as("kern"),
-        Grabbers.getExponentSpec(col("x")).as("spec"))
+        graft.operators.GrabberForms.getExponent(col("x")).as("spec"))
       .collect().foreach { r =>
         assert(r.getInt(1) === r.getInt(2), s"input '${r.getString(0)}'")
       }

@@ -33,9 +33,12 @@ class GraphSpec extends SparkSpec {
   test("connectedComponents: a long path converges within the diameter bound") {
     val s = spark
     import s.implicits._
-    // path 0-1-2-...-9: min label must travel 9 hops
+    // path 0-1-2-...-9: min label must travel 9 hops, one distributed
+    // round each (forced past the driver path: every round must cut, or
+    // the nested join plan aborts analysis)
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val comp = Graph.connectedComponents(edges, "d1", "d2")
+    val comp = Graph.connectedComponents(edges, "d1", "d2", maxIter = 20,
+        localEdgeRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.values.toSet === Set(0L))
     assert(comp.keySet === (0L to 9L).toSet)
@@ -45,17 +48,42 @@ class GraphSpec extends SparkSpec {
       "the edge list are unpersisted") {
     val s = spark
     import s.implicits._
-    // the 9-hop path forces many rounds, so a per-round leak would show
-    // up as many residual persistent RDDs, not one
+    // the 9-hop path forces many distributed rounds, so a per-round
+    // leak would show up as many residual persistent RDDs, not one
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("d1", "d2")
     val before = s.sparkContext.getPersistentRDDs.keySet
-    val comp = Graph.connectedComponents(edges, "d1", "d2")
+    val comp = Graph.connectedComponents(edges, "d1", "d2", maxIter = 20,
+      localEdgeRows = 0L)
     assert(comp.collect().map(_.getLong(1)).toSet === Set(0L))
     val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
     // exactly the returned labels' own blocks — its lineage is
     // truncated, so it must stay pinned until the session ends
     assert(leaked.size === 1,
       s"expected only the result to stay cached, found ${leaked.size} RDDs")
+  }
+
+  test("connectedComponents: the driver path pins nothing — the edge cut " +
+      "is released and the result is a local relation") {
+    val s = spark
+    import s.implicits._
+    val edges = (0L until 9L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val comp = Graph.connectedComponents(edges, "d1", "d2")
+    assert(comp.collect().map(_.getLong(1)).toSet === Set(0L))
+    assert((s.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("connectedComponents: a small graph whose diameter exceeds maxIter " +
+      "gets exact labels on the driver path; the distributed path throws") {
+    val s = spark
+    import s.implicits._
+    val edges = (0L until 9L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val comp = Graph.connectedComponents(edges, "d1", "d2", maxIter = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp === (0L to 9L).map(_ -> 0L).toMap)
+    val err = intercept[IllegalStateException](Graph.connectedComponents(
+      edges, "d1", "d2", maxIter = 2, localEdgeRows = 0L))
+    assert(err.getMessage.contains("did not converge in 2 rounds"))
   }
 
   test("connectedComponents evaluates its edge list once") {
@@ -104,6 +132,12 @@ class GraphSpec extends SparkSpec {
       "pinned blocks") {
     assert(leakedAfterEvict(
       Graph.labelPropagation(leakGraph, "s", "d", sweeps = 3).collect()).isEmpty)
+  }
+
+  test("labelPropagation: the forced distributed path also leaves no " +
+      "pinned blocks once the session is evicted") {
+    assert(leakedAfterEvict(Graph.labelPropagation(leakGraph, "s", "d",
+      sweeps = 3, localEdgeRows = 0L).collect()).isEmpty)
   }
 
   test("kCorePeel: once the session is evicted, a call leaves no pinned " +
@@ -517,16 +551,22 @@ class GraphSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val edges = (1 to 120).map(_ =>
       (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)).toDF("s", "d")
-    val d1 = Graph.labelPropagation(edges, "s", "d", 1)
+    // plan depth is a property of the distributed sweeps: force them
+    def depth(sweeps: Int) = Graph.labelPropagation(edges, "s", "d", sweeps,
+        localEdgeRows = 0L)
       .queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
-    val d4 = Graph.labelPropagation(edges, "s", "d", 4)
-      .queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
+    val d1 = depth(1)
+    val d4 = depth(4)
     assert(d1 === d4, s"plan grew with sweeps: $d4 vs $d1")
-    val a = Graph.labelPropagation(edges.repartition(1), "s", "d", 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Graph.labelPropagation(edges.repartition(9), "s", "d", 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a === b)
+    // both paths: the driver one (default) and the forced distributed one
+    def labels(parts: Int, forced: Boolean) = {
+      val e = edges.repartition(parts)
+      (if (forced) Graph.labelPropagation(e, "s", "d", 2, localEdgeRows = 0L)
+       else Graph.labelPropagation(e, "s", "d", 2))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    for (forced <- Seq(false, true))
+      assert(labels(1, forced) === labels(9, forced), s"forced = $forced")
   }
 
   test("clusteringCoefficients: K4 nodes read 1.0; a path node reads 0; " +

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,6 +44,88 @@ class RandomizedParitySpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected, s"seed $seed")
     }
+  }
+
+  /** Every leaf of `df`'s plan is a driver-side local relation. */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  /** `op` on the driver path (no effective bound) against `op` with the
+    * distributed path forced: same schema — names, types, nullability —
+    * and the same rows. The forcing bound is −1, not 0, because an
+    * empty graph's 0 rows are "at or under" a bound of 0. */
+  private def assertPathParity(what: String, expectLocal: Boolean = true)(
+      op: Long => DataFrame): Unit = {
+    val driver = op(Long.MaxValue)
+    val distributed = op(-1L)
+    assert(isLocal(driver) === expectLocal, s"$what: driver-path plan")
+    assert(!isLocal(distributed), s"$what: forced-distributed plan")
+    assert(driver.schema === distributed.schema, what)
+    val (d, f) = (driver.collect(), distributed.collect())
+    assert(d.length === f.length, what)
+    assert(d.toSet === f.toSet, what)
+  }
+
+  test("connectedComponents: the driver path equals the forced distributed " +
+      "path — random graphs, a 10-hop path, no edges, a null endpoint, " +
+      "String ids") {
+    val s = spark
+    import s.implicits._
+    def cc(edges: DataFrame)(bound: Long): DataFrame =
+      Graph.connectedComponents(edges, "d1", "d2", maxIter = 20,
+        localEdgeRows = bound)
+    for (seed <- Seq(3, 19, 64)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(90)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      assertPathParity(s"random seed $seed")(cc(edges.toDF("d1", "d2")))
+    }
+    assertPathParity("10-hop path")(
+      cc((0L until 10L).map(i => (i + 1, i)).toDF("d1", "d2")))
+    assertPathParity("no edges")(
+      cc(Seq.empty[(Long, Long)].toDF("d1", "d2")))
+    // a null endpoint: (2, null) leaves 2 in {1, 2}; 5's only edge has a
+    // null far end, so it is its own component; the null id is a row
+    assertPathParity("null endpoint")(cc(Seq[(Option[Long], Option[Long])](
+        (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
+        (Some(7L), Some(8L)), (Some(8L), Some(8L))).toDF("d1", "d2")))
+    val str = Seq(("b", "a"), ("c", "b"), ("x", "y"), ("é", "e"), ("y", "z"))
+      .toDF("d1", "d2")
+    assertPathParity("String ids")(cc(str))
+    // a non-binary collation compares ids as the driver would not: it
+    // keeps the distributed path whatever the size
+    val lcase = Seq(("A", "b"), ("a", "c"), ("D", "d")).toDF("x", "y")
+      .select(expr("x COLLATE UTF8_LCASE").as("d1"),
+        expr("y COLLATE UTF8_LCASE").as("d2"))
+    assertPathParity("UTF8_LCASE ids", expectLocal = false)(cc(lcase))
+  }
+
+  test("labelPropagation: the driver path equals the forced distributed " +
+      "path on tie-heavy graphs") {
+    val s = spark
+    import s.implicits._
+    def lpa(edges: DataFrame, sweeps: Int)(bound: Long): DataFrame =
+      Graph.labelPropagation(edges, "s", "d", sweeps, localEdgeRows = bound)
+    // even cycles and complete bipartite graphs: every vote a tie;
+    // a star: the hub sees one vote per leaf; sparse random graphs:
+    // mostly degree-1 and degree-2 nodes, ties everywhere
+    val cycle = (0L until 8L).map(i => (i, (i + 1) % 8))
+    val k33 = for (a <- 1L to 3L; b <- 11L to 13L) yield (a, b)
+    val star = (1L to 6L).map(i => (0L, i))
+    val graphs = Seq("8-cycle" -> cycle, "K3,3" -> k33, "star" -> star) ++
+      Seq(5, 31, 77).map { seed =>
+        val rnd = new scala.util.Random(seed)
+        s"random seed $seed" ->
+          Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+      }
+    for ((name, es) <- graphs; sweeps <- Seq(1, 2, 4))
+      assertPathParity(s"$name, $sweeps sweeps")(lpa(es.toDF("s", "d"), sweeps))
+    assertPathParity("no edges")(lpa(Seq.empty[(Long, Long)].toDF("s", "d"), 2))
+    assertPathParity("nullable ids")(lpa(Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(3L)),
+      (Some(3L), Some(1L))).toDF("s", "d"), 2))
+    assertPathParity("String ids")(lpa(Seq(("b", "a"), ("c", "a"), ("b", "c"),
+      ("d", "c"), ("e", "d")).toDF("s", "d"), 3))
   }
 
   test("TopKPerGroup equals the window formulation on random data") {
