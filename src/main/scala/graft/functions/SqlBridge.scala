@@ -34,6 +34,24 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** [[internalCreateDataFrame]], with `rows` — a row count the caller
+    * knows exactly — as the leaf's statistics in place of the default
+    * ones (the session's `defaultSizeInBytes`, no row count): the
+    * `LocalRelation` size estimate for that many rows, so the planner
+    * can broadcast the frame. */
+  def internalCreateDataFrame(spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType, rows: Long): DataFrame = {
+    val output = catalyst.types.DataTypeUtils.toAttributes(schema)
+    ofRows(spark, execution.LogicalRDD(output, rdd)(
+      spark.asInstanceOf[classic.SparkSession],
+      Some(catalyst.plans.logical.Statistics(
+        sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+          .getSizePerRow(output) * rows,
+        rowCount = Some(BigInt(rows))))))
+  }
+
   /** Idempotent per-session planner-strategy registration (the
     * cluster-wide path is GraftExtensions via spark.sql.extensions). */
   def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {

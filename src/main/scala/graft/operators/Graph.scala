@@ -3,9 +3,6 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.{DataTypeUtils, PhysicalDataType}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,33 +20,33 @@ object Graph {
     *
     * The edge list is materialized once, both directions, through
     * [[cutCounted]]; its measured row count picks the path:
-    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and an id
-    *     type the driver orders as Spark does — see [[driverOrdering]]):
-    *     the cut's rows are collected and union-find with the minimum
-    *     id as the root labels every node, in one job on the cached
-    *     cut. The answer is exact whatever the diameter, so `maxIter`
-    *     does not apply. A node with a null endpoint keeps the
-    *     distributed path's (null, null) row.
-    *   - DISTRIBUTED (above the bound): each round every node takes the
-    *     minimum component label among itself and its neighbors (one
-    *     hash join edges⋈labels + one partial-aggregable min — both
-    *     shuffle on the same id key); convergence needs diameter rounds,
-    *     and near-dup clusters are almost-cliques, so 2-3 rounds settle
-    *     real corpora. The loop stops early on a fixpoint (an
-    *     aggregate-only check, no driver-side data). Every round
-    *     materializes through a [[cut]] — iterative DataFrame algorithms
-    *     MUST truncate the plan each round or the nested join plan grows
-    *     exponentially with iterations (a 10-hop path aborts analysis
-    *     without it; GraphSpec pins that case on this path). Each
+    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and a
+    *     `LongType` id): the cut's rows are collected as primitive long
+    *     pairs and union-find with the minimum id as the root labels
+    *     every node, in one job on the cached cut. The answer is exact
+    *     whatever the diameter, so `maxIter` does not apply. A null
+    *     endpoint keeps the distributed path's (null, null) row.
+    *   - DISTRIBUTED (above the bound, or any other id type): each
+    *     round every node takes the minimum component label among
+    *     itself and its neighbors (one hash join edges⋈labels + one
+    *     partial-aggregable min — both shuffle on the same id key);
+    *     convergence needs diameter rounds, and near-dup clusters are
+    *     almost-cliques, so 2-3 rounds settle real corpora. The loop
+    *     stops early on a fixpoint (an aggregate-only check, no
+    *     driver-side data). Every round materializes through a [[cut]]
+    *     — iterative DataFrame algorithms MUST truncate the plan each
+    *     round or the nested join plan grows exponentially with
+    *     iterations (a 10-hop path aborts analysis without it;
+    *     GraphSpec pins that case on this path). Each
     *     superseded round is [[release]]d as soon as its successor
     *     materializes, so block usage stays O(1) in rounds.
     * Both paths return the same rows under the same schema
     * (RandomizedParitySpec pins it).
     *
-    * Cache residue: on the driver path none — the result is a
-    * `LocalRelation` and the edge cut is released. On the distributed
-    * path exactly ONE cut remains — the final round, which backs the
-    * returned label table; it is registered with
+    * Cache residue: on the driver path none — the result is built
+    * from driver arrays and the edge cut is released. On the
+    * distributed path exactly ONE cut remains — the final round, which
+    * backs the returned label table; it is registered with
     * [[graft.Staging.registerPinned]], so it lives until the session
     * releases its pins. GraphSpec pins both residue counts.
     *
@@ -75,14 +72,13 @@ object Graph {
           struct(col(dst).as("a"), col(src).as("b")))))
         .distinct())
     val id = und.schema("a")
-    driverOrdering(id.dataType) match {
-      case Some(ord) if undRows <= localEdgeRows =>
-        val rows = cutRdd(und).collect()
-        release(und)
-        return localFrame(edges.sparkSession,
-          StructType(Seq(id.copy(name = "id"), id.copy(name = "comp"))),
-          minRootComponents(rows, id.dataType, ord))
-      case _ =>
+    if (id.dataType == LongType && undRows <= localEdgeRows) {
+      val (pairs, sawNull) = collectLongPairs(und)
+      release(und)
+      val (ids, comp) = minRootComponents(pairs)
+      return driverFrame(edges.sparkSession,
+        StructType(Seq(id.copy(name = "id"), id.copy(name = "comp"))),
+        ids, comp, nullRow = sawNull)
     }
     // (id, comp); from round 1 on, the round's cut (id, comp, _chg)
     var labels = und.select(col("a").as("id")).distinct()
@@ -128,75 +124,111 @@ object Graph {
     graft.Staging.registerPinned(edges.sparkSession, labels).drop("_chg")
   }
 
-  /** Union-find over collected (a, b) edge rows, the minimum id always
-    * the root: one (id, comp) row per non-null endpoint, comp the
-    * minimum id of its component, plus the distributed path's
-    * (null, null) row when any endpoint is null (a null id joins
-    * nothing there, so it never takes or gives a label). */
-  private def minRootComponents(edgeRows: Array[InternalRow], t: DataType,
-      ord: Ordering[Any]): Seq[InternalRow] = {
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
+  /** Union-find over packed (a, b) id pairs (see [[collectLongPairs]]),
+    * the minimum id always the root: every id that appears, ascending,
+    * with the minimum id of its component. Ids are replaced by their
+    * rank in the sorted distinct id array, so the forest is a primitive
+    * `Int` array and the smaller rank is the smaller id. */
+  private def minRootComponents(
+      pairs: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = distinctSorted(pairs)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (c != r) { val up = parent(c); parent(c) = r; c = up }
       r
     }
-    var sawNull = false
-    // `und` holds both directions, so every endpoint shows up as `a`
-    edgeRows.foreach { r =>
-      if (r.isNullAt(0)) sawNull = true
-      else {
-        val a = r.get(0, t)
-        parent.getOrElseUpdate(a, a)
-        if (!r.isNullAt(1)) {
-          val b = r.get(1, t)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ord.lt(ra, rb)) parent(rb) = ra
-          else if (ord.lt(rb, ra)) parent(ra) = rb
+    var i = 0
+    while (i < pairs.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, pairs(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, pairs(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    (ids, Array.tabulate(ids.length)(k => ids(find(k))))
+  }
+
+  /** `xs` sorted ascending with duplicates dropped. */
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(s, n)
+  }
+
+  /** The rows of a cut whose first two columns are longs, packed per
+    * partition into one primitive array (a0, b0, a1, b1, …) before they
+    * leave the executor, so the driver holds 16 bytes per row instead
+    * of a deserialized row object; also whether any row had a null `a`.
+    * Such a row is left out, and a null `b` is packed as (a, a): it
+    * makes `a` a node and links it to nothing. */
+  private def collectLongPairs(cut: DataFrame): (Array[Long], Boolean) = {
+    val parts = cutRdd(cut).mapPartitions { it =>
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      var sawNull = false
+      it.foreach { r =>
+        if (r.isNullAt(0)) sawNull = true
+        else {
+          val a = r.getLong(0)
+          buf += a
+          buf += (if (r.isNullAt(1)) a else r.getLong(1))
         }
       }
-    }
-    val out = parent.keysIterator
-      .map(k => new GenericInternalRow(Array[Any](k, find(k))): InternalRow)
-      .toVector
-    if (sawNull) out :+ new GenericInternalRow(Array[Any](null, null))
-    else out
+      Iterator.single((buf.result(), sawNull))
+    }.collect()
+    (Array.concat(parts.map(_._1).toIndexedSeq: _*), parts.exists(_._2))
   }
 
   /** Bidirected edge-row count at or under which [[connectedComponents]],
     * [[labelPropagation]] and [[kCoreNumbers]] finish IN-PROCESS off
-    * their already-materialized edge cut (≈ 32 MB of long pairs at the
-    * default). Per-round Spark latency (a lineage-cut job plus
-    * exchanges, tenths of a second however small the data) is the
-    * entire cost of a dimension-sized graph — a `curate` pass's
-    * 11-edge graph spent 28 jobs in components — while driver
-    * arithmetic over 65k edges takes microseconds. The bound is
-    * MEASURED (the cut's own count, from [[cutCounted]], no extra
-    * job), never assumed; graphs above it take the distributed rounds
-    * unchanged, and the local loops compute the identical answer
-    * (GraphSpec and RandomizedParitySpec pin local ≡ distributed). */
+    * their already-materialized edge cut. All three gate on a `LongType`
+    * id and read it as a primitive long: the driver holds the edge list
+    * as ≈ 32 MB of long pairs at the bound. Per-round Spark latency (a
+    * lineage-cut job plus exchanges, tenths of a second however small
+    * the data) is the entire cost of a dimension-sized graph — a
+    * `curate` pass's 11-edge graph spent 28 jobs in components. The
+    * size is MEASURED (the cut's own count, from [[cutCounted]], no
+    * extra job), never assumed; graphs above it take the distributed
+    * rounds unchanged, and the local loops compute the identical answer
+    * (GraphSpec and RandomizedParitySpec pin local ≡ distributed).
+    * Placed by measurement (`graft.GraphBound` in the specs' sources:
+    * 4 cores, 4 GB heap, clusters of 8 ids): the driver paths of CC
+    * and LPA beat the distributed rounds 3-4× at every size from 48k
+    * to 9.6M rows (at 1.92M, CC 1.3-1.8 s against 4.9-6.9 s, LPA
+    * 1.0-1.3 s against 4.1-5.9 s), and kCore's beats its own 2.5-3×
+    * at 1.92M, so time does not cross over in that range; driver memory sets the
+    * bound. At 1.92M rows the driver path's old-generation peak rise
+    * (CC ≈ 1.0 GB, LPA ≈ 0.75 GB) stays under the distributed path's
+    * in the same JVM; at 9.6M CC's reached 3.7 GB of the 4 GB heap. */
   private val LocalEdgeRows = 2000000L
 
-  /** The ordering of `t`'s values when the driver compares and hashes
-    * them exactly as Spark's min / least / equi-join do: integral types
-    * and binary-collated strings. Other id types keep the distributed
-    * path. */
-  private def driverOrdering(t: DataType): Option[Ordering[Any]] = t match {
-    // `StringType` matches the default UTF8_BINARY collation only
-    case ByteType | ShortType | IntegerType | LongType | StringType =>
-      Some(PhysicalDataType.ordering(t))
-    case _ => None
+  /** A driver-computed (id, value) result — a component, label or core
+    * number per id — as a frame of `schema`: row k is
+    * (ids(k), values(k)), plus a (null, null) row when `nullRow`. The
+    * leaf is a `LogicalRDD` over ONE partition — the partitioning AQE
+    * gives the distributed path's last round, whose rows at the bound
+    * fit one 64 MB advisory partition — with the exact row count as its
+    * statistics, so the planner can broadcast it (a [[cut]] plans with
+    * default statistics). The rows are built from the two primitive
+    * arrays when a task reads them; there are no blocks to pin or
+    * release. */
+  private def driverFrame(spark: SparkSession, schema: StructType,
+      ids: Array[Long], values: Array[Long], nullRow: Boolean): DataFrame = {
+    val rows = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      ids.indices.iterator.map(k => InternalRow(ids(k), values(k))) ++
+        (if (nullRow) Iterator.single(InternalRow(null, null))
+         else Iterator.empty)
+    }
+    GraftSqlBridge.internalCreateDataFrame(spark, rows, schema,
+      ids.length + (if (nullRow) 1 else 0))
   }
-
-  /** A driver-computed result as a frame: a `LocalRelation` leaf over
-    * `rows` (no blocks to pin or release). */
-  private def localFrame(spark: SparkSession, schema: StructType,
-      rows: Seq[InternalRow]): DataFrame =
-    GraftSqlBridge.ofRows(spark,
-      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Eager local lineage cut: materialize `df` into locally
     * checkpointed blocks and return a frame whose plan is a single
@@ -597,52 +629,50 @@ object Graph {
       localEdgeRows: Long): (DataFrame, Int, Boolean) = {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
-    val e = cut(undirect(edges, srcCol, dstCol))
-    val (bi, biRows) = cutCounted(
-      e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b"))))
+    val (e, eRows) = cutCounted(undirect(edges, srcCol, dstCol))
     // small-graph fast path ([[LocalEdgeRows]]): the gate reads the
-    // count the cut job measured, so it costs no job of its own
-    if (bi.schema("a").dataType == LongType && biRows <= localEdgeRows) {
-      val sq = spark
-      import sq.implicits._
-      val adj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      // collect off the already-materialized InternalRow cut (two
-      // primitive longs per row) — a Row-decoding bi.collect() would
-      // box every edge and cost ~10× the "~32 MB of long pairs" the
-      // bound budgets
-      cutRdd(bi).collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
+    // count the cut job measured, so it costs no job of its own. The
+    // canonical cut holds each edge once; the bound counts both
+    // directions, as the distributed sweeps' edge list does, and [[Csr]]
+    // links both
+    if (e.schema("u").dataType == LongType && 2 * eRows <= localEdgeRows) {
+      val g = new Csr(collectLongPairs(e)._1)
       release(e)
-      release(bi)
-      var c: Map[Long, Long] = adj.iterator
-        .map { case (k, v) => k -> v.length.toLong }.toMap
+      val n = g.ids.length
+      var c = Array.tabulate(n)(k => g.deg(k).toLong)
+      val vals = new Array[Long](g.maxDeg)
       var sweeps = 0
-      var changedAny = c.nonEmpty
+      var changedAny = n > 0
       while (sweeps < iters && changedAny) {
         sweeps += 1
-        val next = adj.iterator.map { case (v, nbrs) =>
-          val vals = nbrs.map(c).toArray
-          java.util.Arrays.sort(vals)
-          // descending rank i+1 vs value: H = max_i min(i+1, vals_i)
+        val next = new Array[Long](n)
+        var k = 0
+        while (k < n) {
+          val d = g.deg(k)
+          var j = 0
+          while (j < d) { vals(j) = c(g.nbr(g.start(k) + j)); j += 1 }
+          java.util.Arrays.sort(vals, 0, d)
+          // descending rank j+1 vs value: H = max_j min(j+1, vals_j)
           var h = 0L
-          var i = 0
-          val n = vals.length
-          while (i < n) {
-            val m = math.min(i + 1L, vals(n - 1 - i))
+          j = 0
+          while (j < d) {
+            val m = math.min(j + 1L, vals(d - 1 - j))
             if (m > h) h = m
-            i += 1
+            j += 1
           }
-          v -> h
-        }.toMap
-        changedAny = next.exists { case (k, v) => c(k) != v }
+          next(k) = h
+          k += 1
+        }
+        changedAny = !java.util.Arrays.equals(next, c)
         c = next
       }
-      return (c.toSeq.sortBy(_._1).toDF("id", "core"), sweeps, !changedAny)
+      return (driverFrame(spark, StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("core", LongType, nullable = false))),
+        g.ids, c, nullRow = false), sweeps, !changedAny)
     }
+    val bi = cut(e.select(col("u").as("a"), col("v").as("b"))
+      .union(e.select(col("v").as("a"), col("u").as("b"))))
     // a [[cut]] with the sweep's changed-count tallied by accumulator
     // DURING the materialization job — the convergence check costs zero
     // extra jobs (schema is (id, c, chg); chg at ordinal 2)
@@ -727,19 +757,19 @@ object Graph {
     *
     * The canonical edge list is lineage-cut once, through
     * [[cutCounted]]; its measured size picks the path:
-    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and an id
-    *     type [[driverOrdering]] accepts): the cut's rows are collected
-    *     and the same `sweeps` synchronous mode-label sweeps run on an
-    *     adjacency map, ties to the smallest label; a sweep that
+    *   - DRIVER (at most [[LocalEdgeRows]] bidirected rows and a
+    *     `LongType` id): the cut's rows are collected as primitive long
+    *     pairs and the same `sweeps` synchronous mode-label sweeps run
+    *     on driver arrays, ties to the smallest label; a sweep that
     *     changes nothing ends the loop, since every further sweep is
-    *     the identity. The result is a `LocalRelation`; nothing stays
-    *     pinned.
-    *   - DISTRIBUTED (above the bound), the [[pageRank]] scale
-    *     discipline: label table cut per sweep (constant plan depth,
-    *     superseded sweeps unpersisted); per sweep ONE join of the
-    *     label table to the bidirected edge list + a (node, label)
-    *     count + a per-node argmax via min_by over the (−count, label)
-    *     struct — no window, partial-agg friendly, nothing quadratic.
+    *     the identity. Nothing stays pinned.
+    *   - DISTRIBUTED (above the bound, or any other id type), the
+    *     [[pageRank]] scale discipline: label table cut per sweep
+    *     (constant plan depth, superseded sweeps unpersisted); per
+    *     sweep ONE join of the label table to the bidirected edge list
+    *     + a (node, label) count + a per-node argmax via min_by over
+    *     the (−count, label) struct — no window, partial-agg friendly,
+    *     nothing quadratic.
     *     The last sweep's cut is registered with
     *     [[graft.Staging.registerPinned]].
     * Both paths return the same rows under the same schema
@@ -754,17 +784,16 @@ object Graph {
       dstCol: String, sweeps: Int, localEdgeRows: Long): DataFrame = {
     val (e, eRows) = cutCounted(undirect(edges, srcCol, dstCol))
     val u = e.schema("u")
-    driverOrdering(u.dataType) match {
-      // the cut holds each undirected edge once; the bound counts both
-      // directions, as the distributed path's edge list does
-      case Some(ord) if 2 * eRows <= localEdgeRows =>
-        val rows = cutRdd(e).collect()
-        release(e)
-        return localFrame(edges.sparkSession,
-          StructType(Seq(u.copy(name = "id"),
-            StructField("label", u.dataType, nullable = true))),
-          modeLabelSweeps(rows, u.dataType, ord, sweeps))
-      case _ =>
+    // the cut holds each undirected edge once; the bound counts both
+    // directions, as the distributed path's edge list does
+    if (u.dataType == LongType && 2 * eRows <= localEdgeRows) {
+      val (pairs, _) = collectLongPairs(e)
+      release(e)
+      val (ids, labels) = modeLabelSweeps(pairs, sweeps)
+      return driverFrame(edges.sparkSession,
+        StructType(Seq(u.copy(name = "id"),
+          StructField("label", LongType, nullable = true))),
+        ids, labels, nullRow = false)
     }
     val bi = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
@@ -786,44 +815,72 @@ object Graph {
     graft.Staging.registerPinned(edges.sparkSession, lab)
   }
 
-  /** `sweeps` synchronous label-propagation sweeps over collected
-    * canonical (u, v) edge rows (no nulls, no self-loops — [[undirect]]
-    * drops them): labels start as ids, and each sweep every node adopts
-    * its neighbors' most frequent label, ties to the smallest under
-    * `ord`. One (id, label) row per node. */
-  private def modeLabelSweeps(edgeRows: Array[InternalRow], t: DataType,
-      ord: Ordering[Any], sweeps: Int): Seq[InternalRow] = {
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    edgeRows.foreach { r =>
-      val (a, b) = (r.get(0, t), r.get(1, t))
-      adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-      adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-    }
-    var lab: Map[Any, Any] = adj.keysIterator.map(k => k -> k).toMap
-    var i = 0
+  /** `sweeps` synchronous label-propagation sweeps over packed
+    * canonical (u, v) id pairs (see [[collectLongPairs]]; no nulls, no
+    * self-loops — [[undirect]] drops them): labels start as ids, and
+    * each sweep every node adopts its neighbors' most frequent label,
+    * ties to the smallest. A sweep that changes nothing ends the loop,
+    * since every further sweep is the identity. Returns every id,
+    * ascending, with its label. Labels are ranks in [[Csr]]'s id
+    * array, so they stay primitive `Int`s and rank order is id
+    * order. */
+  private def modeLabelSweeps(pairs: Array[Long],
+      sweeps: Int): (Array[Long], Array[Long]) = {
+    val g = new Csr(pairs)
+    val n = g.ids.length
+    var lab = Array.tabulate(n)(identity)
+    val votes = new Array[Int](g.maxDeg)
+    var sweep = 0
     var changed = true
-    while (i < sweeps && changed) {
-      val next = adj.iterator.map { case (v, nbrs) =>
-        val votes = scala.collection.mutable.HashMap.empty[Any, Int]
-        nbrs.foreach(n => votes(lab(n)) = votes.getOrElse(lab(n), 0) + 1)
-        var best: Any = null
+    while (sweep < sweeps && changed) {
+      val next = new Array[Int](n)
+      var k = 0
+      while (k < n) {
+        // the neighbors' labels, sorted: the longest run is the mode,
+        // and the first longest run the smallest label among ties
+        val d = g.deg(k)
+        var j = 0
+        while (j < d) { votes(j) = lab(g.nbr(g.start(k) + j)); j += 1 }
+        java.util.Arrays.sort(votes, 0, d)
+        var best = votes(0)
         var bestN = 0
-        votes.foreach { case (l, c) =>
-          if (c > bestN || (c == bestN && ord.lt(l, best))) {
-            best = l
-            bestN = c
-          }
+        j = 0
+        while (j < d) {
+          var run = 1
+          while (j + run < d && votes(j + run) == votes(j)) run += 1
+          if (run > bestN) { best = votes(j); bestN = run }
+          j += run
         }
-        v -> best
-      }.toMap
-      changed = next != lab
+        next(k) = best
+        k += 1
+      }
+      changed = !java.util.Arrays.equals(next, lab)
       lab = next
-      i += 1
+      sweep += 1
     }
-    lab.iterator
-      .map { case (k, l) => new GenericInternalRow(Array[Any](k, l)): InternalRow }
-      .toVector
+    (g.ids, lab.map(l => g.ids(l)))
+  }
+
+  /** An undirected graph on the driver in compressed sparse rows, built
+    * from packed canonical (u, v) id pairs (see [[collectLongPairs]];
+    * each edge once, linked both ways). Node k is `ids(k)`, ids
+    * ascending, so rank order is id order; its neighbors' ranks are
+    * `nbr(start(k))` until `nbr(start(k + 1))`. */
+  private final class Csr(pairs: Array[Long]) {
+    val ids: Array[Long] = distinctSorted(pairs)
+    val start = new Array[Int](ids.length + 1)
+    val nbr = new Array[Int](pairs.length)
+    private val ends = pairs.map(java.util.Arrays.binarySearch(ids, _))
+    ends.foreach(k => start(k + 1) += 1)
+    val maxDeg: Int = if (ids.isEmpty) 0 else start.max
+    ids.indices.foreach(k => start(k + 1) += start(k))
+    private val fill = start.clone()
+    ends.indices.foreach { i =>
+      // ends(i) and its pair partner ends(i ^ 1)
+      nbr(fill(ends(i))) = ends(i ^ 1)
+      fill(ends(i)) += 1
+    }
+    def deg(k: Int): Int = start(k + 1) - start(k)
   }
 
   /** Newman modularity of a community assignment, per community —

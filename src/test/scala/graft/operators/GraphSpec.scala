@@ -1,9 +1,18 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, countDistinct, lit, raise_error, udf, when}
 
 class GraphSpec extends SparkSpec {
+
+  /** `connectedComponents(_, "d1", "d2")` on both paths: the default
+    * call, which takes the driver path for these small graphs, and the
+    * distributed rounds forced with `localEdgeRows = 0`. */
+  private val ccPaths: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "driver" -> (e => Graph.connectedComponents(e, "d1", "d2")),
+    "distributed" -> (e => Graph.connectedComponents(e, "d1", "d2",
+      maxIter = 20, localEdgeRows = 0L)))
 
   test("connectedComponents labels each node with its min reachable id") {
     val s = spark
@@ -15,19 +24,24 @@ class GraphSpec extends SparkSpec {
       (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L),
     ).toDF("d1", "d2")
-    val comp = Graph.connectedComponents(edges, "d1", "d2")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp === Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // a second graph, read twice off the returned (cut-backed) labels
-    val small = Graph.connectedComponents(
-      Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("d1", "d2"),
-      "d1", "d2")
-    assert(small.count() === 6)
-    assert(small.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    for ((path, cc) <- ccPaths)
+      assert(
+        cc(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(
+          1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+          10L -> 10L, 11L -> 10L,
+          20L -> 20L, 21L -> 20L, 22L -> 20L), path)
+    // a second graph, its returned labels read twice (count, then
+    // collect) — on the distributed path both reads come off the
+    // final round's cut
+    for ((path, cc) <- ccPaths) {
+      val small = cc(
+        Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("d1", "d2"))
+      assert(small.count() === 6, path)
+      assert(small.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L),
+        path)
+    }
   }
 
   test("connectedComponents: a long path converges within the diameter bound") {
@@ -63,7 +77,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("connectedComponents: the driver path pins nothing — the edge cut " +
-      "is released and the result is a local relation") {
+      "is released and the result holds no blocks") {
     val s = spark
     import s.implicits._
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("d1", "d2")
@@ -89,15 +103,19 @@ class GraphSpec extends SparkSpec {
   test("connectedComponents evaluates its edge list once") {
     val s = spark
     // every edge row the upstream produces passes through the counting
-    // UDF; a range, not local rows, so no projection is folded at plan time
-    val rowsOut = sc.longAccumulator("cc edge rows")
-    val counted = udf { (x: Long) => rowsOut.add(1); x }
-    val edges = s.range(0L, 9L)
-      .select(counted(col("id")).as("d1"), (col("id") + 1).as("d2"))
-    val comp = Graph.connectedComponents(edges, "d1", "d2")
-    assert(comp.collect().map(_.getLong(1)).toSet === Set(0L))
-    assert(rowsOut.value === 9L,
-      "the edge-list cut must scan its upstream once, not once per direction")
+    // UDF; a range, not local rows, so no projection is folded at plan
+    // time. On the distributed path the 9-hop path takes 9 rounds, and
+    // every one must read the edge cut, not re-scan `edges`
+    for ((path, cc) <- ccPaths) {
+      val rowsOut = sc.longAccumulator(s"cc edge rows, $path")
+      val counted = udf { (x: Long) => rowsOut.add(1); x }
+      val edges = s.range(0L, 9L)
+        .select(counted(col("id")).as("d1"), (col("id") + 1).as("d2"))
+      val comp = cc(edges)
+      assert(comp.collect().map(_.getLong(1)).toSet === Set(0L), path)
+      assert(rowsOut.value === 9L, s"$path: the edge-list cut must scan " +
+        "its upstream once, not once per direction or round")
+    }
   }
 
   /** Persistent RDDs that `op` leaves behind once the session's pins are

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,21 +46,28 @@ class RandomizedParitySpec extends SparkSpec {
     }
   }
 
-  /** Every leaf of `df`'s plan is a driver-side local relation. */
+  /** `df` came off a driver path: no leaf of its plan reads the blocks
+    * of a [[Graph.cut]], as the distributed paths' final rounds do. */
   private def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[LocalRelation])
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case r: LogicalRDD => !r.rdd.isCheckpointed
+      case _ => false
+    }
 
   /** `op` on the driver path (no effective bound) against `op` with the
     * distributed path forced: same schema — names, types, nullability —
-    * and the same rows. The forcing bound is −1, not 0, because an
-    * empty graph's 0 rows are "at or under" a bound of 0. */
+    * and the same rows. A driver result is one partition, the
+    * partitioning AQE gives the distributed result at these sizes. The
+    * forcing bound is −1, not 0, because an empty graph's 0 rows are
+    * "at or under" a bound of 0. */
   private def assertPathParity(what: String, expectLocal: Boolean = true)(
       op: Long => DataFrame): Unit = {
     val driver = op(Long.MaxValue)
     val distributed = op(-1L)
     assert(isLocal(driver) === expectLocal, s"$what: driver-path plan")
     assert(!isLocal(distributed), s"$what: forced-distributed plan")
+    if (expectLocal)
+      assert(driver.rdd.getNumPartitions === 1, s"$what: driver partitions")
     assert(driver.schema === distributed.schema, what)
     val (d, f) = (driver.collect(), distributed.collect())
     assert(d.length === f.length, what)
@@ -89,15 +96,11 @@ class RandomizedParitySpec extends SparkSpec {
     assertPathParity("null endpoint")(cc(Seq[(Option[Long], Option[Long])](
         (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
         (Some(7L), Some(8L)), (Some(8L), Some(8L))).toDF("d1", "d2")))
+    // the driver path reads ids as primitive longs; any other id type
+    // keeps the distributed path whatever the size
     val str = Seq(("b", "a"), ("c", "b"), ("x", "y"), ("é", "e"), ("y", "z"))
       .toDF("d1", "d2")
-    assertPathParity("String ids")(cc(str))
-    // a non-binary collation compares ids as the driver would not: it
-    // keeps the distributed path whatever the size
-    val lcase = Seq(("A", "b"), ("a", "c"), ("D", "d")).toDF("x", "y")
-      .select(expr("x COLLATE UTF8_LCASE").as("d1"),
-        expr("y COLLATE UTF8_LCASE").as("d2"))
-    assertPathParity("UTF8_LCASE ids", expectLocal = false)(cc(lcase))
+    assertPathParity("String ids", expectLocal = false)(cc(str))
   }
 
   test("labelPropagation: the driver path equals the forced distributed " +
@@ -124,8 +127,8 @@ class RandomizedParitySpec extends SparkSpec {
     assertPathParity("nullable ids")(lpa(Seq[(Option[Long], Option[Long])](
       (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(3L)),
       (Some(3L), Some(1L))).toDF("s", "d"), 2))
-    assertPathParity("String ids")(lpa(Seq(("b", "a"), ("c", "a"), ("b", "c"),
-      ("d", "c"), ("e", "d")).toDF("s", "d"), 3))
+    assertPathParity("String ids", expectLocal = false)(lpa(Seq(("b", "a"),
+      ("c", "a"), ("b", "c"), ("d", "c"), ("e", "d")).toDF("s", "d"), 3))
   }
 
   test("TopKPerGroup equals the window formulation on random data") {
